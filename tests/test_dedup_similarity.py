@@ -318,11 +318,17 @@ def test_minhash_band_kernel_equals_expression(spark):
         assert exp == ker, (n, k, r)
         assert ker, (n, k, r)  # non-vacuous: the long docs produce bands
 
-    # the composed candidates path (kernel default ON) must equal the
-    # expression path end to end
+    # the composed candidates path (Arrow kernel) must equal the same
+    # bucketing built on the expression band rows, end to end
     big = spark.read.parquet(f"{sf}/documents.parquet")
-    a = sorted(map(tuple, dd.minhash_lsh_candidates(big, "doc_id", "text", kernel=False).collect()))
-    b = sorted(map(tuple, dd.minhash_lsh_candidates(big, "doc_id", "text", kernel=True).collect()))
+    buckets = (
+        dd.minhash_band_rows(big, "doc_id", "text")
+        .groupBy("band", "band_hash")
+        .agg(F.sort_array(F.collect_set("_id")).alias("_ids"))
+        .filter(F.size("_ids") > 1)
+    )
+    a = sorted(map(tuple, dd.bucket_pairs(buckets, max_bucket=5_000).collect()))
+    b = sorted(map(tuple, dd.minhash_lsh_candidates(big, "doc_id", "text").collect()))
     assert a == b and a
 
 

@@ -230,18 +230,6 @@ def test_numpy_kernel_equals_python_reference():
             assert list(a[c]) == [int(v) for v in b[c]], (top, dup, c)
 
 
-def test_impl_python_matches_numpy_through_spark(spark):
-    df = spark.createDataFrame(DOCS, "doc_id long, text string")
-    a = {r["doc_id"]: r.asDict() for r in gopher_repetition_metrics(df).collect()}
-    b = {
-        r["doc_id"]: r.asDict()
-        for r in gopher_repetition_metrics(df, impl="python").collect()
-    }
-    assert a == b
-    with pytest.raises(ValueError, match="unknown impl"):
-        gopher_repetition_metrics(df, impl="rust")
-
-
 def test_top_token_ratio_run_length_equals_count_form(spark):
     """r13: top_token_ratio's sorted run-length fold (O(n log n)/doc) must
     produce EXACTLY the r12 O(distinct x n) count-per-distinct-token

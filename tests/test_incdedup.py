@@ -274,9 +274,13 @@ def _store_side_exchange_keys(plan: str) -> str:
 
 
 def test_kernel_false_fallback_matches_kernel(spark):
-    """r13 (ADVICE r12): kernel=False routes the band construction
-    through the pure-JVM expression path — the index and the candidate
-    pairs must be identical either way."""
+    """The Arrow-kernel band index and candidate pairs must be identical
+    to the same index and join built on the pure-JVM expression band
+    rows (``dedup.minhash_band_rows``, the DuckDB mirror)."""
+    from pyspark.sql import functions as F
+
+    from yelp_business_data_pipeline_spark.operators.dedup import minhash_band_rows
+
     store = _docs(
         spark,
         [
@@ -292,8 +296,14 @@ def test_kernel_false_fallback_matches_kernel(spark):
             (11, "unrelated words in this brand new document body"),
         ],
     )
+
+    def expr_bands(df, id_name):
+        return minhash_band_rows(df, "doc_id", "text").select(
+            "band", "band_hash", F.col("_id").alias(id_name)
+        )
+
     idx_k = sorted(map(tuple, minhash_band_index(store).collect()))
-    idx_e = sorted(map(tuple, minhash_band_index(store, kernel=False).collect()))
+    idx_e = sorted(map(tuple, expr_bands(store, "index_id").collect()))
     assert idx_k == idx_e and idx_k
 
     pairs_k = sorted(
@@ -302,9 +312,12 @@ def test_kernel_false_fallback_matches_kernel(spark):
     pairs_e = sorted(
         map(
             tuple,
-            near_dup_candidates_against_index(
-                batch, minhash_band_index(store, kernel=False), kernel=False
-            ).collect(),
+            expr_bands(batch, "batch_id")
+            .join(expr_bands(store, "index_id"), ["band", "band_hash"])
+            .filter(F.col("batch_id") != F.col("index_id"))
+            .select("batch_id", "index_id")
+            .distinct()
+            .collect(),
         )
     )
     assert pairs_k == pairs_e and pairs_k

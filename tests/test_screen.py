@@ -117,82 +117,6 @@ def test_by_must_be_carried(spark, sf_dir):
         pretrain_screen(d, model, lm, carry=())
 
 
-def test_shared_scan_verdicts_bit_identical_and_one_scan(spark, sf_dir):
-    """The r10 shared-scan regime (VERDICT r9 weak item): persisting one
-    (id, text, carry) projection and rooting every leg at it must change
-    the PLAN ROOT only — per-doc verdicts are bit-identical to the
-    unfused default, and the fused plan defines exactly ONE parquet scan
-    node (everything else reads the cache)."""
-    import re
-
-    from tests.test_plans import plan_str
-    from yelp_business_data_pipeline_spark.operators.ppl import fit_bigram_lm
-    from yelp_business_data_pipeline_spark.operators.screen import shared_corpus
-
-    d, model, lm = _model_and_lm(spark, sf_dir)
-    kw = dict(carry=("lang",), min_words=20, min_stopword_hits=1, min_kept_lines=1)
-    plain = pretrain_screen(d, model, lm, **kw)
-    # the full shared regime (the registered panel's shape): model fits
-    # AND legs all root at ONE persisted projection
-    base = shared_corpus(d, carry=("lang",))
-    try:
-        fused = pretrain_screen(
-            base, model, fit_bigram_lm(base), shared_scan=True, **kw
-        )
-        want = sorted(map(tuple, plain.collect()))
-        got = sorted(map(tuple, fused.collect()))
-        assert got == want and len(got) > 0
-
-        p = plan_str(fused)
-        scan_defs = re.findall(r"^\(\d+\) Scan parquet", p, re.M)
-        assert len(scan_defs) == 1, f"expected ONE parquet scan node:\n{scan_defs}"
-        assert p.count("InMemoryTableScan") >= 3  # every leg reads the cache
-        assert "documents.parquet" in p
-    finally:
-        base.unpersist()
-
-    # shared_scan=True on a RAW frame persists internally: the three
-    # LEGS read the cache; only the caller-side LM tables (fit on the
-    # raw frame here, deliberately) still root at parquet. The caller
-    # gets the cache handle back (ADVICE r10: no leaked cache without
-    # an unpersist path) — release it when done.
-    fused_raw = pretrain_screen(d, model, lm, shared_scan=True, **kw)
-    assert fused_raw.shared_corpus_handle.is_cached
-    try:
-        assert sorted(map(tuple, fused_raw.collect())) == want
-        assert plan_str(fused_raw).count("InMemoryTableScan") >= 3
-    finally:
-        fused_raw.shared_corpus_handle.unpersist()
-
-
-def test_shared_corpus_prunes_and_validates(spark, sf_dir):
-    """shared_corpus caches ONLY the screen's columns (never embeddings/
-    binary payloads), dedupes carry overlap, reuses an already-cached
-    frame instead of stacking a second cache entry, and rejects unknown
-    storage levels loudly."""
-    from yelp_business_data_pipeline_spark.operators.screen import shared_corpus
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    base = shared_corpus(d, carry=("lang", "text"), storage_level="DISK_ONLY")
-    try:
-        assert base.columns == ["doc_id", "text", "lang"]  # deduped, stable order
-        assert base.is_cached
-        _, model, lm = _model_and_lm(spark, sf_dir)
-        # the handshake: an already-cached df is used as-is
-        fused = pretrain_screen(
-            base, model, lm, carry=("lang",), shared_scan=True,
-            min_words=20, min_stopword_hits=1, min_kept_lines=1,
-        )
-        # the handshake path caches nothing new, so there is no handle
-        # to hand back — the caller already owns base's lifecycle
-        assert not hasattr(fused, "shared_corpus_handle")
-        assert fused.count() == d.count()
-    finally:
-        base.unpersist()
-    with pytest.raises(ValueError, match="storage_level"):
-        shared_corpus(d, storage_level="NOT_A_LEVEL")
-
-
 def test_script_route_off_is_unchanged_on_adds_visible_routing(spark, sf_dir):
     """VERDICT r10 item 6: script_route=False (the default) must leave
     the output column-for-column byte-identical; script_route=True adds

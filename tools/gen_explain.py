@@ -295,27 +295,17 @@ COMMENTARY = {
         "path, recall-pinned in pytest)."
     ),
     "pretrain_screen_panel": (
-        "The composed pretraining screen in the r10 SHARED-SCAN regime "
-        "(the r9 weak-item fix): one persisted (doc_id, text, lang) "
-        "projection roots the model fits AND all three legs, so the "
-        "plan defines exactly ONE `Scan parquet` node — every "
-        "InMemoryRelation below references that same node id; at "
-        "runtime the source is read once and the rule / classifier / "
-        "perplexity legs read executor-local cache blocks (was 3 "
-        "corpus scans). The legs above the root are unchanged and "
-        "fused == unfused is pinned bit-exact (tests/test_screen.py). "
-        "Rule gates ride the Arrow repetition kernel with text carried "
-        "so quality/C4 are JVM exprs on the same pass; classifier "
-        "scoring is a broadcast weight table + ONE groupBy(doc) "
-        "exchange; the perplexity leg buckets via the THRESHOLD path "
+        "The composed pretraining screen over the raw documents scan "
+        "(no persisted projection). Rule gates ride the Arrow "
+        "repetition kernel (MapInPandas over its own `Scan parquet`) "
+        "with text carried so quality/C4 are JVM exprs on the same "
+        "pass; classifier scoring is a broadcast weight table + ONE "
+        "groupBy(doc) exchange over a second scan; the perplexity leg "
+        "appears as its lazily checkpointed per-doc scores (`Scan "
+        "ExistingRDD`) bucketed via the THRESHOLD path "
         "(approx_percentile cuts broadcast back — no per-lang sort "
-        "anywhere). Measured honestly: flat locally at sf0.1 and sf1 "
-        "(NVMe + page cache make re-scans nearly free; the cache "
-        "build costs what the scans save) — the drop materializes "
-        "when the corpus lives on remote object storage, where scan "
-        "I/O dominates the quality stack. At 100 TB pass "
-        "storage_level='DISK_ONLY' so the projection never competes "
-        "with shuffle memory."
+        "anywhere). The three per-doc legs join on doc_id and one "
+        "groupBy(lang) builds the panel."
     ),
     "bm25_topk_panel": (
         "BM25 with an in-plan posting filter: the token array filters "

@@ -30,12 +30,6 @@ def null_profile(df: DataFrame, columns: Iterable[str] | None = None) -> DataFra
     )
 
 
-def drop_missing_keys(df: DataFrame, keys: Iterable[str]) -> DataFrame:
-    """Drop rows with a null in any key column (reference rule
-    ``README.md:173``, asserted ``test_cases/review.py:6-8``)."""
-    return df.na.drop(subset=list(keys))
-
-
 def duplicate_keys(df: DataFrame, keys: Iterable[str]) -> DataFrame:
     """Keys appearing more than once (reference
     ``test_cases/neo4j_test.cypher:2-5``). Returns (keys..., n) rows."""

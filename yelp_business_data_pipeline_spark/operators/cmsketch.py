@@ -174,15 +174,12 @@ def cm_estimate(
     depth: int,
     out_col: str = "cm_count",
     impl: str = "md5",
-    broadcast_sketch: bool = True,
 ) -> DataFrame:
     """Annotate ``df`` with the point estimate for each ``value_col``
     key: min over the key's ``depth`` cells, a missing cell counting 0.
     One-sided by construction — never an underestimate (pinned as a
     property in pytest). NULL keys estimate 0 (never inserted). The
-    sketch broadcasts by default (``depth * width`` cells max); pass
-    ``broadcast_sketch=False`` for giant geometries — the join degrades
-    to a narrow shuffle on (row, col)."""
+    sketch broadcasts (``depth * width`` cells max)."""
     _validate(width, depth)
     if out_col in df.columns:
         raise ValueError(f"cm_estimate: column {out_col!r} already exists")
@@ -194,11 +191,9 @@ def cm_estimate(
             f"than ({width}, {depth})"
         ),
     )
-    cells = sketch.select(
-        "row", "col", F.when(ok.isNull(), F.col("cnt")).alias("cnt")
+    cells = F.broadcast(
+        sketch.select("row", "col", F.when(ok.isNull(), F.col("cnt")).alias("cnt"))
     )
-    if broadcast_sketch:
-        cells = F.broadcast(cells)
     probes = _cells(
         df.select(F.col(value_col).alias("_v")).distinct(),
         "_v",

@@ -200,8 +200,6 @@ def minhash_lsh_candidates(
     shingle_n: int = 3,
     hash_impl: str = "md5",
     max_bucket: int | None = 5_000,
-    kernel: bool = True,
-    kernel_min_partitions: int | None = None,
 ) -> DataFrame:
     """Candidate near-duplicate pairs (id_a < id_b) via MinHash+LSH banding.
 
@@ -222,27 +220,17 @@ def minhash_lsh_candidates(
     raise/None the bound deliberately if your near-dup clusters are
     genuinely that large.
 
-    ``kernel`` (default True, r12 optimization round): compute the band
-    rows with :func:`minhash_band_rows_kernel` (vectorized Arrow pass,
-    byte-identical values) instead of the interpreted higher-order-
-    function expressions of :func:`minhash_band_rows`.
-    ``kernel_min_partitions=None`` (default) floors kernel parallelism
-    at the cluster's default parallelism — scale-adaptive: a small
-    single-file corpus gets a tiny round-robin exchange up to cluster
-    width, a real corpus with more input splits than cores repartitions
-    nothing. Pass an explicit int to override (1 = never repartition).
+    The band rows come from :func:`minhash_band_rows_kernel` (vectorized
+    Arrow pass, byte-identical to the expression twin
+    :func:`minhash_band_rows`), its parallelism floored at the cluster's
+    default parallelism: a small single-file corpus gets a tiny
+    round-robin exchange up to cluster width, a real corpus with more
+    input splits than cores repartitions nothing.
     """
-    if kernel:
-        if kernel_min_partitions is None:
-            kernel_min_partitions = df.sparkSession.sparkContext.defaultParallelism
-        bands = minhash_band_rows_kernel(
-            df, id_col, text_col, k, rows_per_band, shingle_n, hash_impl,
-            min_partitions=kernel_min_partitions,
-        )
-    else:
-        bands = minhash_band_rows(
-            df, id_col, text_col, k, rows_per_band, shingle_n, hash_impl
-        )
+    bands = minhash_band_rows_kernel(
+        df, id_col, text_col, k, rows_per_band, shingle_n, hash_impl,
+        min_partitions=df.sparkSession.sparkContext.defaultParallelism,
+    )
     buckets = (
         bands.groupBy("band", "band_hash")
         .agg(F.sort_array(F.collect_set("_id")).alias("_ids"))
@@ -579,8 +567,7 @@ def deletion_neighborhood_candidates(
 
 
 def token_jaccard_pairs(
-    df: DataFrame, id_col: str, text_col: str, threshold: float = 0.5,
-    materialize: bool = True,
+    df: DataFrame, id_col: str, text_col: str, threshold: float = 0.5
 ) -> DataFrame:
     """Exact token-set Jaccard similarity join via inverted index.
 
@@ -589,19 +576,16 @@ def token_jaccard_pairs(
     so at scale this runs AFTER LSH blocking (see minhash_lsh_candidates),
     or with frequent-token pruning.
 
-    ``materialize`` (default True, r13): the exploded (id, tok) posting
-    frame is consumed THREE times (doc sizes, both sides of the
-    inverted-index self-join) — each appearance re-running the scan +
-    tokenize + explode. A lazy ``localCheckpoint`` computes it once; the
-    operator's documented regime (bounded/blocked windows) keeps the
-    stored posting list small. Pass False for the fully-lazy plan.
+    The exploded (id, tok) posting frame is consumed THREE times (doc
+    sizes, both sides of the inverted-index self-join), so a lazy
+    ``localCheckpoint`` computes it once instead of re-running the scan +
+    tokenize + explode per appearance; the operator's documented regime
+    (bounded/blocked windows) keeps the stored posting list small.
     """
     toks = df.select(
         F.col(id_col).alias("_id"),
         F.explode(F.array_distinct(F.split(F.col(text_col), " "))).alias("tok"),
-    )
-    if materialize:
-        toks = toks.localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)
     sizes = toks.groupBy("_id").agg(F.count(F.lit(1)).alias("n_tok"))
     a = toks.select(F.col("_id").alias("id_a"), "tok")
     b = toks.select(F.col("_id").alias("id_b"), "tok")

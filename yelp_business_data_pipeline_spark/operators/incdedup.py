@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import minhash_band_rows, minhash_band_rows_kernel
+from .dedup import minhash_band_rows_kernel
 
 
 def exact_fingerprint_index(
@@ -109,24 +109,16 @@ def minhash_band_index(
     rows_per_band: int = 2,
     shingle_n: int = 3,
     hash_impl: str = "md5",
-    kernel: bool = True,
 ) -> DataFrame:
     """(band, band_hash, index_id) — the near-dup index of a corpus
     snapshot: one row per (doc, LSH band), the exact construction of
     ``minhash_lsh_candidates`` (shared band layer — r12: the vectorized
     Arrow kernel, byte-identical to ``minhash_band_rows`` and pinned so
-    in tests/test_dedup_similarity.py), stored instead of self-joined.
-
-    ``kernel=False`` (r13, ADVICE r12) falls back to the pure-JVM
-    expression band construction — same rows, no Python workers — for
-    deployments that cannot size Python worker memory."""
-    if not kernel:
-        bands = minhash_band_rows(df, id_col, text_col, k, rows_per_band, shingle_n, hash_impl)
-    else:
-        bands = minhash_band_rows_kernel(
-            df, id_col, text_col, k, rows_per_band, shingle_n, hash_impl,
-            min_partitions=df.sparkSession.sparkContext.defaultParallelism,
-        )
+    in tests/test_dedup_similarity.py), stored instead of self-joined."""
+    bands = minhash_band_rows_kernel(
+        df, id_col, text_col, k, rows_per_band, shingle_n, hash_impl,
+        min_partitions=df.sparkSession.sparkContext.defaultParallelism,
+    )
     return bands.select("band", "band_hash", F.col("_id").alias("index_id"))
 
 
@@ -140,7 +132,6 @@ def near_dup_candidates_against_index(
     shingle_n: int = 3,
     hash_impl: str = "md5",
     max_store_bucket: int | None = 10_000,
-    kernel: bool = True,
 ) -> DataFrame:
     """Candidate near-dup pairs (batch_id, index_id) between a new batch
     and a stored band index: build the batch's band rows (the batch is
@@ -156,13 +147,10 @@ def near_dup_candidates_against_index(
     cluster size. The guard is a window count on the store side (one
     exchange over the index, only when enabled); the raise names the
     observed size, the ``bucket_pairs`` contract."""
-    if not kernel:  # expression fallback, same rows (ADVICE r12)
-        braw = minhash_band_rows(batch, id_col, text_col, k, rows_per_band, shingle_n, hash_impl)
-    else:
-        braw = minhash_band_rows_kernel(
-            batch, id_col, text_col, k, rows_per_band, shingle_n, hash_impl,
-            min_partitions=batch.sparkSession.sparkContext.defaultParallelism,
-        )
+    braw = minhash_band_rows_kernel(
+        batch, id_col, text_col, k, rows_per_band, shingle_n, hash_impl,
+        min_partitions=batch.sparkSession.sparkContext.defaultParallelism,
+    )
     bands = braw.select("band", "band_hash", F.col("_id").alias("batch_id"))
     store = index
     if max_store_bucket is not None:

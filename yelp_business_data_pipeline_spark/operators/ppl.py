@@ -14,8 +14,8 @@ Spark-first decomposition — ALL JVM, no Python anywhere:
   model STAYS a DataFrame pair, so vocabulary size never constrains the
   driver (the 100-TB shape: a 5-gram web LM does not fit anywhere, a
   distributed count table trivially does). Scoring joins the corpus
-  bigram stream against the count tables — the unigram table broadcasts
-  when small, the bigram join shuffles on the (w1, w2) key like any
+  bigram stream against the count tables — the unigram table is
+  broadcast, the bigram join shuffles on the (w1, w2) key like any
   fact-to-dim join.
 - **Stupid Backoff scoring**: S(w2|w1) = cnt(w1,w2)/cnt(w1) when the
   bigram was seen, else 0.4 * cnt(w2)/total (the published alpha); the
@@ -78,7 +78,6 @@ def fit_bigram_lm(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    materialize: bool = True,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(unigrams, bigrams, total) — the count tables ARE the model.
 
@@ -88,10 +87,9 @@ def fit_bigram_lm(
     counts converge long before the corpus ends, but nothing breaks if
     you fit on all of it).
 
-    ``materialize`` (default True, r12 optimization round): the unigram
-    table is consumed THREE times per scoring pass — broadcast as the
-    ``w2`` role, broadcast as the ``w1`` role, and aggregated for
-    ``total``. Runtime exchange reuse dedupes the shuffle UNDER the agg,
+    The unigram table is consumed THREE times per scoring pass —
+    broadcast as the ``w2`` role, broadcast as the ``w1`` role, and
+    aggregated for ``total``. Runtime exchange reuse dedupes the shuffle UNDER the agg,
     but each consumer still replans and re-runs its own post-shuffle
     aggregation + broadcast build, and the static plan carries one full
     corpus-scan subtree per role (measured: score_perplexity 9 jobs ->
@@ -102,8 +100,7 @@ def fit_bigram_lm(
     and every other consumer read executor-local blocks; the model
     VALUES are bit-identical (same aggregation, same plan below the
     checkpoint). ``total`` is derived from the materialized table, so it
-    costs a vocabulary-sized agg, not a corpus pass. Pass False to keep
-    the fully-lazy plan (plan-inspection tools)."""
+    costs a vocabulary-sized agg, not a corpus pass."""
     stream = doc_token_stream(df, id_col, text_col).filter(F.col("w2").isNotNull())
     uni = stream.groupBy(F.col("w2").alias("w")).agg(
         F.count(F.lit(1)).cast("bigint").alias("u_cnt")
@@ -113,12 +110,11 @@ def fit_bigram_lm(
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).cast("bigint").alias("b_cnt"))
     )
-    if materialize:
-        # lazy: fit stays a transformation — the first action touching
-        # the table materializes it; no job is run at fit time.
-        # storage policy: SCALE.md 'Checkpoint & reuse storage policy'
-        # (reused frame consumed by the returned lazy plan)
-        uni = uni.localCheckpoint(eager=False)
+    # lazy: fit stays a transformation — the first action touching
+    # the table materializes it; no job is run at fit time.
+    # storage policy: SCALE.md 'Checkpoint & reuse storage policy'
+    # (reused frame consumed by the returned lazy plan)
+    uni = uni.localCheckpoint(eager=False)
     total = uni.agg(F.sum("u_cnt").cast("bigint").alias("n_tokens"))
     return uni, bi, total
 
@@ -130,24 +126,20 @@ def score_perplexity(
     text_col: str = "text",
     carry: tuple[str, ...] = (),
     alpha: float = BACKOFF_ALPHA,
-    broadcast_unigrams: bool = True,
 ) -> DataFrame:
     """(id, [carry...], n_scored, ppl) — Stupid Backoff fluency score
     per doc, ``ppl = 10^(mean -log10 S)`` rounded to 6 decimals (the
     rank-stability rule). Docs with no tokens get NULL ppl.
 
     Joins: token stream ⟕ bigram counts on (w1,w2) — the one shuffle —
-    then ⟕ unigram counts on w2 (broadcast by default; disable for a
-    web-scale vocabulary) for both the backoff numerator and the w1
-    context count (cnt(w1,w2)/cnt(w1) needs cnt(w1); joining the
+    then ⟕ broadcast unigram counts on w2 for both the backoff
+    numerator and the w1 context count (cnt(w1,w2)/cnt(w1) needs cnt(w1); joining the
     unigram table on w1 would be a second shuffle, so the stream carries
     cnt(w1) from a self-aware trick: S(w2|w1) = b_cnt / u_cnt(w1) — we
     join unigrams TWICE, once per role, both broadcastable)."""
     uni, bi, total = lm
-    u2 = uni.withColumnRenamed("w", "w2").withColumnRenamed("u_cnt", "u2_cnt")
-    u1 = uni.withColumnRenamed("w", "w1").withColumnRenamed("u_cnt", "u1_cnt")
-    if broadcast_unigrams:
-        u2, u1 = F.broadcast(u2), F.broadcast(u1)
+    u2 = F.broadcast(uni.withColumnRenamed("w", "w2").withColumnRenamed("u_cnt", "u2_cnt"))
+    u1 = F.broadcast(uni.withColumnRenamed("w", "w1").withColumnRenamed("u_cnt", "u1_cnt"))
     stream = doc_token_stream(df, id_col, text_col, carry=carry)
     scored = (
         stream.join(bi, ["w1", "w2"], "left")
@@ -237,7 +229,6 @@ def perplexity_threshold_buckets(
     by: str = "lang",
     ppl_col: str = "ppl",
     accuracy: int = 100_000,
-    materialize: bool = True,
 ) -> DataFrame:
     """Scale-safe head/middle/tail: bucket by COMPARISON against two
     per-group cut points instead of ranking — the production CCNet
@@ -261,9 +252,8 @@ def perplexity_threshold_buckets(
     tests/test_ppl.py. NULL ppl (tokenless sentinel) buckets to 'tail',
     matching the ntile path's NULLS-LAST placement.
 
-    ``materialize`` (default True, r12 optimization round): ``scored``
-    appears TWICE in this plan — once under the cuts aggregate and once
-    as the probe side of the bucket join. Runtime exchange reuse covers
+    ``scored`` appears TWICE in this plan — once under the cuts
+    aggregate and once as the probe side of the bucket join. Runtime exchange reuse covers
     the exchange-rooted parts of the duplicate subtree, but the probe
     side's pre-exchange stages (scan + tokenize + posexplode) still
     execute per appearance and the static plan doubles every leaf
@@ -273,12 +263,10 @@ def perplexity_threshold_buckets(
     win grows with scan cost, i.e. with scale/remote inputs). A lazy
     ``localCheckpoint`` of the skinny per-doc (id, carry, n_scored,
     ppl) frame makes the cuts job materialize it once and the bucket
-    join read executor-local blocks — buckets are bit-identical (same
-    rows under both plans). Pass False to keep the fully-lazy plan
-    (plan-inspection tools)."""
-    if materialize:
-        # storage policy: SCALE.md 'Checkpoint & reuse storage policy'
-        scored = scored.localCheckpoint(eager=False)
+    join read executor-local blocks — buckets are bit-identical to the
+    uncheckpointed plan's."""
+    # storage policy: SCALE.md 'Checkpoint & reuse storage policy'
+    scored = scored.localCheckpoint(eager=False)
     cuts = perplexity_thresholds(scored, by=by, ppl_col=ppl_col, accuracy=accuracy)
     return bucket_by_thresholds(scored, cuts, by=by, ppl_col=ppl_col)
 

@@ -28,35 +28,15 @@ bounded driver sample and the LM's count aggregations. The three per-doc
 legs then join on the doc id and aggregate once. What the composition
 buys is ONE cost number and ONE output frame instead of three jobs that
 each pay scheduling, plus shared model fits across the legs.
-
-**Shared-scan regime (VERDICT r9 weak item)**: at 100 TB the corpus
-scan IS the dominant cost of the quality stack, and 3x scan I/O on the
-hottest stage is not the plan you'd want. ``shared_scan=True`` (or
-calling :func:`shared_corpus` yourself and passing the result, which is
-how the registered panel also covers the LM/classifier FITS) persists
-ONE (id, text, carry) projection and feeds every leg from it — the
-source parquet is read exactly once; every other leg reads executor-
-local cache blocks (``InMemoryTableScan`` in the plan, never a second
-``Scan parquet``). The legs' plans above the scan are UNCHANGED — the
-gram stream, token stream, and rule expressions are the same pinned
-constructions, just rooted at the cache — so the bit-exactness pins
-survive verbatim (``tests/test_screen.py`` pins fused == unfused).
-Default ``MEMORY_AND_DISK``: blocks that don't fit executor memory
-spill to executor-local disk, so the worst case is write-once /
-read-thrice local I/O instead of 3x remote parquet scans. At 100 TB
-pass ``storage_level="DISK_ONLY"`` — the projection is corpus-text
-sized and should not compete with shuffle memory.
 """
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .ppl import (
     bucket_by_thresholds,
-    fit_bigram_lm,
     perplexity_threshold_buckets,
     score_perplexity,
 )
@@ -70,49 +50,6 @@ from .text import (
     gopher_repetition_flags,
     gopher_repetition_metrics,
 )
-
-
-def _screen_columns(
-    id_col: str, text_col: str, carry: tuple[str, ...]
-) -> list[str]:
-    """The projection every leg needs, deduplicated in stable order."""
-    cols: list[str] = []
-    for c in (id_col, text_col, *carry):
-        if c not in cols:
-            cols.append(c)
-    return cols
-
-
-def shared_corpus(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    carry: tuple[str, ...] = (),
-    storage_level: str = "MEMORY_AND_DISK",
-) -> DataFrame:
-    """Project ``df`` to the screen's columns and persist ONCE — the
-    shared root every :func:`pretrain_screen` leg (and, if the caller
-    fits them here too, the classifier/LM model fits) reads instead of
-    re-scanning the source.
-
-    The projection is column-pruned BEFORE the persist so the cache
-    holds only what the screen touches (never the corpus's embedding /
-    binary columns). Persist is lazy: the first action materializes it;
-    subsequent legs read cache blocks. The caller owns the lifecycle —
-    ``.unpersist()`` after the screen's outputs are consumed.
-
-    ``storage_level``: any ``pyspark.StorageLevel`` attribute name.
-    ``MEMORY_AND_DISK`` (default) for interactive scale; ``DISK_ONLY``
-    at 100 TB (write-once/read-thrice executor-local I/O beats 3x
-    remote parquet scans and never competes with shuffle memory)."""
-    level = getattr(StorageLevel, storage_level, None)
-    if level is None:
-        raise ValueError(
-            f"shared_corpus: unknown storage_level {storage_level!r} — "
-            "use a pyspark.StorageLevel attribute name "
-            "(MEMORY_AND_DISK, DISK_ONLY, MEMORY_ONLY, ...)"
-        )
-    return df.select(*_screen_columns(id_col, text_col, carry)).persist(level)
 
 
 def pretrain_screen(
@@ -130,8 +67,6 @@ def pretrain_screen(
     ppl_accuracy: int = 100_000,
     ppl_cuts: DataFrame | None = None,
     c4_blocklist: tuple[str, ...] | None = None,
-    shared_scan: bool = False,
-    storage_level: str = "MEMORY_AND_DISK",
     script_route: bool = False,
     route_scripts: tuple[str, ...] = ("latin",),
     compression_bounds: tuple[float, float] | None = None,
@@ -158,13 +93,6 @@ def pretrain_screen(
     page filter (text.blocklist_hit — whole-word, engine ships no list);
     None keeps the pre-r10 rule set.
 
-    ``shared_scan``: persist one (id, text, carry) projection and feed
-    all three legs from it — the source is scanned ONCE instead of
-    thrice (module docstring, shared-scan regime). If ``df`` is already
-    cached (the :func:`shared_corpus` handshake, which also puts the
-    model FITS on the shared root) it is used as-is — no second cache
-    entry. The verdicts are bit-identical either way (pinned).
-
     ``script_route``: the pre-lang-ID routing tier (VERDICT r10 item 6).
     Every stopword-based gate in this screen — Gopher quality's stopword
     minimum, the lang-ID convention behind the ``by`` groups — is only
@@ -184,23 +112,14 @@ def pretrain_screen(
     RedPajama-V2/Dolma signal the rule heuristics don't carry (very
     compressible = templated boilerplate; near-incompressible = minified
     code / base64 junk). When set, a fourth leg (one
-    :func:`text.compression_signal` Arrow pass over the SAME shared/cached
-    projection — still one source scan in the shared regime) emits
+    :func:`text.compression_signal` Arrow pass over the corpus) emits
     ``compress_ratio`` and ``comp_ok``, and ``keep`` additionally requires
     ``comp_ok``. The cut is evaluated on INTEGER cross-products
     (``deflate*10^6`` vs ``utf8*round(bound*10^6)``) so the kept set is
     engine- and layout-portable; bounds are rounded to 6 decimals (loudly
     — a finer bound raises). NULL-ratio docs (NULL/empty text) fail the
     gate VISIBLY (``comp_ok`` false, ratio NULL), never keep by accident.
-    Default None — output column-for-column unchanged (pinned).
-
-    Cache lifecycle: when ``shared_scan=True`` persists a projection
-    HERE (``df`` not already cached), the caller gets the handle as
-    ``result.shared_corpus_handle`` — ``.unpersist()`` it after the
-    screen's outputs are consumed, or the projection stays resident for
-    the rest of the session. When lifecycle matters, prefer the explicit
-    :func:`shared_corpus` handshake (you hold the handle from the
-    start; this path then caches nothing new and sets no attribute)."""
+    Default None — output column-for-column unchanged (pinned)."""
     if by not in carry:
         raise ValueError(
             f"pretrain_screen: by={by!r} must be carried through the legs "
@@ -228,15 +147,6 @@ def pretrain_screen(
                 f"non-empty subset of {SCRIPT_ORDER + ('none',)} — a typo'd "
                 "script name would silently route everything out"
             )
-    cached_here: DataFrame | None = None
-    if shared_scan and not df.is_cached:
-        df = cached_here = shared_corpus(
-            df,
-            id_col=id_col,
-            text_col=text_col,
-            carry=carry,
-            storage_level=storage_level,
-        )
     rules = (
         # text rides the Arrow kernel (carry) so the quality/C4 gates are
         # JVM exprs over the SAME scan — the quality_gate_panel shape
@@ -325,7 +235,7 @@ def pretrain_screen(
     joined = buck.join(rules, id_col).join(clf, id_col)
     if comp is not None:
         joined = joined.join(comp, id_col)
-    out = (
+    return (
         joined
         .select(
             id_col,
@@ -344,7 +254,3 @@ def pretrain_screen(
             keep.alias("keep"),
         )
     )
-    if cached_here is not None:
-        # hand the caller the unpersist handle (docstring: cache lifecycle)
-        out.shared_corpus_handle = cached_here
-    return out

@@ -51,10 +51,6 @@ def merge_distinct_estimate(
     return sketches.agg(merged, F.sum("n_rows").alias("n_rows"))
 
 
-def sketch_estimate(sketch: Column) -> Column:
-    return F.hll_sketch_estimate(sketch)
-
-
 def frequent_tokens(
     df: DataFrame, text_col: str = "text", support: float = 0.01
 ) -> list[str]:

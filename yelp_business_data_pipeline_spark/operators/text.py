@@ -757,7 +757,6 @@ def gopher_repetition_metrics(
     text_col: str = "text",
     top_ns: tuple[int, ...] = (2, 3, 4),
     dup_ns: tuple[int, ...] = (5, 6, 7, 8, 9, 10),
-    impl: str = "numpy",
     carry: tuple[str, ...] = (),
 ):
     """Per-document repetition counters behind the Gopher repetition
@@ -788,12 +787,12 @@ def gopher_repetition_metrics(
     is one row, so this is an Arrow ``mapInPandas`` kernel — ZERO
     shuffle, the winnowing_fingerprints_arrow precedent (the relational
     explode+groupBy form would shuffle every n-gram occurrence only to
-    regroup rows that never left their document). ``impl="numpy"``
-    (default) runs the batch-vectorized kernel (:func:`_gopher_rows_numpy`
-    — one vocab pass + per-n lexsort/segment reduces); ``impl="python"``
-    runs the per-doc Counter reference the vectorized path is fuzz-pinned
-    against. Batch memory is O(batch words), never corpus-bound, either
-    way. Exact DuckDB twin pinned in tests/test_gopher.py.
+    regroup rows that never left their document). The kernel is the
+    batch-vectorized :func:`_gopher_rows_numpy` (one vocab pass + per-n
+    lexsort/segment reduces), fuzz-pinned against the per-doc Counter
+    reference :func:`_gopher_rows_python`. Batch memory is O(batch
+    words), never corpus-bound. Exact DuckDB twin pinned in
+    tests/test_gopher.py.
     """
     import pandas as pd
     from pyspark.sql import types as T
@@ -804,8 +803,6 @@ def gopher_repetition_metrics(
             f"gopher_repetition_metrics: n values must be distinct and >= 1, "
             f"got top_ns={top_ns}, dup_ns={dup_ns}"
         )
-    if impl not in ("numpy", "python"):
-        raise ValueError(f"gopher_repetition_metrics: unknown impl {impl!r}")
     id_field = df.schema[id_col]
     cols = _gopher_cols(top_ns, dup_ns)
     # ``carry`` rides extra per-doc columns through the kernel output so
@@ -818,13 +815,12 @@ def gopher_repetition_metrics(
         + [T.StructField(c, df.schema[c].dataType) for c in carry]
         + [T.StructField(c, T.LongType()) for c in cols]
     )
-    rows_fn = _gopher_rows_numpy if impl == "numpy" else _gopher_rows_python
     top_t, dup_t = tuple(top_ns), tuple(dup_ns)
     carry_t = tuple(carry)
 
     def _metrics(batches):
         for pdf in batches:
-            out = rows_fn(pdf[text_col].tolist(), top_t, dup_t)
+            out = _gopher_rows_numpy(pdf[text_col].tolist(), top_t, dup_t)
             yield pd.DataFrame(
                 {id_col: pdf[id_col], **{c: pdf[c] for c in carry_t}, **out}
             )

@@ -9,7 +9,9 @@ the catalog; CSV exports feed Neo4j. Here:
 
 - ``run_batch``   — one batch pass raw JSON -> processed parquet ->
   unified -> (optional) graph tables. Domains use the idempotent append
-  writer (re-running a batch is a no-op); unified is an overwrite rebuild.
+  writer (re-running a batch is a no-op); unified is a plain overwrite
+  rebuild (Spark deletes, then writes — a failed rebuild leaves the
+  unified table missing until the next run rebuilds it).
 - ``run_streaming`` — the Lambda-trigger replacement: per-domain file
   streams drain whatever is in the landing folders (Trigger.AvailableNow),
   then the unified table rebuilds once, mirroring the reference's
@@ -17,16 +19,23 @@ the catalog; CSV exports feed Neo4j. Here:
 - Processed tables register in the Spark catalog (the Glue/Athena
   replacement) so ``spark.sql("SELECT ... FROM yelp_unified")`` works.
 
-Scale: each domain pipeline is one lazy plan ending in a partitioned
-write; review output partitions by year(date) and business by state
-(SURVEY.md §1.4) so downstream filters prune partitions.
+Both paths are driven by one per-domain table, ``DOMAINS`` (raw schema,
+ETL, partition column), so batch and streaming write the same schema and
+layout. Scale: each domain pipeline is one lazy plan ending in a
+partitioned write; review output partitions by year(date) and business
+by state (SURVEY.md §1.4) so downstream filters prune partitions.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass
+from functools import partial
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .operators.business import business_etl
 from .operators.graph import build_edges, build_vertices
@@ -70,45 +79,59 @@ DOMAIN_KEYS = {
 }
 
 
+class Domain(NamedTuple):
+    """One domain table: ``etl(raw, as_of)`` maps the raw JSON frame to
+    the processed rows, written partitioned by ``partition_col``."""
+
+    name: str
+    raw_schema: T.StructType
+    etl: Callable[[DataFrame, str | None], DataFrame]
+    partition_col: str | None
+
+    @property
+    def partition_by(self) -> list[str] | None:
+        return [self.partition_col] if self.partition_col else None
+
+    def raw_path(self, paths: YelpPaths) -> str:
+        return getattr(paths, f"{self.name}_raw")
+
+    def out_path(self, paths: YelpPaths) -> str:
+        return getattr(paths, f"{self.name}_out")
+
+
+def _review_etl(raw: DataFrame, as_of: str | None) -> DataFrame:
+    # review_year is derived and kept in the schema: it is the partition column
+    return review_etl(raw).withColumn("review_year", F.year("date"))
+
+
+#: In write order: business, review, user.
+DOMAINS = (
+    Domain("business", BUSINESS_RAW_SCHEMA, lambda raw, as_of: business_etl(raw), "state"),
+    Domain("review", REVIEW_RAW_SCHEMA, _review_etl, "review_year"),
+    Domain("user", USER_RAW_SCHEMA, lambda raw, as_of: user_etl(raw, as_of=as_of), None),
+)
+
+
 def run_batch(
     spark: SparkSession,
     paths: YelpPaths,
     as_of: str | None = "2026-01-01 00:00:00",
     build_graph: bool = False,
-    register_views: bool = True,
-    partition_outputs: bool = True,
 ) -> dict[str, DataFrame]:
-    """One batch pass over the raw JSON folders. Returns the output tables.
+    """One batch pass over the raw JSON folders. Returns the output tables,
+    each registered as a ``yelp_<name>`` temp view.
 
     Idempotent: re-running with the same inputs appends nothing (domain
     writers anti-join on primary keys) and rebuilds unified to the same
     state.
-
-    ``partition_outputs`` (SURVEY.md §1.4 scale layout): business
-    partitions by ``state``, review by ``review_year`` (derived, kept in
-    the schema) — downstream filters on state/year prune partitions
-    instead of scanning the world.
     """
-    from pyspark.sql import functions as F
-
-    biz = business_etl(read_json_lines(spark, paths.business_raw, BUSINESS_RAW_SCHEMA))
-    rev = review_etl(read_json_lines(spark, paths.review_raw, REVIEW_RAW_SCHEMA))
-    usr = user_etl(read_json_lines(spark, paths.user_raw, USER_RAW_SCHEMA), as_of=as_of)
-
-    if partition_outputs:
-        rev = rev.withColumn("review_year", F.year("date"))
+    for d in DOMAINS:
+        raw = read_json_lines(spark, d.raw_path(paths), d.raw_schema)
         write_append_idempotent(
-            biz, paths.business_out, keys=DOMAIN_KEYS["business"], partition_by=["state"]
+            d.etl(raw, as_of), d.out_path(paths), keys=DOMAIN_KEYS[d.name],
+            partition_by=d.partition_by,
         )
-        write_append_idempotent(
-            rev, paths.review_out, keys=DOMAIN_KEYS["review"], partition_by=["review_year"]
-        )
-    else:
-        write_append_idempotent(biz, paths.business_out, keys=DOMAIN_KEYS["business"])
-        write_append_idempotent(rev, paths.review_out, keys=DOMAIN_KEYS["review"])
-    write_append_idempotent(usr, paths.user_out, keys=DOMAIN_KEYS["user"])
-
-    return _rebuild_unified(spark, paths, build_graph, register_views)
+    return _rebuild_unified(spark, paths, build_graph)
 
 
 def run_streaming(
@@ -117,49 +140,24 @@ def run_streaming(
     checkpoint_dir: str,
     as_of: str | None = "2026-01-01 00:00:00",
     build_graph: bool = False,
-    register_views: bool = True,
-    partition_outputs: bool = True,
 ) -> dict[str, DataFrame]:
     """Drain the three domain landing folders via Structured Streaming
     (exactly-once per file), then rebuild unified — the reference's
     S3-event -> Lambda -> job-DAG path without the Lambda.
 
-    ``partition_outputs`` MUST match what ``run_batch`` used (both default
-    True): the streams append into the same domain tables, and a mixed
-    partitioned/unpartitioned directory breaks partition discovery for
-    every reader. The review stream derives ``review_year`` exactly like
-    the batch path so both write the same schema and layout."""
-    from pyspark.sql import functions as F
-
-    if partition_outputs:
-        def _review_etl(df):
-            return review_etl(df).withColumn("review_year", F.year("date"))
-
-        biz_layout = {"partition_by": ["state"]}
-        rev_layout = {"partition_by": ["review_year"]}
-    else:
-        _review_etl = review_etl
-        biz_layout = rev_layout = {}
+    The streams append into the same domain tables as ``run_batch``, with
+    the same ETL and partition layout from ``DOMAINS``."""
     streams = [
         stream_domain_etl(
-            spark, paths.business_raw, BUSINESS_RAW_SCHEMA, business_etl,
-            paths.business_out, f"{checkpoint_dir}/business", DOMAIN_KEYS["business"],
-            **biz_layout,
-        ),
-        stream_domain_etl(
-            spark, paths.review_raw, REVIEW_RAW_SCHEMA, _review_etl,
-            paths.review_out, f"{checkpoint_dir}/review", DOMAIN_KEYS["review"],
-            **rev_layout,
-        ),
-        stream_domain_etl(
-            spark, paths.user_raw, USER_RAW_SCHEMA,
-            lambda df: user_etl(df, as_of=as_of),
-            paths.user_out, f"{checkpoint_dir}/user", DOMAIN_KEYS["user"],
-        ),
+            spark, d.raw_path(paths), d.raw_schema, partial(d.etl, as_of=as_of),
+            d.out_path(paths), f"{checkpoint_dir}/{d.name}", DOMAIN_KEYS[d.name],
+            partition_by=d.partition_by,
+        )
+        for d in DOMAINS
     ]
     for q in streams:
         q.awaitTermination()
-    return _rebuild_unified(spark, paths, build_graph, register_views)
+    return _rebuild_unified(spark, paths, build_graph)
 
 
 def _domain_exists(spark: SparkSession, path: str) -> bool:
@@ -169,47 +167,25 @@ def _domain_exists(spark: SparkSession, path: str) -> bool:
 
 
 def _rebuild_unified(
-    spark: SparkSession, paths: YelpPaths, build_graph: bool, register_views: bool
+    spark: SparkSession, paths: YelpPaths, build_graph: bool
 ) -> dict[str, DataFrame]:
     # The reference's job DAG gates UnifiedAnalytics on ALL THREE domain
     # tasks having produced data (README.md:150,215: 'Only when all three
     # domains have data will the UnifiedAnalytics task execute'). Mirror
     # that: with any domain still missing, return what exists and skip the
     # unified rebuild.
-    missing = [
-        p
-        for p in (paths.business_out, paths.review_out, paths.user_out)
-        if not _domain_exists(spark, p)
-    ]
-    if missing:
-        out: dict[str, DataFrame] = {}
-        for name, p in (
-            ("business", paths.business_out),
-            ("review", paths.review_out),
-            ("user", paths.user_out),
-        ):
-            if _domain_exists(spark, p):
-                out[name] = spark.read.parquet(p)
-                if register_views:
-                    out[name].createOrReplaceTempView(f"yelp_{name}")
-        return out
-
-    biz_t = spark.read.parquet(paths.business_out)
-    rev_t = spark.read.parquet(paths.review_out)
-    usr_t = spark.read.parquet(paths.user_out)
-    unified = unified_analytics(rev_t, usr_t, biz_t)
-    write_overwrite(unified, paths.unified_out)
-
     out: dict[str, DataFrame] = {
-        "business": biz_t,
-        "review": rev_t,
-        "user": usr_t,
-        "unified": spark.read.parquet(paths.unified_out),
+        d.name: spark.read.parquet(d.out_path(paths))
+        for d in DOMAINS
+        if _domain_exists(spark, d.out_path(paths))
     }
-    if build_graph:
-        out["vertices"] = build_vertices(biz_t, rev_t, usr_t)
-        out["edges"] = build_edges(biz_t, rev_t, usr_t, user_friend_edges(usr_t))
-    if register_views:
-        for name, df in out.items():
-            df.createOrReplaceTempView(f"yelp_{name}")
+    if len(out) == len(DOMAINS):
+        biz_t, rev_t, usr_t = out["business"], out["review"], out["user"]
+        write_overwrite(unified_analytics(rev_t, usr_t, biz_t), paths.unified_out)
+        out["unified"] = spark.read.parquet(paths.unified_out)
+        if build_graph:
+            out["vertices"] = build_vertices(biz_t, rev_t, usr_t)
+            out["edges"] = build_edges(biz_t, rev_t, usr_t, user_friend_edges(usr_t))
+    for name, df in out.items():
+        df.createOrReplaceTempView(f"yelp_{name}")
     return out

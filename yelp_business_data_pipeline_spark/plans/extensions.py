@@ -31,12 +31,6 @@ def _sql_hash(expr: str, salt: str) -> str:
     return f"(('0x' || substr(md5('{salt}' || {expr}), 1, 8))::BIGINT)"
 
 
-def _sql_shingles(n: int = 3) -> str:
-    # 1-based list indexing; range(a, b) is [a, b).
-    parts = " || ' ' || ".join(f"t[i+{j}]" for j in range(n))
-    return f"list_transform(range(1, len(t) - {n - 2}), i -> {parts})"
-
-
 def _sql_shingle_hashes() -> str:
     from ..operators.dedup import MINHASH_MOD, SHINGLE_C1, SHINGLE_C2
 
@@ -3069,14 +3063,8 @@ def setops_customer_cohorts_tracker(spark: SparkSession, sf_dir: str) -> DataFra
     "AND the bigram-LM perplexity bucket via the SCALE-SAFE threshold "
     "path (approx_percentile cuts + broadcast join — no per-lang sort), "
     "joined per doc into one keep verdict. The combined screen gets ONE "
-    "driver-visible cost number instead of three jobs. Registered in the "
-    "RAW-SCAN regime (r12): the r11 bench ran it rooted at a persisted "
-    "shared_corpus projection and the same-container A/B "
-    "(tools/ab_pretrain_screen.py, BASELINE.md r12) measured that root as "
-    "+2 s AND the dominant variance term under in-panel training on warm "
-    "local NVMe (7.4-21.7 s vs 5.2-9.4 s raw at sf0.1) — shared_scan=True "
-    "remains the REMOTE-input switch (2.1x under throttled reads, r11 "
-    "probe), opt-in for callers whose scans are the bottleneck. "
+    "driver-visible cost number instead of three jobs. Every leg and both "
+    "model fits read the documents parquet directly (no persisted root). "
     "Panel: per-lang doc count, per-leg pass counts, kept count.",
 )
 def pretrain_screen_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4961,8 +4949,7 @@ def alignment_tail_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dedup composition (LSH band rows, both token sides of the Jaccard
     # verify joins, and the records side of resolve_entities), and the
     # gopher regex gate is the expensive part of each re-evaluation
-    # (~1.7 s/scan at sf0.1, measured via noop). Persist it once — the
-    # shared_corpus regime of operators/screen.py applied to this panel;
+    # (~1.7 s/scan at sf0.1, measured via noop). Persist it once;
     # unpersisted below after the collect, so nothing leaks across runs.
     screened = d.filter(g["passes_gopher_quality"]).persist()
     split = leakage_safe_splits(

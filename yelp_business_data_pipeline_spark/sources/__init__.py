@@ -1,5 +1,5 @@
 from .layout import grid_surrogate, quantile_grid_surrogate, zorder_key
-from .readers import load_testdata, read_json_lines, read_parquet_table
+from .readers import load_testdata, read_json_lines
 from .warc import (
     WARC_RECORD_SCHEMA,
     gunzip_members,
@@ -25,7 +25,6 @@ __all__ = [
     "zorder_key",
     "load_testdata",
     "read_json_lines",
-    "read_parquet_table",
     "WARC_RECORD_SCHEMA",
     "gunzip_members",
     "parse_warc_bytes",

@@ -68,17 +68,6 @@ def read_json_lines(
     )
 
 
-def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet scan (reference ``join/unified_data_analytics.py:16-18``)."""
-    return spark.read.parquet(path)
-
-
 def load_testdata(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Load every driver testdata table from ``sf_dir`` (see TESTDATA.md)."""
     return {name: spark.read.parquet(f"{sf_dir}/{name}.parquet") for name in TESTDATA_TABLES}
-
-
-def register_testdata_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register each testdata table as a temp view for ``spark.sql`` use."""
-    for name, df in load_testdata(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

@@ -173,7 +173,10 @@ def write_overwrite(
     partition_by: list[str] | None = None,
     sort_by: list[str] | None = None,
 ) -> None:
-    """Atomic rebuild (reference ``join/unified_data_analytics.py:56``).
+    """Full rebuild (reference ``join/unified_data_analytics.py:56``): a
+    plain Spark overwrite, which deletes the old table and then writes the
+    new one. It is not atomic — a write that fails leaves the table missing
+    until the next successful rebuild.
 
     ``sort_by`` sorts within output partitions before writing so parquet
     row-group min/max stats become selective — point/range filters on the

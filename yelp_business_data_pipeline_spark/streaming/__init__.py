@@ -1,5 +1,4 @@
 from .pipeline import (
-    run_available_now,
     stream_cdc_upsert,
     stream_incremental_dedup,
     stream_crawl_pipeline,
@@ -11,7 +10,6 @@ from .pipeline import (
 )
 
 __all__ = [
-    "run_available_now",
     "stream_cdc_upsert",
     "stream_incremental_dedup",
     "stream_crawl_pipeline",

@@ -19,8 +19,8 @@ foreachBatch**:
   ``README.md:140-152``).
 
 At scale: one stream per domain folder; ``maxFilesPerTrigger`` bounds batch
-size; checkpoints on durable storage; the unified overwrite uses dynamic
-partition overwrite so only touched partitions rewrite.
+size; checkpoints on durable storage; the unified table is rebuilt with a
+plain (unpartitioned) overwrite once the domain streams drain.
 
 Also provided: a watermarked windowed aggregation over the events stream —
 the standard Structured Streaming shape the reference lacks entirely
@@ -58,7 +58,7 @@ def stream_domain_etl(
 
     ``partition_by``/``sort_by`` MUST match the layout the batch path uses
     for the same table (pipeline.run_batch partitions business by state
-    and review by review_year by default): a stream appending
+    and review by review_year): a stream appending
     unpartitioned files into a partitioned table root corrupts partition
     discovery for every subsequent reader — run_streaming passes the
     batch layout through.
@@ -893,13 +893,6 @@ def stream_web_crawl_pipeline(
         .trigger(availableNow=True)
         .start()
     )
-
-
-def run_available_now(queries) -> None:
-    """Drain a set of AvailableNow streams to completion (the reference's
-    'job DAG finished' barrier before the unified rebuild)."""
-    for q in queries:
-        q.awaitTermination()
 
 
 def streaming_event_counts(
