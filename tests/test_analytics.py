@@ -17,7 +17,7 @@ from .test_yelp_etl import etl  # noqa: F401
 
 @pytest.fixture(scope="module")
 def unified(etl):  # noqa: F811
-    return unified_analytics(etl["review"], etl["user"], etl["business"], broadcast_dims=True).cache()
+    return unified_analytics(etl["review"], etl["user"], etl["business"]).cache()
 
 
 def test_sentiment_by_city(unified):

@@ -91,6 +91,14 @@ def test_partitioned_domain_layout(spark, paths):
     out = run_batch(spark, paths)
     assert glob.glob(f"{paths.business_out}/state=IL"), "business not partitioned by state"
     assert glob.glob(f"{paths.review_out}/review_year=2021"), "review not partitioned by year"
+    # the appends rebalance by partition column: one file per partition
+    # directory, not one per shuffle partition and partition value
+    part_dirs = glob.glob(f"{paths.business_out}/state=*") + glob.glob(
+        f"{paths.review_out}/review_year=*"
+    )
+    assert part_dirs
+    for d in part_dirs + [paths.user_out]:
+        assert len(glob.glob(f"{d}/*.parquet")) == 1, d
     # reading with a partition filter still yields correct rows
     il = spark.read.parquet(paths.business_out).filter(F.col("state") == "IL")
     assert il.count() == 3  # 3 categories of b1

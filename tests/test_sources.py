@@ -42,6 +42,46 @@ def test_write_append_idempotent(spark, tmp_path):
     assert_unique_keys(got, ["id"])
 
 
+def test_append_writes_one_file_per_partition_and_rerun_adds_none(spark, tmp_path):
+    """The append rebalances by its partition column, so each partition
+    directory gets one file, not one per shuffle partition (8 here)."""
+    import glob
+    import os
+
+    out = str(tmp_path / "t")
+    df = spark.createDataFrame(
+        [(i, f"v{i}", ("a", "b", "c")[i % 3]) for i in range(60)], ["id", "v", "p"]
+    ).repartition(8)
+    write_append_idempotent(df, out, keys=["id"], partition_by=["p"])
+    files = sorted(glob.glob(f"{out}/*/*.parquet"))
+    assert [os.path.basename(os.path.dirname(f)) for f in files] == ["p=a", "p=b", "p=c"]
+    # re-running the same batch appends nothing: no file, no row
+    write_append_idempotent(df, out, keys=["id"], partition_by=["p"])
+    assert sorted(glob.glob(f"{out}/*/*.parquet")) == files
+    assert spark.read.parquet(out).count() == 60
+
+
+def test_append_sort_by_survives_rebalance(spark, tmp_path):
+    """``sort_by`` orders the rows inside every written file: the sort runs
+    after the rebalance shuffle, and a partitioned write keeps it."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    out = str(tmp_path / "t")
+    rows = [(i, (i * 7919) % 1000, ("a", "b", "c")[i % 3]) for i in range(300)]
+    df = spark.createDataFrame(rows, ["id", "k", "p"]).repartition(8)
+    for partition_by in (["p"], None):
+        path = f"{out}_{bool(partition_by)}"
+        write_append_idempotent(df, path, keys=["id"], partition_by=partition_by, sort_by=["k"])
+        files = glob.glob(f"{path}/**/*.parquet", recursive=True)
+        assert files
+        for f in files:
+            ks = pq.read_table(f, columns=["k"]).column("k").to_pylist()
+            assert ks == sorted(ks), f
+        assert spark.read.parquet(path).count() == 300
+
+
 def test_write_overwrite(spark, tmp_path):
     out = str(tmp_path / "t")
     write_overwrite(spark.createDataFrame([(1, "a")], ["id", "v"]), out)

@@ -343,7 +343,7 @@ def test_user_friend_edges(etl):
 
 
 def test_unified_star_join(etl):
-    uni = unified_analytics(etl["review"], etl["user"], etl["business"], broadcast_dims=True)
+    uni = unified_analytics(etl["review"], etl["user"], etl["business"])
     # left-join semantics: every review row survives (README.md:189); the
     # business side is (business x category) grain -> r1/r2/r3 x 3 categories,
     # x user grain (u1 has 2 friend rows, u2 has 1)

@@ -8,7 +8,11 @@ but was never benched. This script measures an AvailableNow drain of N
 synthetic JSON files through BOTH paths and prints ONE JSON line:
 
     {"metric": "streaming_throughput", "domain_etl_rows_per_s": ...,
-     "cdc_upsert_rows_per_s": ..., "rows": R, "files": N, "batches": B}
+     "cdc_upsert_rows_per_s": ..., "rows": R, "files": N, "batches": B,
+     "domain_out_files": F}
+
+``domain_out_files`` is the parquet file count of the domain-ETL sink
+after its drain: the small files that B micro-batch appends leave behind.
 
 Workload shape (deterministic, no RNG):
 - domain ETL: N files x M review-shaped JSON rows, maxFilesPerTrigger
@@ -27,6 +31,7 @@ a noise band (min/max of 3).
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
@@ -610,12 +615,15 @@ def main() -> None:
         _drain_cdc(spark, warm, os.path.join(base_root, "warm_c"))
 
         dom, cdc, win = [], [], []
-        n_batches = 0
+        n_batches = out_files = 0
         for rep in range(REPEATS):
             base = os.path.join(base_root, f"rep{rep}")
             os.makedirs(base)
             dt, nb = _drain_domain(spark, src, base)
             dom.append(total_rows / dt)
+            out_files = len(
+                glob.glob(os.path.join(base, "out_domain", "**", "*.parquet"), recursive=True)
+            )
             ct, _ = _drain_cdc(spark, src, base)
             cdc.append(total_rows / ct)
             wt, wn = _drain_windowed(spark, base)
@@ -627,6 +635,7 @@ def main() -> None:
             "rows": total_rows,
             "files": N_FILES,
             "batches": n_batches,
+            "domain_out_files": out_files,
             "domain_etl_rows_per_s": round(sorted(dom)[len(dom) // 2]),
             "domain_etl_band": [round(min(dom)), round(max(dom))],
             "cdc_upsert_rows_per_s": round(sorted(cdc)[len(cdc) // 2]),

@@ -7,17 +7,16 @@ non-key columns prefixed ``review_`` / ``business_`` before joining (ref
 ``README.md:189``).
 
 Scale strategy: the review fact is the big side; user and business are
-dimension tables. When a dim fits under the broadcast threshold we broadcast
-it (no shuffle of the 100 TB fact); otherwise Catalyst's sort-merge join +
-AQE skew splitting handles hot ``business_id`` keys (popular businesses are
-the classic skew case, SURVEY.md J2). ``broadcast_dims`` defaults to
-auto (AQE decides); force with True for known-small dims.
+dimension tables. The joins carry no hints. A dim under the broadcast
+threshold is broadcast (at planning time from file stats, or at runtime
+under AQE), so the 100 TB fact is not shuffled for it; otherwise Catalyst's
+sort-merge join + AQE skew splitting handles hot ``business_id`` keys
+(popular businesses are the classic skew case, SURVEY.md J2).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from .cleaning import prefix_overlapping_columns
 
@@ -26,7 +25,6 @@ def unified_analytics(
     reviews: DataFrame,
     users: DataFrame,
     businesses: DataFrame,
-    broadcast_dims: bool = False,
 ) -> DataFrame:
     """Build the denormalized UnifiedAnalytics table."""
     user_cols = set(users.columns)
@@ -43,6 +41,4 @@ def unified_analytics(
     businesses_r = prefix_overlapping_columns(
         businesses, review_cols | user_cols, "business_", keep=join_keys
     )
-    users_j = F.broadcast(users) if broadcast_dims else users
-    businesses_j = F.broadcast(businesses_r) if broadcast_dims else businesses_r
-    return reviews_r.join(users_j, "user_id", "left").join(businesses_j, "business_id", "left")
+    return reviews_r.join(users, "user_id", "left").join(businesses_r, "business_id", "left")

@@ -11,8 +11,9 @@ range small within any contiguous chunk of the sort order, so filters on
 any subset of the columns skip row groups.
 
 ``zorder_key`` is a pure JVM expression (shiftleft/or chains — no UDF, no
-shuffle of its own): add it as a column and ``sortWithinPartitions`` on
-it before writing (the same slot as ``write_overwrite(sort_by=...)``).
+shuffle of its own): add it as a column and pass it as
+``write_overwrite(sort_by=[...])``, which sorts each write task after any
+rebalance (``sources/writers.py`` notes).
 Columns must already be NON-NEGATIVE INTEGER surrogates of bounded width
 — map domain values onto a grid first (truncate timestamps to epoch
 buckets, quantize floats to fixed-point, hash-bucket strings).

@@ -11,7 +11,21 @@ Scale notes: partitioned writes enable partition pruning downstream;
 ``partitionOverwriteMode=dynamic`` (set in the session factory) makes
 partitioned overwrites replace only touched partitions. The anti-join reads
 only the key column of the existing table (column-pruned parquet scan), so
-idempotent append at 100 TB costs one key-scan + one shuffle, not a rewrite.
+idempotent append at 100 TB costs one key-scan + the dedup shuffle + one
+rebalance shuffle, not a rewrite.
+
+Write layout (``_write_table``, shared by every writer): a partitioned write
+is rebalanced by its partition columns, so AQE sizes the write tasks and a
+write adds about ``partition values × ⌈bytes / advisory size⌉`` files
+(``spark.sql.adaptive.advisoryPartitionSizeInBytes``, 64 MB by default):
+one file per partition value at small scale, a hot value split at the
+advisory size (``OptimizeSkewInRebalancePartitions``). An unpartitioned
+write keeps its upstream tasks (file-scan splits, or a final shuffle that
+AQE coalesces). The exception is ``write_append_idempotent``: it writes off
+a persisted shuffle, which keeps all ``spark.sql.shuffle.partitions`` while
+``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`` is off
+(Spark's default), so its unpartitioned append gets a plain REBALANCE. Each
+rebalance costs one extra shuffle-map stage.
 """
 
 from __future__ import annotations
@@ -167,6 +181,30 @@ def _swap_directories(fs, jvm, path: str, staging: str, backup: str, op: str) ->
     fs.delete(b_path, True)
 
 
+def _write_table(
+    df: DataFrame,
+    path: str,
+    mode: str,
+    partition_by: list[str] | None = None,
+    sort_by: list[str] | None = None,
+    options: dict[str, str] | None = None,
+) -> None:
+    """The write side shared by every table writer: rebalance a partitioned
+    write by its partition columns (module notes), sort within the write
+    tasks, write parquet.
+
+    The sort runs AFTER the rebalance shuffle (a sort before it would be
+    scrambled by the shuffle) and leads with the partition columns: a
+    partitioned write requires its input sorted by them, and Spark would
+    otherwise add its own sort on top and discard ``sort_by`` — files
+    would come out unsorted."""
+    pcols = list(partition_by or [])
+    out = df.hint("rebalance", *pcols) if pcols else df
+    if sort_by:
+        out = out.sortWithinPartitions(*pcols, *sort_by)
+    out.write.mode(mode).options(**(options or {})).partitionBy(*pcols).parquet(path)
+
+
 def write_overwrite(
     df: DataFrame,
     path: str,
@@ -182,12 +220,7 @@ def write_overwrite(
     row-group min/max stats become selective — point/range filters on the
     sort key skip row groups at scan time (SURVEY.md §4 'sorted-on-PK
     writes')."""
-    if sort_by:
-        df = df.sortWithinPartitions(*sort_by)
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+    _write_table(df, path, "overwrite", partition_by, sort_by)
 
 
 def write_append_idempotent(
@@ -206,6 +239,9 @@ def write_append_idempotent(
     The anti-join uses NULL-SAFE key equality: nullable key components (e.g.
     the user table's ``friend`` column for friendless users) must still
     dedupe — a plain equi-anti-join would re-append NULL-keyed rows forever.
+
+    Cost: the deduplicating shuffle, the anti-join against the existing
+    key column, and one rebalance shuffle before the write (module notes).
     """
     from functools import reduce
 
@@ -243,11 +279,8 @@ def write_append_idempotent(
     try:
         if cached.isEmpty():
             return
-        out = cached.sortWithinPartitions(*sort_by) if sort_by else cached
-        writer = out.write.mode("append")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
+        out = cached if partition_by else cached.hint("rebalance")
+        _write_table(out, path, "append", partition_by, sort_by)
     finally:
         cached.unpersist()
 
@@ -382,10 +415,8 @@ def _merge_upsert_body(
     if not pcols:
         tgt_a = tgt.alias("_tgt")
         out = tgt_a.join(src_keys, on=_key_cond(tgt_a), how="left_anti").unionByName(fresh)
-        if sort_by:
-            out = out.sortWithinPartitions(*sort_by)
         staging, backup = f"{path}__merging", f"{path}__premerge"
-        out.write.mode("overwrite").parquet(staging)
+        _write_table(out, staging, "overwrite", sort_by=sort_by)
         _swap_directories(fs, jvm, path, staging, backup, "merge")
         return {"created": False, "affected_partitions": 0, "emptied_partitions": 0}
 
@@ -439,10 +470,7 @@ def _merge_upsert_body(
 
     tgt_slice = _part_slice(tgt).alias("_tgt")
     kept = tgt_slice.join(src_keys, on=_key_cond(tgt_slice), how="left_anti")
-    out = kept.unionByName(fresh)
-    if sort_by:
-        out = out.sortWithinPartitions(*sort_by)
-    out = out.persist()
+    out = kept.unionByName(fresh).persist()
     try:
         written = {
             tuple(r[c] for c in pcols) for r in out.select(*pcols).dropDuplicates(pcols).collect()
@@ -453,9 +481,10 @@ def _merge_upsert_body(
         # ones. Set it on the writer itself rather than trusting the session
         # conf (the project session factory sets dynamic, but merge_upsert
         # must be safe from any session).
-        out.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
-            *pcols
-        ).parquet(path)
+        _write_table(
+            out, path, "overwrite", pcols, sort_by,
+            options={"partitionOverwriteMode": "dynamic"},
+        )
     finally:
         out.unpersist()
     emptied = affected - written
