@@ -17,3 +17,14 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE
+
+
+@pytest.fixture
+def distributed_cc(monkeypatch):
+    """Run ``connected_components``' distributed rounds on any graph: with
+    the local-finish bound at 0 every input is above it, so hashmin, star,
+    precontract and their round budgets run as on a graph too large to
+    collect to the driver."""
+    from yelp_business_data_pipeline_spark.operators import components
+
+    monkeypatch.setattr(components, "_LOCAL_FINISH_EDGES", 0)

@@ -1,6 +1,8 @@
-"""Connected components + entity resolution: algorithmic properties on
-known graphs, then the end-to-end pipeline (blocking -> verify -> cluster
--> canonical) on the customer table against a Python union-find oracle."""
+"""Connected components + entity resolution: algorithmic properties of
+the distributed rounds on known graphs (forced by the ``distributed_cc``
+fixture), the driver-side local finish against them, then the end-to-end
+pipeline (blocking -> verify -> cluster -> canonical) on the customer
+table against a Python union-find oracle."""
 
 from __future__ import annotations
 
@@ -18,6 +20,7 @@ def _cc(spark, edges):
     return {r.id: r.comp for r in connected_components(df).collect()}
 
 
+@pytest.mark.usefixtures("distributed_cc")
 def test_known_graph_shapes(spark):
     # chain 1-2-3-4 and separate triangle 10-11-12, plus pair 20-21
     got = _cc(spark, [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (10, 12), (20, 21)])
@@ -27,6 +30,7 @@ def test_known_graph_shapes(spark):
     assert got == {100: 7, 7: 7, 8: 7, 9: 7}
 
 
+@pytest.mark.usefixtures("distributed_cc")
 def test_long_path_converges(spark):
     # path of length 12: needs ~diameter rounds, well under max_iter
     edges = [(i, i + 1) for i in range(12)]
@@ -34,6 +38,7 @@ def test_long_path_converges(spark):
     assert set(got.values()) == {0} and len(got) == 13
 
 
+@pytest.mark.usefixtures("distributed_cc")
 def test_star_cc_matches_hashmin_and_union_find(spark):
     """Alternating large-star/small-star CC (algorithm='star') computes the
     identical (id, comp) map as hash-min and a Python union-find, across
@@ -58,6 +63,7 @@ def test_star_cc_matches_hashmin_and_union_find(spark):
         assert star == hm, edges
 
 
+@pytest.mark.usefixtures("distributed_cc")
 def test_star_cc_beats_hashmin_on_long_chains(spark):
     """A 200-node chain (diameter 199) is exactly where hash-min's
     O(diameter) rounds fail: it cannot converge inside 20 rounds, while
@@ -288,6 +294,7 @@ def test_personalized_pagerank_matches_python_and_localizes(spark):
         pagerank(empty, personalize=seeds)
 
 
+@pytest.mark.usefixtures("distributed_cc")
 def test_star_algorithm_on_string_ids(spark):
     # Regression: the round-4 stats-triple convergence check summed the
     # endpoint columns directly — an ANSI cast crash on string doc ids
@@ -302,6 +309,7 @@ def test_star_algorithm_on_string_ids(spark):
     assert got == {"a": "a", "b": "a", "c": "a", "d": "d", "e": "d"}
 
 
+@pytest.mark.usefixtures("distributed_cc")
 def test_hashmin_check_every_matches_eager(spark):
     """Batched convergence (check_every=k) returns the identical label map
     as the eager per-round check, across window sizes that do and do not
@@ -329,6 +337,7 @@ def test_hashmin_check_every_matches_eager(spark):
         )
 
 
+@pytest.mark.usefixtures("distributed_cc")
 def test_precontract_matches_plain_and_union_find(spark):
     """Two-phase CC (per-partition union-find pre-contraction, then global
     rounds) computes the identical (id, comp) map as the plain algorithms
@@ -359,6 +368,7 @@ def test_precontract_matches_plain_and_union_find(spark):
                 assert got == oracle, (algo, n_parts, edges[:5])
 
 
+@pytest.mark.usefixtures("distributed_cc")
 def test_precontract_string_ids(spark):
     pairs = spark.createDataFrame(
         [("b", "a"), ("c", "b"), ("e", "d"), ("f", "f")], "doc_a string, doc_b string"
@@ -370,6 +380,7 @@ def test_precontract_string_ids(spark):
     assert got == {"a": "a", "b": "a", "c": "a", "d": "d", "e": "d", "f": "f"}
 
 
+@pytest.mark.usefixtures("distributed_cc")
 def test_precontract_single_partition_converges_in_one_round(spark):
     """With every edge in one partition, the contraction alone produces the
     final depth-1 star forest — the global phase should see an already-
@@ -385,6 +396,7 @@ def test_precontract_single_partition_converges_in_one_round(spark):
     assert set(got.values()) == {0} and len(got) == 201
 
 
+@pytest.mark.usefixtures("distributed_cc")
 def test_precontract_preserves_null_endpoint_vertices(spark):
     """Finding from the round-5 review: null-endpoint edges must flow
     through the contraction UNCHANGED (they are passed through, not
@@ -409,3 +421,97 @@ def test_check_every_validated_on_star_path(spark):
     pairs = spark.createDataFrame([(1, 2)], "doc_a long, doc_b long")
     with pytest.raises(ValueError, match="check_every"):
         connected_components(pairs, algorithm="star", check_every=0)
+
+
+# ---------------------------------------------------------------------------
+# Local finish: graphs within the bound are solved on the driver
+# ---------------------------------------------------------------------------
+
+_STRING_IDS = [f"d{i:02d}" for i in range(20)] + ["Z", "z", "é", "ß", "日本"]
+
+
+def _spy_local_finish(monkeypatch) -> list:
+    """One entry per connected_components call that tried the local
+    finish: True when the finish returned the result."""
+    from yelp_business_data_pipeline_spark.operators import components
+
+    taken = []
+    real = components._local_finish
+
+    def spy(*args):
+        out = real(*args)
+        taken.append(out is not None)
+        return out
+
+    monkeypatch.setattr(components, "_local_finish", spy)
+    return taken
+
+
+def _null_aware_oracle(edges):
+    """Every endpoint is a vertex; NULL is one vertex labeled NULL and an
+    edge with a NULL endpoint connects nothing."""
+    want = _union_find_oracle(
+        [(a, b) for a, b in edges if a is not None and b is not None]
+    )
+    for edge in edges:
+        for v in edge:
+            want.setdefault(v, v)
+    return want
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+def test_local_finish_equals_rounds_and_union_find(spark, monkeypatch):
+    """The driver-side finish returns exactly the rows and schema of the
+    distributed rounds (hashmin and star, with and without precontract)
+    and of a Python union-find, on random graphs with bigint and string
+    ids, NULL endpoints, self-loops and duplicate edges."""
+    import random
+
+    from yelp_business_data_pipeline_spark.operators import components
+
+    rng = random.Random(5)
+    graphs = [("long", [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (10, 12), (20, 21)])]
+    for typ, ids in (("long", list(range(25))), ("string", _STRING_IDS)):
+        edges = [(rng.choice(ids), rng.choice(ids)) for _ in range(25)]
+        edges += [(v, v) for v in rng.sample(ids, 2)]
+        edges += rng.sample(edges, 3)
+        edges += [(rng.choice(ids), None), (None, rng.choice(ids)), (None, None)]
+        graphs.append((typ, edges))
+    bound = components._LOCAL_FINISH_EDGES
+    taken = _spy_local_finish(monkeypatch)
+    for i, (typ, edges) in enumerate(graphs):
+        df = spark.createDataFrame(edges, f"doc_a {typ}, doc_b {typ}").repartition(3)
+        monkeypatch.setattr(components, "_LOCAL_FINISH_EDGES", bound)
+        local = connected_components(df)
+        rows = _rows(local)
+        assert taken[-1] is True
+        assert rows == sorted(_null_aware_oracle(edges).items(), key=repr), edges
+        monkeypatch.setattr(components, "_LOCAL_FINISH_EDGES", 0)
+        for algo in ("hashmin", "star"):
+            dist = connected_components(
+                df, algorithm=algo, precontract=i % 2 == 1, max_iter=60
+            )
+            assert taken[-1] is False
+            assert _rows(dist) == rows, (algo, edges)
+            assert dist.schema == local.schema, (algo, dist.schema, local.schema)
+
+
+def test_local_finish_bound_is_inclusive(spark, monkeypatch):
+    """With the bound at N, an N-edge input takes the local finish and an
+    (N+1)-edge input the distributed rounds, with the same rows; and
+    checkpoint=False (plan inspection) never collects."""
+    from yelp_business_data_pipeline_spark.operators import components
+
+    monkeypatch.setattr(components, "_LOCAL_FINISH_EDGES", 4)
+    taken = _spy_local_finish(monkeypatch)
+    edges = [(1, 2), (2, 3), (7, 8), (8, 8), (3, 4)]
+    for n in (4, 5):
+        df = spark.createDataFrame(edges[:n], "doc_a long, doc_b long")
+        got = _rows(connected_components(df))
+        assert got == sorted(_union_find_oracle(edges[:n]).items()), n
+    assert taken == [True, False]
+    connected_components(df, checkpoint=False)
+    assert taken == [True, False]

@@ -4,7 +4,8 @@ inputs and partition layouts, not just the hand-built cases."""
 
 from __future__ import annotations
 
-from hypothesis import given, settings, strategies as st
+import pytest
+from hypothesis import HealthCheck, given, settings, strategies as st
 
 
 def _exact_counts(items):
@@ -42,13 +43,20 @@ def test_mg_bounds_contain_exact_for_any_input(spark, items, m, n_parts):
             assert true <= row.mg_err, (it, true, row.mg_err, m, n_parts)
 
 
-@settings(max_examples=10, deadline=None)
+# distributed_cc only sets a module constant, so sharing one instance
+# across the generated examples is intended
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
 @given(
     st.lists(
         st.tuples(st.integers(0, 30), st.integers(0, 30)), min_size=1, max_size=60
     ),
     st.integers(min_value=1, max_value=4),
 )
+@pytest.mark.usefixtures("distributed_cc")
 def test_precontract_cc_equals_union_find_for_any_graph(spark, edges, n_parts):
     from yelp_business_data_pipeline_spark.operators.components import (
         connected_components,

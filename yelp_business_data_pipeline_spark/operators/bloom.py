@@ -211,7 +211,6 @@ def bloom_may_contain(
     n_hashes: int,
     out_col: str = "may_contain",
     impl: str = "md5",
-    broadcast_filter: bool = True,
 ) -> DataFrame:
     """Annotate ``df`` with ``out_col`` (boolean, never NULL):
 
@@ -221,10 +220,8 @@ def bloom_may_contain(
     - ``true`` → in the set OR a false positive at the sized rate.
 
     Plan: distinct probe values → explode positions → join the word
-    table on ``word_idx`` (broadcast by default — ceil(n_bits/63) rows of
-    16 bytes; pass ``broadcast_filter=False`` for sharded-giant filters,
-    where the join degrades to a narrow shuffle on word_idx) →
-    ``bool_and`` per value → null-safe join back onto ``df``. A probe
+    table on ``word_idx`` (broadcast — ceil(n_bits/63) rows of 16 bytes)
+    → ``bool_and`` per value → null-safe join back onto ``df``. A probe
     position whose word row is absent was never set by any build key.
 
     NULL probe values get ``false``: NULL has no identity, is never
@@ -245,11 +242,11 @@ def bloom_may_contain(
             f"n_hashes) than ({n_bits}, {n_hashes})"
         ),
     )
-    words = bloom.select(
-        "word_idx", F.when(params_ok.isNull(), F.col("word")).alias("word")
+    words = F.broadcast(
+        bloom.select(
+            "word_idx", F.when(params_ok.isNull(), F.col("word")).alias("word")
+        )
     )
-    if broadcast_filter:
-        words = F.broadcast(words)
     probes = _word_rows(
         df.select(F.col(value_col).alias("_v")).distinct(),
         "_v",

@@ -8,26 +8,108 @@ graph -> one canonical record per component. The first two stages live in
 ``operators.dedup`` / ``operators.similarity``; this module supplies the
 last two.
 
-Algorithm: hash-min label propagation (the standard map-reduce CC — e.g.
-Rastogi et al. 2013 "Finding Connected Components in Map-Reduce in
-Logarithmic Rounds" use this as the HCC baseline): every vertex starts
-labeled with its own id; each round every vertex takes the min label in
-its closed neighborhood; converged when no label changes. Rounds are
-bounded by the graph diameter — dup-cluster graphs are shallow (stars /
-short chains), so 3-5 rounds typically converge; ``max_iter`` caps
-runaway graphs and convergence is checked with a cheap aggregate, not a
-collect.
+Local finish (the iterative-tail pattern of ``graph.k_core``): a graph of
+at most ``_LOCAL_FINISH_EDGES`` input edges is collected in ONE bounded
+Arrow job and solved by a union-find on the driver. A verified-pair graph
+is usually that small, and on it every distributed round is pure per-job
+overhead: on the fuzzy-dedup tail of a 2,000-doc corpus (48 candidate
+pairs, 45 merged docs) the rounds take 31 jobs and 3.2 s, the finish 6
+jobs and 0.8 s (4 cores).
+
+Distributed rounds (graphs above the bound): hash-min label propagation
+(the standard map-reduce CC — e.g. Rastogi et al. 2013 "Finding Connected
+Components in Map-Reduce in Logarithmic Rounds" use this as the HCC
+baseline): every vertex starts labeled with its own id; each round every
+vertex takes the min label in its closed neighborhood; converged when no
+label changes. Rounds are bounded by the graph diameter — dup-cluster
+graphs are shallow (stars / short chains), so 3-5 rounds typically
+converge; ``max_iter`` caps runaway graphs and convergence is checked
+with a cheap aggregate, not a collect. The star contraction and the
+per-partition precontract pass are the alternatives for deep graphs.
 
 Spark shapes: one shuffle per round (groupBy vertex on the propagated
 labels); lineage is cut with localCheckpoint each round so the iterative
 plan does not snowball (the classic iterative-DataFrame trap). Fully
-deterministic: min over int64 ids, no RNG.
+deterministic: min over the ids, no RNG.
+
+NULL endpoints, on every path: the vertex set is every endpoint, so a
+NULL endpoint makes ONE NULL vertex whose ``comp`` is NULL; an edge with
+a NULL endpoint connects nothing (its other endpoint is a vertex, alone
+unless other edges join it). A self-loop vertex is its own component.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+#: Largest input edge count that ``connected_components`` finishes on the
+#: driver — the k_core local-finish default. The crossover lies above 4x
+#: this (4 cores, precontract on, median of 3, local finish vs rounds):
+#: 100k edges in 6-member stars 1.2 vs 4.1 s (hashmin), 400k 3.9 vs 6.8 s;
+#: a 100k-edge random functional graph 1.2 vs 15.4 s (star), 400k 3.7 vs
+#: 36.8 s. It is not raised: the driver holds every vertex in Python
+#: dicts.
+_LOCAL_FINISH_EDGES = 100_000
+
+
+def _union_find_min(edges: Iterable[tuple]) -> dict:
+    """``{vertex: its component's minimum vertex}`` for every endpoint of
+    ``edges`` (NULL-free ``(a, b)`` pairs, consumed once). Union links
+    the larger root under the smaller, so every root IS its component's
+    minimum — the label Spark's ``min`` gives on the distributed path
+    (bigint and string ids order the same in Python)."""
+    parent: dict = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]  # path halving
+            x = parent[x]
+        return x
+
+    for va, vb in edges:
+        parent.setdefault(va, va)
+        parent.setdefault(vb, vb)
+        ra, rb = find(va), find(vb)
+        if ra < rb:
+            parent[rb] = ra
+        elif rb < ra:
+            parent[ra] = rb
+    for v in parent:
+        parent[v] = find(v)
+    return parent
+
+
+def _local_finish(pairs: DataFrame, src: str, dst: str) -> DataFrame | None:
+    """``(id, comp)`` from a driver-side union-find when ``pairs`` holds
+    at most ``_LOCAL_FINISH_EDGES`` rows, else None. One bounded Arrow
+    job: ``toArrow`` keeps nullable bigint ids integral (``toPandas``
+    would widen them to float64)."""
+    import pyarrow as pa
+
+    tbl = pairs.limit(_LOCAL_FINISH_EDGES + 1).toArrow()
+    if tbl.num_rows > _LOCAL_FINISH_EDGES:
+        return None
+    clean, loose = [], set()
+    for a, b in zip(tbl.column(0).to_pylist(), tbl.column(1).to_pylist()):
+        if a is None or b is None:
+            loose.update((a, b))
+        else:
+            clean.append((a, b))
+    comp = _union_find_min(clean)
+    for v in loose:
+        # NULL gets comp NULL; an endpoint only ever paired with NULL is alone
+        comp.setdefault(v, v)
+    ids = pairs.select(F.col(src).alias("id")).unionAll(
+        pairs.select(F.col(dst).alias("id"))
+    ).schema["id"]
+    schema = StructType([ids, StructField("comp", ids.dataType, ids.nullable)])
+    return pairs.sparkSession.createDataFrame(
+        pa.table({"id": list(comp), "comp": list(comp.values())}), schema
+    )
 
 
 def connected_components(
@@ -72,31 +154,47 @@ def connected_components(
     of per-partition spanning forests has the same components as the
     original graph, so the result is identical; the global round count
     drops because every intra-partition path is already depth 1.
+
+    **Local finish.** With ``checkpoint=True``, one bounded job first
+    collects at most ``_LOCAL_FINISH_EDGES + 1`` input edges (Arrow).
+    When the graph has at most ``_LOCAL_FINISH_EDGES`` edges (100,000,
+    about 1.6 MB of bigint pairs; duplicates count) the components come from a union-find on the driver, returned as a small
+    ``(id, comp)`` frame with the input's id type — the same rows as the
+    rounds, so ``algorithm``, ``max_iter``, ``check_every`` and
+    ``precontract`` only shape the distributed path. The collect runs on
+    the raw edges, BEFORE ``precontract``: the bound is then a property
+    of the input, and a small graph skips the contraction's Python
+    pass. Above the bound the rounds run as if the collect had not
+    happened, reading the checkpoint it materialized. ``checkpoint=False``
+    (plan inspection) skips the finish, so the plan keeps the rounds'
+    full lineage.
+
+    NULL endpoints: every endpoint is a vertex, a NULL endpoint adds one
+    NULL vertex with a NULL ``comp``, and an edge with a NULL endpoint
+    connects nothing. A self-loop vertex is its own component.
     """
     if check_every < 1:
         raise ValueError(f"check_every must be >= 1, got {check_every}")
+    if algorithm not in ("hashmin", "star"):
+        raise ValueError(f"unknown algorithm {algorithm!r}: use 'hashmin' or 'star'")
+    if checkpoint:
+        # Lazy: the local finish's bounded collect materializes every
+        # partition (its local limit runs in each one and the cache keeps
+        # whole partitions), so the upstream subtree — for the dedup tail
+        # LSH banding + Jaccard verify — runs once, and both round
+        # structures' self-unions read executor-local blocks.
+        pairs = pairs.select(F.col(src), F.col(dst)).localCheckpoint(eager=False)
+        local = _local_finish(pairs, src, dst)
+        if local is not None:
+            return local
     if precontract:
         pairs = _contract_partitions(pairs, src, dst)
-    # r12 optimization: BOTH round structures symmetrize/normalize the
-    # pair set with a self-union, so the ENTIRE upstream pairs subtree
-    # (for the dedup tail that is LSH banding + Jaccard verify + the
-    # precontract kernel) appeared twice in the first materialization
-    # job and executed twice. Checkpoint the raw projection once; the
-    # union then reads executor-local blocks. Skipped when
-    # checkpoint=False (plan-inspection mode keeps full lineage).
-    #
-    # r13 (ADVICE r12): LAZY — eager ran a dedicated job at
-    # DataFrame-construction time and pinned the pair set as a second
-    # live copy next to the derived edges checkpoint. Lazy, the first
-    # round's job materializes it (block-manager get-or-compute dedupes
-    # the self-union's two reads within that job), one fewer job per CC
-    # call and the copy appears only when the round actually runs.
-    if checkpoint:
-        pairs = pairs.select(F.col(src), F.col(dst)).localCheckpoint(eager=False)
+        if checkpoint:
+            # the rounds read the contracted edges twice (self-union /
+            # vertex set): cut here so the Python pass runs once
+            pairs = pairs.localCheckpoint(eager=False)
     if algorithm == "star":
         return _cc_star(pairs, src, dst, max_iter, checkpoint)
-    if algorithm != "hashmin":
-        raise ValueError(f"unknown algorithm {algorithm!r}: use 'hashmin' or 'star'")
 
     def _cp(df: DataFrame) -> DataFrame:
         # r13: lazy, and GATED on the flag (ADVICE r12 — plan-inspection
@@ -171,13 +269,13 @@ def _contract_partitions(pairs: DataFrame, src: str, dst: str) -> DataFrame:
     k star edges of depth 1; the global rounds start from depth 1, not
     depth k).
 
-    The per-partition loop is plain Python with path halving over a
-    value-keyed parent map — ~1M edges/s/core — consuming each Arrow
-    batch INCREMENTALLY: worker memory is O(distinct vertices in the
-    partition), never O(edges) (no batch buffering, no concat copies),
-    so the pass stays stream-shaped at any edges-per-partition. Each
-    partition's work is independent, so it scales horizontally with
-    executors.
+    The per-partition loop is :func:`_union_find_min` — plain Python
+    with path halving over a value-keyed parent map, ~1M edges/s/core —
+    consuming each Arrow batch INCREMENTALLY: worker memory is
+    O(distinct vertices in the partition), never O(edges) (no batch
+    buffering, no concat copies), so the pass stays stream-shaped at any
+    edges-per-partition. Each partition's work is independent, so it
+    scales horizontally with executors.
 
     Edges with a NULL endpoint are passed through UNCONTRACTED (union'd
     back verbatim): the downstream algorithms keep null endpoints as
@@ -190,56 +288,30 @@ def _contract_partitions(pairs: DataFrame, src: str, dst: str) -> DataFrame:
     out_schema = pairs.select(F.col(src).alias("hi"), F.col(dst).alias("lo")).schema
 
     def contract(batches):
-        parent: dict = {}
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]  # path halving
-                x = parent[x]
-            return x
-
         dtype = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            a = pdf.iloc[:, 0].to_numpy()
-            b = pdf.iloc[:, 1].to_numpy()
-            if dtype is None:
-                dtype = pdf.iloc[:, 0].dtype
-            for i in range(len(a)):
-                va, vb = a[i], b[i]
-                if va not in parent:
-                    parent[va] = va
-                if vb not in parent:
-                    parent[vb] = vb
-                ra, rb = find(va), find(vb)
-                if ra != rb:
-                    parent[ra] = rb
-        if not parent:
+
+        def edges():
+            nonlocal dtype
+            for pdf in batches:
+                if len(pdf) == 0:
+                    continue
+                if dtype is None:
+                    dtype = pdf.iloc[:, 0].dtype
+                yield from zip(pdf.iloc[:, 0].tolist(), pdf.iloc[:, 1].tolist())
+
+        comp = _union_find_min(edges())
+        if not comp:
             return
-        # min member per component is the deterministic local root; emit
-        # (member, min) for every non-root member -> a depth-1 star forest
-        comp_min: dict = {}
-        comp_size: dict = {}
-        for v in parent:
-            r = find(v)
-            cur = comp_min.get(r)
-            if cur is None or v < cur:
-                comp_min[r] = v
-            comp_size[r] = comp_size.get(r, 0) + 1
+        # emit (member, min) for every non-root member -> a depth-1 star
+        # forest. Size-1 components only arise from self-loop input edges;
+        # emit the loop so the vertex survives into the global vertex set
+        # (downstream verts derive from these pairs).
+        has_members = {r for v, r in comp.items() if v != r}
         hi_out, lo_out = [], []
-        for v in parent:
-            r = find(v)
-            mn = comp_min[r]
-            if v != mn:
+        for v, r in comp.items():
+            if v != r or r not in has_members:
                 hi_out.append(v)
-                lo_out.append(mn)
-            elif comp_size[r] == 1:
-                # size-1 components only arise from self-loop input edges;
-                # emit the loop so the vertex survives into the global
-                # vertex set (downstream verts derive from these pairs)
-                hi_out.append(v)
-                lo_out.append(v)
+                lo_out.append(r)
         yield pd.DataFrame(
             {
                 "hi": pd.Series(hi_out, dtype=dtype),
@@ -372,21 +444,21 @@ def resolve_entities(
     id_col: str,
     src: str = "doc_a",
     dst: str = "doc_b",
-    precontract: bool = True,
 ) -> DataFrame:
     """Entity resolution tail: records + verified duplicate pairs ->
     records with ``entity_id`` (the component's min member id; singletons
     keep their own id) and ``is_canonical`` (true for the min-id member —
     the deterministic representative).
 
-    ``precontract`` defaults ON here (unlike :func:`connected_components`'s
-    raw default): the r12 stage profile (BASELINE.md — tools/
-    profile_near_dup.py) measured the per-partition union-find pass
-    cutting the CC term of the composed fuzzy-dedup panel 2.7x at sf0.1
-    and 4.8x at sf1 (6.88 s -> 1.43 s) with labels asserted identical —
+    Components come from :func:`connected_components`: a pair graph of
+    at most 100k edges is solved on the driver (the local finish); a
+    larger one runs with ``precontract=True``
+    (the r12 stage profile, BASELINE.md, measured the per-partition
+    union-find pass cutting the CC term of the composed fuzzy-dedup panel
+    2.7x at sf0.1 and 4.8x at sf1, 6.88 s -> 1.43 s, labels identical —
     dup-pair graphs are exactly the shallow-component shape the
-    contraction collapses to depth 1 before any global round."""
-    comp = connected_components(pairs, src, dst, precontract=precontract)
+    contraction collapses to depth 1 before any global round)."""
+    comp = connected_components(pairs, src, dst, precontract=True)
     out = (
         records.join(comp.withColumnRenamed("id", id_col), id_col, "left")
         .withColumn("entity_id", F.coalesce(F.col("comp"), F.col(id_col)))

@@ -911,10 +911,14 @@ def fuzzy_dedup_clusters(
     frontier rule): they pass through with ``entity_id = id``.
 
     Shuffle budget: LSH's band groupBy + pair distinct (uniform hash
-    keys), two id-keyed joins bounded by duplicated mass, then CC's
-    diameter-bounded rounds on the verified-pair graph (dup clusters are
-    shallow). The quadratic exact-cluster hazard is guarded by
-    ``max_bucket`` (run exact dedup first on boilerplate-heavy corpora).
+    keys), two id-keyed joins bounded by duplicated mass, then connected
+    components on the verified-pair graph: one bounded Arrow collect,
+    and a driver-side union-find when the graph has at most 100k edges
+    (the usual case — a 2,000-doc corpus with 10 % planted near-dups
+    yields 48 candidate pairs); above that, precontract plus diameter-bounded
+    hash-min rounds (dup clusters are shallow). The quadratic
+    exact-cluster hazard is guarded by ``max_bucket`` (run exact dedup
+    first on boilerplate-heavy corpora).
     """
     from .components import resolve_entities
 
