@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import importlib
+
 import pytest
 
 from yelp_business_data_pipeline_spark.session import get_spark
@@ -20,11 +22,30 @@ def sf_dir() -> str:
 
 
 @pytest.fixture
-def distributed_cc(monkeypatch):
-    """Run ``connected_components``' distributed rounds on any graph: with
-    the local-finish bound at 0 every input is above it, so hashmin, star,
-    precontract and their round budgets run as on a graph too large to
-    collect to the driver."""
-    from yelp_business_data_pipeline_spark.operators import components
+def distributed_rounds(monkeypatch):
+    """Run the distributed rounds of ``connected_components`` and
+    ``k_core`` on any graph: with the shared local-finish bound at 0
+    every non-empty input is above it, so hashmin, star, the contraction,
+    the k-core peel and their round budgets run as on a graph too large
+    to collect to the driver."""
+    from yelp_business_data_pipeline_spark.operators import iterutil
 
-    monkeypatch.setattr(components, "_LOCAL_FINISH_EDGES", 0)
+    monkeypatch.setattr(iterutil, "_LOCAL_FINISH_EDGES", 0)
+
+
+@pytest.fixture
+def partitioned_regime(monkeypatch):
+    """Put ``pagerank`` and ``k_core`` in their Pregel-layout regime on
+    any graph: with both edge-count crossovers at 0 every input is above
+    them."""
+    from yelp_business_data_pipeline_spark.operators import graph
+
+    monkeypatch.setattr(pagerank_module(), "_PARTITION_EDGES_MIN", 0)
+    monkeypatch.setattr(graph, "_KCORE_PARTITION_EDGES_MIN", 0)
+
+
+def pagerank_module():
+    """The ``operators.pagerank`` module: the package re-exports the
+    function under the same name, so attribute access on the package
+    returns the function, where a monkeypatched constant does nothing."""
+    return importlib.import_module("yelp_business_data_pipeline_spark.operators.pagerank")

@@ -115,37 +115,6 @@ def test_undirected_flag_matches_general_path_on_random_graphs(spark):
         assert fast == _model(sym, seeds)
 
 
-def test_partition_edges_regime_matches_default(spark):
-    # partition_edges=True (Pregel layout for beyond-broadcast frontiers)
-    # is physical only — distances must be identical to the default
-    # broadcast-frontier regime and the python model, incl. combined with
-    # the undirected two-frontier dedup
-    import random
-
-    rng = random.Random(21)
-    fwd = [(rng.randrange(25), rng.randrange(25)) for _ in range(50)]
-    seeds = [fwd[0][0]]
-    assert _run(spark, fwd, seeds, partition_edges=True) == _model(fwd, seeds)
-    sym = fwd + [(d, s) for s, d in fwd]
-    assert _run(spark, sym, seeds, partition_edges=True, undirected=True) == _model(
-        sym, seeds
-    )
-
-
-def test_partition_edges_without_checkpoint_raises(spark):
-    """The Pregel layout rides the retained-partitioning checkpoints;
-    requesting it with checkpoint=False must fail loudly, not silently
-    run the default regime (pagerank enforces the same contract)."""
-    from yelp_business_data_pipeline_spark.operators.pagerank import pagerank
-
-    e = spark.createDataFrame([(1, 2)], "src long, dst long")
-    s = spark.createDataFrame([(1,)], "id long")
-    with pytest.raises(ValueError, match="partition_edges=True requires"):
-        bfs_distances(e, s, partition_edges=True, checkpoint=False)
-    with pytest.raises(ValueError, match="partition_edges=True requires"):
-        pagerank(e, partition_edges=True, checkpoint=False)
-
-
 def test_undirected_flag_chain_and_adjacent_seeds(spark):
     fwd = [(i, i + 1) for i in range(8)]
     sym = fwd + [(d, s) for s, d in fwd]

@@ -1,6 +1,6 @@
 """Connected components + entity resolution: algorithmic properties of
-the distributed rounds on known graphs (forced by the ``distributed_cc``
-fixture), the driver-side local finish against them, then the end-to-end
+the distributed rounds on known graphs (forced by the
+``distributed_rounds`` fixture), the driver-side local finish against them, then the end-to-end
 pipeline (blocking -> verify -> cluster -> canonical) on the customer
 table against a Python union-find oracle."""
 
@@ -20,7 +20,7 @@ def _cc(spark, edges):
     return {r.id: r.comp for r in connected_components(df).collect()}
 
 
-@pytest.mark.usefixtures("distributed_cc")
+@pytest.mark.usefixtures("distributed_rounds")
 def test_known_graph_shapes(spark):
     # chain 1-2-3-4 and separate triangle 10-11-12, plus pair 20-21
     got = _cc(spark, [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (10, 12), (20, 21)])
@@ -30,7 +30,7 @@ def test_known_graph_shapes(spark):
     assert got == {100: 7, 7: 7, 8: 7, 9: 7}
 
 
-@pytest.mark.usefixtures("distributed_cc")
+@pytest.mark.usefixtures("distributed_rounds")
 def test_long_path_converges(spark):
     # path of length 12: needs ~diameter rounds, well under max_iter
     edges = [(i, i + 1) for i in range(12)]
@@ -38,7 +38,7 @@ def test_long_path_converges(spark):
     assert set(got.values()) == {0} and len(got) == 13
 
 
-@pytest.mark.usefixtures("distributed_cc")
+@pytest.mark.usefixtures("distributed_rounds")
 def test_star_cc_matches_hashmin_and_union_find(spark):
     """Alternating large-star/small-star CC (algorithm='star') computes the
     identical (id, comp) map as hash-min and a Python union-find, across
@@ -63,14 +63,30 @@ def test_star_cc_matches_hashmin_and_union_find(spark):
         assert star == hm, edges
 
 
-@pytest.mark.usefixtures("distributed_cc")
+def _scattered_chain(spark, n):
+    """The chain 0-1-...-n as a frame whose two partitions hold the even
+    and the odd edges: no partition holds two adjacent edges, so the
+    per-partition contraction finds only single-edge components and
+    leaves the chain's diameter whole."""
+    edges = [(i, i + 1) for i in range(0, n, 2)] + [(i, i + 1) for i in range(1, n, 2)]
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize(edges, 2), "doc_a long, doc_b long"
+    )
+    placed = df.select("doc_a", "doc_b", F.spark_partition_id().alias("p")).collect()
+    touched = [(r.p, v) for r in placed for v in (r.doc_a, r.doc_b)]
+    assert len(placed) == n
+    assert len(set(touched)) == len(touched), "adjacent edges share a partition"
+    return df
+
+
+@pytest.mark.usefixtures("distributed_rounds")
 def test_star_cc_beats_hashmin_on_long_chains(spark):
     """A 200-node chain (diameter 199) is exactly where hash-min's
     O(diameter) rounds fail: it cannot converge inside 20 rounds, while
     star contraction finishes in O(log n) round-pairs well under the same
-    budget — the property that makes it the 100 TB path."""
-    edges = [(i, i + 1) for i in range(200)]
-    df = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    budget — the property that makes it the 100 TB path. The chain is
+    scattered over partitions so the contraction cannot shorten it."""
+    df = _scattered_chain(spark, 200)
     got = {
         r.id: r.comp
         for r in connected_components(df, max_iter=20, algorithm="star").collect()
@@ -192,22 +208,26 @@ def test_pagerank_empty_edges(spark):
     assert pagerank(e).count() == 0
 
 
-def test_pagerank_batched_convergence_checks(spark):
-    """check_every=k cuts delta actions to <= max_iter // k while keeping the
-    converged ranks within tolerance of the per-round-checked run (the extra
-    <=k-1 post-convergence iterations are sub-tol contractions)."""
+def test_pagerank_batched_convergence_checks(spark, monkeypatch):
+    """A check cadence of k cuts delta actions to <= max_iter // k while
+    keeping the converged ranks within tolerance of the per-round-checked
+    run (the extra <=k-1 post-convergence iterations are sub-tol
+    contractions)."""
+    from yelp_business_data_pipeline_spark.operators import iterutil
     from yelp_business_data_pipeline_spark.operators.pagerank import pagerank
 
+    assert iterutil._CHECK_EVERY == 4
     edge_list = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 1), (2, 4)]
     e = spark.createDataFrame(edge_list, "src long, dst long")
     s_batched, s_eager = {}, {}
     batched = {
         r.id: r.rank
-        for r in pagerank(e, max_iter=40, tol=1e-8, check_every=4, stats=s_batched).collect()
+        for r in pagerank(e, max_iter=40, tol=1e-8, stats=s_batched).collect()
     }
+    monkeypatch.setattr(iterutil, "_CHECK_EVERY", 1)
     eager = {
         r.id: r.rank
-        for r in pagerank(e, max_iter=40, tol=1e-8, check_every=1, stats=s_eager).collect()
+        for r in pagerank(e, max_iter=40, tol=1e-8, stats=s_eager).collect()
     }
     assert s_batched["delta_checks"] <= 40 // 4
     assert s_batched["delta_checks"] < s_eager["delta_checks"]
@@ -215,23 +235,30 @@ def test_pagerank_batched_convergence_checks(spark):
     for v in eager:
         assert batched[v] == pytest.approx(eager[v], abs=1e-6)
     assert sum(batched.values()) == pytest.approx(1.0, abs=1e-9)
-    with pytest.raises(ValueError, match="check_every"):
-        pagerank(e, check_every=0)
 
 
-def test_pagerank_partitioned_regime_matches_aqe_regime(spark):
-    """partition_edges=True (Pregel layout: edges placed once, retained-
-    partitioning checkpoints) must give bit-comparable ranks to the
-    small-graph AQE regime and to auto mode — the knob is physical only.
-    Covers the plain AND personalized paths plus the stats probe."""
+def test_pagerank_partitioned_regime_matches_aqe_regime(spark, monkeypatch):
+    """The Pregel layout (edges placed once, retained-partitioning
+    checkpoints) must give bit-comparable ranks to the small-graph AQE
+    regime and to the size rule — the regime is physical only. Covers
+    the plain AND personalized paths plus the stats probe."""
     from yelp_business_data_pipeline_spark.operators.pagerank import pagerank
+
+    from .conftest import pagerank_module
+
+    module = pagerank_module()
+    crossover = module._PARTITION_EDGES_MIN
+
+    def run(min_edges, **kw):
+        monkeypatch.setattr(module, "_PARTITION_EDGES_MIN", min_edges)
+        return {r.id: r.rank for r in pagerank(e, **kw).collect()}
 
     edge_list = [(1, 2), (1, 3), (2, 1), (3, 1), (3, 4), (5, 1), (2, 4), (6, 6)]
     e = spark.createDataFrame(edge_list, "src long, dst long")
     s_true, s_false, s_auto = {}, {}, {}
-    a = {r.id: r.rank for r in pagerank(e, partition_edges=True, stats=s_true).collect()}
-    b = {r.id: r.rank for r in pagerank(e, partition_edges=False, stats=s_false).collect()}
-    c = {r.id: r.rank for r in pagerank(e, stats=s_auto).collect()}
+    a = run(0, stats=s_true)
+    b = run(2**62, stats=s_false)
+    c = run(crossover, stats=s_auto)
     assert (s_true["partitioned_edges"], s_false["partitioned_edges"]) == (True, False)
     assert s_auto["partitioned_edges"] is False  # 8 edges is below any crossover
     assert set(a) == set(b) == set(c)
@@ -240,8 +267,8 @@ def test_pagerank_partitioned_regime_matches_aqe_regime(spark):
         assert a[v] == pytest.approx(c[v], abs=1e-12), v
 
     seeds = spark.createDataFrame([(1,)], "id long")
-    pa = {r.id: r.rank for r in pagerank(e, personalize=seeds, partition_edges=True).collect()}
-    pb = {r.id: r.rank for r in pagerank(e, personalize=seeds, partition_edges=False).collect()}
+    pa = run(0, personalize=seeds)
+    pb = run(2**62, personalize=seeds)
     for v in pa:
         assert pa[v] == pytest.approx(pb[v], abs=1e-12), v
 
@@ -294,7 +321,7 @@ def test_personalized_pagerank_matches_python_and_localizes(spark):
         pagerank(empty, personalize=seeds)
 
 
-@pytest.mark.usefixtures("distributed_cc")
+@pytest.mark.usefixtures("distributed_rounds")
 def test_star_algorithm_on_string_ids(spark):
     # Regression: the round-4 stats-triple convergence check summed the
     # endpoint columns directly — an ANSI cast crash on string doc ids
@@ -309,12 +336,19 @@ def test_star_algorithm_on_string_ids(spark):
     assert got == {"a": "a", "b": "a", "c": "a", "d": "d", "e": "d"}
 
 
-@pytest.mark.usefixtures("distributed_cc")
-def test_hashmin_check_every_matches_eager(spark):
-    """Batched convergence (check_every=k) returns the identical label map
-    as the eager per-round check, across window sizes that do and do not
-    divide the true round count — including k > rounds-to-converge, where
-    the final fixed-point probe must arbitrate instead of raising."""
+@pytest.mark.usefixtures("distributed_rounds")
+def test_hashmin_check_every_matches_eager(spark, monkeypatch):
+    """Batched convergence (a check cadence of k) returns the identical
+    label map as the eager per-round check, across window sizes that do
+    and do not divide the true round count — including k >
+    rounds-to-converge, where the final fixed-point probe must arbitrate
+    instead of raising."""
+    from yelp_business_data_pipeline_spark.operators import iterutil
+
+    def run(df, k):
+        monkeypatch.setattr(iterutil, "_CHECK_EVERY", k)
+        return {r.id: r.comp for r in connected_components(df).collect()}
+
     cases = [
         [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (10, 12), (20, 21)],
         [(i, i + 1) for i in range(12)],
@@ -322,28 +356,17 @@ def test_hashmin_check_every_matches_eager(spark):
     ]
     for edges in cases:
         df = spark.createDataFrame(edges, "doc_a long, doc_b long")
-        eager = {
-            r.id: r.comp for r in connected_components(df, check_every=1).collect()
-        }
+        eager = run(df, 1)
         for k in (3, 4, 50):
-            got = {
-                r.id: r.comp
-                for r in connected_components(df, check_every=k).collect()
-            }
-            assert got == eager, (edges, k)
-    with pytest.raises(ValueError, match="check_every"):
-        connected_components(
-            spark.createDataFrame([(1, 2)], "doc_a long, doc_b long"), check_every=0
-        )
+            assert run(df, k) == eager, (edges, k)
 
 
-@pytest.mark.usefixtures("distributed_cc")
+@pytest.mark.usefixtures("distributed_rounds")
 def test_precontract_matches_plain_and_union_find(spark):
     """Two-phase CC (per-partition union-find pre-contraction, then global
-    rounds) computes the identical (id, comp) map as the plain algorithms
-    and the Python oracle — across partition layouts (the contraction runs
-    per partition, so the split must not matter), both algorithms, chains,
-    self-loops, and string ids."""
+    rounds) computes the identical (id, comp) map as the Python oracle —
+    across partition layouts (the contraction runs per partition, so the
+    split must not matter), both algorithms, chains and self-loops."""
     import random
 
     rng = random.Random(11)
@@ -361,26 +384,24 @@ def test_precontract_matches_plain_and_union_find(spark):
             for algo in ("hashmin", "star"):
                 got = {
                     r.id: r.comp
-                    for r in connected_components(
-                        d, algorithm=algo, precontract=True, max_iter=60
-                    ).collect()
+                    for r in connected_components(d, algorithm=algo, max_iter=60).collect()
                 }
                 assert got == oracle, (algo, n_parts, edges[:5])
 
 
-@pytest.mark.usefixtures("distributed_cc")
+@pytest.mark.usefixtures("distributed_rounds")
 def test_precontract_string_ids(spark):
     pairs = spark.createDataFrame(
         [("b", "a"), ("c", "b"), ("e", "d"), ("f", "f")], "doc_a string, doc_b string"
     )
     got = {
         r.id: r.comp
-        for r in connected_components(pairs, algorithm="star", precontract=True).collect()
+        for r in connected_components(pairs, algorithm="star").collect()
     }
     assert got == {"a": "a", "b": "a", "c": "a", "d": "d", "e": "d", "f": "f"}
 
 
-@pytest.mark.usefixtures("distributed_cc")
+@pytest.mark.usefixtures("distributed_rounds")
 def test_precontract_single_partition_converges_in_one_round(spark):
     """With every edge in one partition, the contraction alone produces the
     final depth-1 star forest — the global phase should see an already-
@@ -391,36 +412,30 @@ def test_precontract_single_partition_converges_in_one_round(spark):
     # already flattened the chain (plain hashmin provably needs ~199 rounds)
     got = {
         r.id: r.comp
-        for r in connected_components(df, precontract=True, max_iter=3).collect()
+        for r in connected_components(df, max_iter=3).collect()
     }
     assert set(got.values()) == {0} and len(got) == 201
 
 
-@pytest.mark.usefixtures("distributed_cc")
-def test_precontract_preserves_null_endpoint_vertices(spark):
+def test_precontract_preserves_null_endpoint_vertices(spark, monkeypatch):
     """Finding from the round-5 review: null-endpoint edges must flow
     through the contraction UNCHANGED (they are passed through, not
-    dropped), so the flag stays a pure optimization — a vertex paired
-    only with NULL gets the same (v, v) output either way."""
-    pairs = spark.createDataFrame(
-        [(1, None), (None, 2), (3, 4)], "doc_a long, doc_b long"
-    )
+    dropped), so it stays a pure optimization — a vertex paired only
+    with NULL gets the same (v, v) output as from the uncontracted
+    union-find of the local finish."""
+    from yelp_business_data_pipeline_spark.operators import iterutil
+
+    edges = [(1, None), (None, 2), (3, 4)]
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    plain = {(r.id, r.comp) for r in connected_components(pairs).collect()}
+    assert plain == set(_null_aware_oracle(edges).items())
+    monkeypatch.setattr(iterutil, "_LOCAL_FINISH_EDGES", 0)
     for algo in ("hashmin", "star"):
-        plain = {
+        pre = {
             (r.id, r.comp)
             for r in connected_components(pairs, algorithm=algo).collect()
         }
-        pre = {
-            (r.id, r.comp)
-            for r in connected_components(pairs, algorithm=algo, precontract=True).collect()
-        }
         assert pre == plain, (algo, plain, pre)
-
-
-def test_check_every_validated_on_star_path(spark):
-    pairs = spark.createDataFrame([(1, 2)], "doc_a long, doc_b long")
-    with pytest.raises(ValueError, match="check_every"):
-        connected_components(pairs, algorithm="star", check_every=0)
 
 
 # ---------------------------------------------------------------------------
@@ -465,12 +480,12 @@ def _rows(df):
 
 def test_local_finish_equals_rounds_and_union_find(spark, monkeypatch):
     """The driver-side finish returns exactly the rows and schema of the
-    distributed rounds (hashmin and star, with and without precontract)
-    and of a Python union-find, on random graphs with bigint and string
+    distributed rounds (hashmin and star, after the contraction) and of a
+    Python union-find, on random graphs with bigint and string
     ids, NULL endpoints, self-loops and duplicate edges."""
     import random
 
-    from yelp_business_data_pipeline_spark.operators import components
+    from yelp_business_data_pipeline_spark.operators import iterutil
 
     rng = random.Random(5)
     graphs = [("long", [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (10, 12), (20, 21)])]
@@ -480,20 +495,18 @@ def test_local_finish_equals_rounds_and_union_find(spark, monkeypatch):
         edges += rng.sample(edges, 3)
         edges += [(rng.choice(ids), None), (None, rng.choice(ids)), (None, None)]
         graphs.append((typ, edges))
-    bound = components._LOCAL_FINISH_EDGES
+    bound = iterutil._LOCAL_FINISH_EDGES
     taken = _spy_local_finish(monkeypatch)
-    for i, (typ, edges) in enumerate(graphs):
+    for typ, edges in graphs:
         df = spark.createDataFrame(edges, f"doc_a {typ}, doc_b {typ}").repartition(3)
-        monkeypatch.setattr(components, "_LOCAL_FINISH_EDGES", bound)
+        monkeypatch.setattr(iterutil, "_LOCAL_FINISH_EDGES", bound)
         local = connected_components(df)
         rows = _rows(local)
         assert taken[-1] is True
         assert rows == sorted(_null_aware_oracle(edges).items(), key=repr), edges
-        monkeypatch.setattr(components, "_LOCAL_FINISH_EDGES", 0)
+        monkeypatch.setattr(iterutil, "_LOCAL_FINISH_EDGES", 0)
         for algo in ("hashmin", "star"):
-            dist = connected_components(
-                df, algorithm=algo, precontract=i % 2 == 1, max_iter=60
-            )
+            dist = connected_components(df, algorithm=algo, max_iter=60)
             assert taken[-1] is False
             assert _rows(dist) == rows, (algo, edges)
             assert dist.schema == local.schema, (algo, dist.schema, local.schema)
@@ -503,9 +516,9 @@ def test_local_finish_bound_is_inclusive(spark, monkeypatch):
     """With the bound at N, an N-edge input takes the local finish and an
     (N+1)-edge input the distributed rounds, with the same rows; and
     checkpoint=False (plan inspection) never collects."""
-    from yelp_business_data_pipeline_spark.operators import components
+    from yelp_business_data_pipeline_spark.operators import iterutil
 
-    monkeypatch.setattr(components, "_LOCAL_FINISH_EDGES", 4)
+    monkeypatch.setattr(iterutil, "_LOCAL_FINISH_EDGES", 4)
     taken = _spy_local_finish(monkeypatch)
     edges = [(1, 2), (2, 3), (7, 8), (8, 8), (3, 4)]
     for n in (4, 5):

@@ -58,24 +58,34 @@ def test_random_graphs_match_model(spark):
         assert _run(spark, edges, k) == _model(edges, k)
 
 
-def test_local_finish_matches_distributed_peel(spark):
-    # the local finisher replaces the distributed tail with one Arrow
-    # pass — results must be IDENTICAL (the k-core is unique) whether the
-    # finish kicks in at round 0 (default threshold), mid-cascade, or
-    # never (threshold 0). stats pins which path ran.
+def test_local_finish_matches_distributed_peel(spark, monkeypatch):
+    # the driver-side finish replaces the distributed tail with one
+    # bounded collect — results must be IDENTICAL (the k-core is unique)
+    # whether the finish kicks in at round 0 (default bound),
+    # mid-cascade, or never (bound 0). stats pins which path ran.
     import random
 
+    from yelp_business_data_pipeline_spark.operators import iterutil
+
+    bound = iterutil._LOCAL_FINISH_EDGES
     rng = random.Random(7)
     edges = [(rng.randrange(25), rng.randrange(25)) for _ in range(70)]
     for k in (2, 3):
         s_local, s_mid, s_dist = {}, {}, {}
+        monkeypatch.setattr(iterutil, "_LOCAL_FINISH_EDGES", bound)
         local = _run(spark, edges, k, stats=s_local)
-        mid = _run(spark, edges, k, local_finish_threshold=30, stats=s_mid)
-        dist = _run(spark, edges, k, local_finish_threshold=0, stats=s_dist)
+        # 56 edges; the first round leaves 54 (k=2) or 50 (k=3), so a
+        # bound of 55 finishes after exactly one distributed round
+        monkeypatch.setattr(iterutil, "_LOCAL_FINISH_EDGES", 55)
+        mid = _run(spark, edges, k, stats=s_mid)
+        monkeypatch.setattr(iterutil, "_LOCAL_FINISH_EDGES", 0)
+        dist = _run(spark, edges, k, stats=s_dist)
         assert local == mid == dist == _model(edges, k)
         assert s_local["local_finish"] and s_local["rounds"] == 0
+        assert s_mid["local_finish"] and s_mid["rounds"] == 1
         assert not s_dist["local_finish"]
-    # string ids survive the Arrow kernel round-trip
+    # string ids survive the Arrow round-trip
+    monkeypatch.setattr(iterutil, "_LOCAL_FINISH_EDGES", bound)
     sdf = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("a", "c"), ("c", "d")], "src string, dst string"
     )
@@ -83,6 +93,7 @@ def test_local_finish_matches_distributed_peel(spark):
     assert got == {"a": 2, "b": 2, "c": 2}
 
 
+@pytest.mark.usefixtures("distributed_rounds")
 def test_deep_peeling_and_max_iter(spark):
     # a path peels one layer per round from both ends under k=2: a short
     # max_iter must fail loudly, a sufficient one returns empty. The
@@ -90,8 +101,8 @@ def test_deep_peeling_and_max_iter(spark):
     # is disabled here.
     edges = [(i, i + 1) for i in range(12)]
     with pytest.raises(RuntimeError, match="stabilize"):
-        _run(spark, edges, 2, max_iter=2, local_finish_threshold=0)
-    assert _run(spark, edges, 2, max_iter=12, local_finish_threshold=0) == {}
+        _run(spark, edges, 2, max_iter=2)
+    assert _run(spark, edges, 2, max_iter=12) == {}
 
 
 def test_invalid_k(spark):
@@ -112,49 +123,56 @@ def test_empty_core_preserves_input_id_type(spark):
     assert empty.unionAll(full).count() == 3  # schema-compatible union
 
 
-def test_partition_edges_regime_matches_default(spark):
+@pytest.mark.usefixtures("partitioned_regime")
+def test_partition_edges_regime_matches_default(spark, monkeypatch):
     """The Pregel regime (symmetric frame, retained x-placement) is
     physical only — cores and in-core degrees must be identical to the
-    default regime and the python model, across local-finish settings."""
+    default regime and the python model, across local-finish bounds."""
     import random
+
+    from yelp_business_data_pipeline_spark.operators import iterutil
 
     rng = random.Random(11)
     edges = [(rng.randrange(25), rng.randrange(25)) for _ in range(70)]
     for k in (2, 3):
-        for thr in (0, 30):
+        # 63 edges: k=2 peels none, k=3 leaves 61 after its first round,
+        # so a bound of 62 finishes mid-cascade for k=3 only
+        for bound in (0, 62):
+            monkeypatch.setattr(iterutil, "_LOCAL_FINISH_EDGES", bound)
             s = {}
-            got = _run(
-                spark, edges, k, partition_edges=True,
-                local_finish_threshold=thr, stats=s,
-            )
-            assert got == _model(edges, k), (k, thr)
+            got = _run(spark, edges, k, stats=s)
+            assert got == _model(edges, k), (k, bound)
             assert s["partitioned_edges"] is True
+            assert s["local_finish"] is (bound > 0 and k == 3), (k, bound)
         # distributed-only path must really have peeled rounds
+        monkeypatch.setattr(iterutil, "_LOCAL_FINISH_EDGES", 0)
         s = {}
-        _run(spark, edges, 2, partition_edges=True, local_finish_threshold=0, stats=s)
+        _run(spark, edges, 2, stats=s)
         assert s["rounds"] >= 1 and not s["local_finish"]
     # empty core + max_iter contract hold in the regime too
     chain = [(i, i + 1) for i in range(12)]
-    assert _run(spark, chain, 2, partition_edges=True, local_finish_threshold=0,
-                max_iter=12) == {}
+    assert _run(spark, chain, 2, max_iter=12) == {}
     with pytest.raises(RuntimeError, match="stabilize"):
-        _run(spark, chain, 2, partition_edges=True, local_finish_threshold=0,
-             max_iter=2)
-    # string ids: symmetrize + local finish round-trip
+        _run(spark, chain, 2, max_iter=2)
+    # string ids: symmetrize + local finish round-trip (4 edges, above a
+    # bound of 3 until the first round peels "d")
+    monkeypatch.setattr(iterutil, "_LOCAL_FINISH_EDGES", 3)
     sdf = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("a", "c"), ("c", "d")], "src string, dst string"
     )
-    got = {r.id: r.degree for r in k_core(sdf, 2, partition_edges=True).collect()}
-    assert got == {"a": 2, "b": 2, "c": 2}
-
-
-def test_partition_edges_requires_checkpoint(spark):
-    df = spark.createDataFrame([(1, 2)], "src long, dst long")
-    with pytest.raises(ValueError, match="partition_edges=True requires"):
-        k_core(df, 2, partition_edges=True, checkpoint=False)
-    # auto mode under checkpoint=False stays in the default regime
     s = {}
-    k_core(df, 1, checkpoint=False, local_finish_threshold=0, stats=s).collect()
+    got = {r.id: r.degree for r in k_core(sdf, 2, stats=s).collect()}
+    assert got == {"a": 2, "b": 2, "c": 2}
+    assert s["partitioned_edges"] and s["local_finish"] and s["rounds"] == 1
+
+
+@pytest.mark.usefixtures("partitioned_regime")
+def test_partition_edges_requires_checkpoint(spark):
+    # the Pregel layout is carried by the checkpoints: checkpoint=False
+    # stays in the default regime even above the crossover
+    df = spark.createDataFrame([(1, 2)], "src long, dst long")
+    s = {}
+    k_core(df, 1, checkpoint=False, stats=s).collect()
     assert s["partitioned_edges"] is False
 
 
@@ -199,6 +217,7 @@ def test_partitioned_regime_round_plan_has_no_edge_exchange(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
+@pytest.mark.usefixtures("partitioned_regime", "distributed_rounds")
 def test_bulk_peel_broadcast_gate_falls_back_and_stays_exact(spark, monkeypatch):
     """A bulk round whose dropped-vertex set exceeds the broadcast bound
     must fall back to AQE sizing (counted in stats) and still produce
@@ -212,9 +231,7 @@ def test_bulk_peel_broadcast_gate_falls_back_and_stays_exact(spark, monkeypatch)
     rng = random.Random(23)
     edges = [(rng.randrange(30), rng.randrange(30)) for _ in range(90)]
     s = {}
-    got = _run(
-        spark, edges, 3, partition_edges=True, local_finish_threshold=0, stats=s
-    )
+    got = _run(spark, edges, 3, stats=s)
     assert got == _model(edges, 3)
     # every round that actually drops vertices takes the unbroadcast
     # branch (the final stabilizing round drops none, so 0 <= bound)
@@ -223,7 +240,5 @@ def test_bulk_peel_broadcast_gate_falls_back_and_stays_exact(spark, monkeypatch)
     # with the real bound, small graphs never pay the drop-side count
     s2 = {}
     monkeypatch.setattr(G, "_KCORE_BROADCAST_DROP_MAX", 5_000_000)
-    got2 = _run(
-        spark, edges, 3, partition_edges=True, local_finish_threshold=0, stats=s2
-    )
+    got2 = _run(spark, edges, 3, stats=s2)
     assert got2 == got and "unbroadcast_rounds" not in s2

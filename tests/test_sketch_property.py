@@ -43,7 +43,7 @@ def test_mg_bounds_contain_exact_for_any_input(spark, items, m, n_parts):
             assert true <= row.mg_err, (it, true, row.mg_err, m, n_parts)
 
 
-# distributed_cc only sets a module constant, so sharing one instance
+# distributed_rounds only sets a module constant, so sharing one instance
 # across the generated examples is intended
 @settings(
     max_examples=10,
@@ -56,7 +56,7 @@ def test_mg_bounds_contain_exact_for_any_input(spark, items, m, n_parts):
     ),
     st.integers(min_value=1, max_value=4),
 )
-@pytest.mark.usefixtures("distributed_cc")
+@pytest.mark.usefixtures("distributed_rounds")
 def test_precontract_cc_equals_union_find_for_any_graph(spark, edges, n_parts):
     from yelp_business_data_pipeline_spark.operators.components import (
         connected_components,
@@ -68,8 +68,6 @@ def test_precontract_cc_equals_union_find_for_any_graph(spark, edges, n_parts):
     df = spark.createDataFrame(edges, "doc_a long, doc_b long").repartition(n_parts)
     got = {
         r.id: r.comp
-        for r in connected_components(
-            df, algorithm="star", precontract=True, max_iter=60
-        ).collect()
+        for r in connected_components(df, algorithm="star", max_iter=60).collect()
     }
     assert got == oracle

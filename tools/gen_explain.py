@@ -146,9 +146,9 @@ COMMENTARY = {
         "each parent's two target ranks and equi-joining on "
         "(nation, rank) — no non-equi join, no per-nation cartesian. "
         "Each level: one frontier join (the frontier BROADCASTS under "
-        "AQE, so the edge side never shuffles — the default regime; "
-        "partition_edges=True pins the Pregel layout for beyond-"
-        "broadcast frontiers) + one dedup anti-join against only the "
+        "AQE, so the edge side never shuffles — the one regime; the "
+        "Pregel layout measured slower at sf0.1 and sf1) + one dedup "
+        "anti-join against only the "
         "last TWO frontiers (undirected invariant), with the lineage "
         "cut and the emptiness test fused into one lazy-checkpoint job "
         "per level."
@@ -159,10 +159,10 @@ COMMENTARY = {
         "expansion, no basket self-join) feeds rounds of one degree "
         "groupBy + two semi-joins on a shrinking edge set, each round "
         "one fused lazy-checkpoint+count job. Once the survivors fit "
-        "one task the cascade finishes as ONE exact Arrow peel (local "
-        "finish) — at sf0.1 the 3.6k-edge graph takes that path "
-        "immediately (2.4s -> 0.5s), at 100 TB the early rounds stay "
-        "distributed."
+        "the shared 100k-edge bound, one bounded Arrow collect hands "
+        "them to an exact driver-side peel (local finish) — at sf0.1 "
+        "the 3.6k-edge graph takes that path before any round, at "
+        "100 TB the early rounds stay distributed."
     ),
     "gopher_repetition_panel": (
         "Zero-shuffle Arrow kernel: every Gopher repetition counter "
@@ -476,8 +476,10 @@ SPECIAL = {
     "connected_components star round (checkpoint=False)": (
         _cc_star_round_plan,
         "One large-star/small-star round-pair (converged single component "
-        "shown): groupBy(min) + same-key equi-join per half-round, a "
-        "single distinct per pair, no cartesian anywhere. Round count is "
+        "shown) over the per-partition contraction's output (one "
+        "MapInPandas union-find pass, no exchange): groupBy(min) + "
+        "same-key equi-join per half-round, a single distinct per pair, "
+        "no cartesian anywhere. Round count is "
         "O(log^2 n) regardless of graph diameter — the property that "
         "lets the friendship chains (diameter ~600 at sf0.1) converge in "
         "~5 pairs where hash-min label propagation would need ~300 "

@@ -23,6 +23,8 @@ import os
 import sys
 import time
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
 from yelp_business_data_pipeline_spark.plans import QUERIES
 from yelp_business_data_pipeline_spark.session import get_spark
 

@@ -23,18 +23,17 @@ history). Termination: the frontier count (one 1-row aggregate per
 level, same job as the checkpoint read) hits zero, or ``max_depth``
 raises loudly.
 
-Two physical regimes (``partition_edges``), with the OPPOSITE default
-from pagerank — measured, not assumed (BASELINE.md round-6): BFS
-frontiers are small relative to the edge set, so under the default AQE
-regime each level's frontier×edges join plans as a BROADCAST of the
-frontier and the edge side never shuffles at all — faster at BOTH
-measured scales (sf0.1 3.1 s vs 4.9 s, sf1 5.9 s vs 6.9 s). The Pregel
-layout (edges hash-placed on source once, retained-partitioning
-checkpoints, ``partition_edges=True``) only wins once frontiers outgrow
-the broadcast threshold — high-fanout graphs where a level's frontier is
-itself a large fraction of the vertex set; pagerank lives there
-permanently (its "frontier" is ALL vertices every round), which is why
-its default is the placed-edges regime above 200k edges.
+One physical regime, measured against the Pregel layout pagerank uses
+above its crossover (BASELINE.md round-6): BFS frontiers are small
+relative to the edge set, so under AQE each level's frontier×edges join
+plans as a BROADCAST of the frontier and the edge side never shuffles at
+all. Placing the edges on their source once, with retained-partitioning
+checkpoints, measured slower at both scales (sf0.1 4.9 s vs 3.1 s, sf1
+6.9 s vs 5.9 s); it would only win once frontiers outgrow the broadcast
+threshold — high-fanout graphs where one level's frontier is a large
+fraction of the vertex set. Pagerank lives there permanently (its
+"frontier" is ALL vertices every round), which is why it switches to the
+placed-edges regime above 200k edges.
 
 Directed by default; pass the symmetrized edge set (union both
 directions) for undirected distance, exactly like the other graph
@@ -56,8 +55,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .iterutil import localcheckpoint_keep_partitioning, localcheckpoint_partitioned
-
 
 def bfs_distances(
     edges: DataFrame,
@@ -68,59 +65,25 @@ def bfs_distances(
     max_depth: int = 30,
     checkpoint: bool = True,
     undirected: bool = False,
-    partition_edges: bool = False,
 ) -> DataFrame:
     """(id, dist): minimum hop count from any seed in ``sources`` (a
     one-column DataFrame of vertex ids, dist 0) to every reachable
     vertex. Unreachable vertices are absent from the output (left-join
     against a vertex frame and fill if a dense result is needed).
 
-    ``partition_edges=True`` switches to the Pregel layout (module
-    docstring) for graphs whose frontiers outgrow the broadcast
-    threshold; the default broadcast-frontier regime never shuffles the
-    edge side at all and measures faster at every scale this repo can
-    generate. Results are identical either way (pinned in
-    tests/test_bfs.py).
-
     Raises RuntimeError when a frontier still exists after ``max_depth``
     levels — distances beyond the cap would be silently wrong, so the
     cap fails loudly (the star-CC convention).
-
-    ``partition_edges=True`` requires ``checkpoint=True``: the Pregel
-    regime IS the retained-partitioning checkpoint layout (without
-    checkpoints there is no materialized layout to retain, and the
-    flag would silently do nothing), so the combination raises.
     """
-    if partition_edges and not checkpoint:
-        raise ValueError(
-            "bfs_distances: partition_edges=True requires checkpoint=True — "
-            "the Pregel layout is carried by the retained-partitioning "
-            "checkpoints; without them the flag has no effect"
-        )
 
     def _cp(df: DataFrame, eager: bool = True) -> DataFrame:
-        if not checkpoint:
-            return df
-        if partition_edges:
-            # keep-partitioning variant: the frontier's plan ends keyed on
-            # id (distinct/anti-join), so the retained hash layout makes
-            # the next level's frontier×edges join exchange-free on BOTH
-            # sides
-            return localcheckpoint_keep_partitioning(df, eager=eager)
-        return df.localCheckpoint(eager=eager)
+        return df.localCheckpoint(eager=eager) if checkpoint else df
 
-    e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d")).filter(
-        F.col("_s").isNotNull() & F.col("_d").isNotNull()
+    e = _cp(
+        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d")).filter(
+            F.col("_s").isNotNull() & F.col("_d").isNotNull()
+        )
     )
-    if checkpoint:
-        if partition_edges:
-            # one up-front shuffle places every edge by its source vertex;
-            # the retained hashpartitioning makes every per-level frontier
-            # join exchange-free on the edge side (plan-pinned in
-            # tests/test_iterutil.py)
-            e = localcheckpoint_partitioned(e, "_s")
-        else:
-            e = e.localCheckpoint()
     frontier = _cp(
         sources.select(F.col(id_col).alias("id")).distinct().withColumn(
             "dist", F.lit(0)

@@ -8,24 +8,27 @@ graph -> one canonical record per component. The first two stages live in
 ``operators.dedup`` / ``operators.similarity``; this module supplies the
 last two.
 
-Local finish (the iterative-tail pattern of ``graph.k_core``): a graph of
-at most ``_LOCAL_FINISH_EDGES`` input edges is collected in ONE bounded
-Arrow job and solved by a union-find on the driver. A verified-pair graph
-is usually that small, and on it every distributed round is pure per-job
-overhead: on the fuzzy-dedup tail of a 2,000-doc corpus (48 candidate
-pairs, 45 merged docs) the rounds take 31 jobs and 3.2 s, the finish 6
-jobs and 0.8 s (4 cores).
+Local finish (shared with ``graph.k_core`` through
+``iterutil.collect_bounded``): a graph of at most
+``iterutil._LOCAL_FINISH_EDGES`` input edges is collected in ONE bounded
+Arrow job and solved by a union-find on the driver. A verified-pair
+graph is usually that small, and on it every distributed round is pure
+per-job overhead: on the fuzzy-dedup tail of a 2,000-doc corpus (48
+candidate pairs, 45 merged docs) the rounds take 31 jobs and 3.2 s, the
+finish 6 jobs and 0.8 s (4 cores).
 
-Distributed rounds (graphs above the bound): hash-min label propagation
-(the standard map-reduce CC — e.g. Rastogi et al. 2013 "Finding Connected
-Components in Map-Reduce in Logarithmic Rounds" use this as the HCC
-baseline): every vertex starts labeled with its own id; each round every
-vertex takes the min label in its closed neighborhood; converged when no
-label changes. Rounds are bounded by the graph diameter — dup-cluster
-graphs are shallow (stars / short chains), so 3-5 rounds typically
-converge; ``max_iter`` caps runaway graphs and convergence is checked
-with a cheap aggregate, not a collect. The star contraction and the
-per-partition precontract pass are the alternatives for deep graphs.
+Distributed rounds (graphs above the bound): a per-partition
+union-find pass first contracts each partition's edges to depth-1 stars
+(no shuffle), then hash-min label propagation (the standard map-reduce
+CC — e.g. Rastogi et al. 2013 "Finding Connected Components in
+Map-Reduce in Logarithmic Rounds" use this as the HCC baseline): every
+vertex starts labeled with its own id; each round every vertex takes the
+min label in its closed neighborhood; converged when no label changes.
+Rounds are bounded by the graph diameter — dup-cluster graphs are
+shallow (stars / short chains), so 3-5 rounds typically converge;
+``max_iter`` caps runaway graphs and convergence is checked with a cheap
+aggregate, not a collect. The star contraction is the alternative for
+deep graphs.
 
 Spark shapes: one shuffle per round (groupBy vertex on the propagated
 labels); lineage is cut with localCheckpoint each round so the iterative
@@ -46,14 +49,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-#: Largest input edge count that ``connected_components`` finishes on the
-#: driver — the k_core local-finish default. The crossover lies above 4x
-#: this (4 cores, precontract on, median of 3, local finish vs rounds):
-#: 100k edges in 6-member stars 1.2 vs 4.1 s (hashmin), 400k 3.9 vs 6.8 s;
-#: a 100k-edge random functional graph 1.2 vs 15.4 s (star), 400k 3.7 vs
-#: 36.8 s. It is not raised: the driver holds every vertex in Python
-#: dicts.
-_LOCAL_FINISH_EDGES = 100_000
+from . import iterutil
 
 
 def _union_find_min(edges: Iterable[tuple]) -> dict:
@@ -84,14 +80,12 @@ def _union_find_min(edges: Iterable[tuple]) -> dict:
 
 
 def _local_finish(pairs: DataFrame, src: str, dst: str) -> DataFrame | None:
-    """``(id, comp)`` from a driver-side union-find when ``pairs`` holds
-    at most ``_LOCAL_FINISH_EDGES`` rows, else None. One bounded Arrow
-    job: ``toArrow`` keeps nullable bigint ids integral (``toPandas``
-    would widen them to float64)."""
+    """``(id, comp)`` from a driver-side union-find when ``pairs`` fits
+    ``iterutil.collect_bounded``, else None."""
     import pyarrow as pa
 
-    tbl = pairs.limit(_LOCAL_FINISH_EDGES + 1).toArrow()
-    if tbl.num_rows > _LOCAL_FINISH_EDGES:
+    tbl = iterutil.collect_bounded(pairs)
+    if tbl is None:
         return None
     clean, loose = [], set()
     for a, b in zip(tbl.column(0).to_pylist(), tbl.column(1).to_pylist()):
@@ -119,8 +113,6 @@ def connected_components(
     max_iter: int = 20,
     algorithm: str = "hashmin",
     checkpoint: bool = True,
-    check_every: int = 4,
-    precontract: bool = False,
 ) -> DataFrame:
     """(id, comp) for every vertex appearing in ``pairs``; comp =
     min vertex id reachable. Raises if ``max_iter`` rounds don't converge.
@@ -138,43 +130,40 @@ def connected_components(
       (the friendship chains here are diameter ~n/2: hash-min would need
       hundreds of rounds at sf0.1 where star needs ~a dozen).
 
-    ``check_every``: convergence is a driver action (a join + count).
-    The schedule is HYBRID: every round through round 4 (the module's
+    Convergence is a driver action (a join + count). The hashmin
+    schedule is HYBRID: every round through round 4 (the module's
     documented workload — dup-cluster graphs — converges in 3-5 rounds,
     and a wasted propagation round costs MORE than the check it would
-    skip), then every ``check_every`` rounds (deep graphs amortize the
-    driver round-trips, the pagerank/star discipline). Batched checks
-    are valid because min-propagation labels are monotone
-    non-increasing: labels equal across a k-round window proves no
-    label moved anywhere inside it.
+    skip), then every ``iterutil._CHECK_EVERY`` rounds (deep graphs
+    amortize the driver round-trips, the pagerank/star discipline).
+    Batched checks are valid because min-propagation labels are monotone
+    non-increasing: labels equal across a k-round window proves no label
+    moved anywhere inside it.
 
-    ``precontract``: run a per-partition union-find pass (Arrow, no
-    shuffle) that collapses each partition's edges to (member, local-min)
-    star edges BEFORE the global rounds — classic two-phase CC. The union
-    of per-partition spanning forests has the same components as the
-    original graph, so the result is identical; the global round count
+    Before either round structure, a per-partition union-find pass
+    (Arrow, no shuffle) collapses each partition's edges to (member,
+    local-min) star edges — classic two-phase CC. The union of
+    per-partition spanning forests has the same components as the
+    original graph, so the result is unchanged; the global round count
     drops because every intra-partition path is already depth 1.
 
     **Local finish.** With ``checkpoint=True``, one bounded job first
-    collects at most ``_LOCAL_FINISH_EDGES + 1`` input edges (Arrow).
-    When the graph has at most ``_LOCAL_FINISH_EDGES`` edges (100,000,
-    about 1.6 MB of bigint pairs; duplicates count) the components come from a union-find on the driver, returned as a small
-    ``(id, comp)`` frame with the input's id type — the same rows as the
-    rounds, so ``algorithm``, ``max_iter``, ``check_every`` and
-    ``precontract`` only shape the distributed path. The collect runs on
-    the raw edges, BEFORE ``precontract``: the bound is then a property
-    of the input, and a small graph skips the contraction's Python
-    pass. Above the bound the rounds run as if the collect had not
-    happened, reading the checkpoint it materialized. ``checkpoint=False``
-    (plan inspection) skips the finish, so the plan keeps the rounds'
-    full lineage.
+    collects at most ``iterutil._LOCAL_FINISH_EDGES + 1`` input edges
+    (Arrow). When the graph has at most that many edges (100,000;
+    duplicates count) the components come from a union-find on the
+    driver, returned as a small ``(id, comp)`` frame with the input's id
+    type — the same rows as the rounds, so ``algorithm`` and ``max_iter``
+    only shape the distributed path. The collect runs on the raw edges,
+    BEFORE the contraction: the bound is then a property of the input,
+    and a small graph skips the contraction's Python pass. Above the
+    bound the rounds run as if the collect had not happened, reading the
+    checkpoint it materialized. ``checkpoint=False`` (plan inspection)
+    skips the finish, so the plan keeps the rounds' full lineage.
 
     NULL endpoints: every endpoint is a vertex, a NULL endpoint adds one
     NULL vertex with a NULL ``comp``, and an edge with a NULL endpoint
     connects nothing. A self-loop vertex is its own component.
     """
-    if check_every < 1:
-        raise ValueError(f"check_every must be >= 1, got {check_every}")
     if algorithm not in ("hashmin", "star"):
         raise ValueError(f"unknown algorithm {algorithm!r}: use 'hashmin' or 'star'")
     if checkpoint:
@@ -187,12 +176,11 @@ def connected_components(
         local = _local_finish(pairs, src, dst)
         if local is not None:
             return local
-    if precontract:
-        pairs = _contract_partitions(pairs, src, dst)
-        if checkpoint:
-            # the rounds read the contracted edges twice (self-union /
-            # vertex set): cut here so the Python pass runs once
-            pairs = pairs.localCheckpoint(eager=False)
+    pairs = _contract_partitions(pairs, src, dst)
+    if checkpoint:
+        # the rounds read the contracted edges twice (self-union /
+        # vertex set): cut here so the Python pass runs once
+        pairs = pairs.localCheckpoint(eager=False)
     if algorithm == "star":
         return _cc_star(pairs, src, dst, max_iter, checkpoint)
 
@@ -241,7 +229,7 @@ def connected_components(
     anchor = labels  # snapshot at the last convergence check
     for rnd in range(1, max_iter + 1):
         labels = _round(labels)
-        if rnd <= 4 or rnd % check_every == 0:
+        if rnd <= 4 or rnd % iterutil._CHECK_EVERY == 0:
             if _same(labels, anchor):
                 return labels
             anchor = labels
@@ -281,7 +269,7 @@ def _contract_partitions(pairs: DataFrame, src: str, dst: str) -> DataFrame:
     back verbatim): the downstream algorithms keep null endpoints as
     vertices in their own (degenerate) way, and replacing only the
     clean subgraph by its spanning forest preserves that behavior
-    exactly — the flag stays a pure optimization.
+    exactly — the contraction stays a pure optimization.
     """
     import pandas as pd
 
@@ -452,13 +440,13 @@ def resolve_entities(
 
     Components come from :func:`connected_components`: a pair graph of
     at most 100k edges is solved on the driver (the local finish); a
-    larger one runs with ``precontract=True``
-    (the r12 stage profile, BASELINE.md, measured the per-partition
-    union-find pass cutting the CC term of the composed fuzzy-dedup panel
-    2.7x at sf0.1 and 4.8x at sf1, 6.88 s -> 1.43 s, labels identical —
-    dup-pair graphs are exactly the shallow-component shape the
-    contraction collapses to depth 1 before any global round)."""
-    comp = connected_components(pairs, src, dst, precontract=True)
+    larger one is contracted per partition before its hashmin rounds
+    (the r12 stage profile, BASELINE.md, measured that union-find pass
+    cutting the CC term of the composed fuzzy-dedup panel 2.7x at sf0.1
+    and 4.8x at sf1, 6.88 s -> 1.43 s, labels identical — dup-pair
+    graphs are exactly the shallow-component shape the contraction
+    collapses to depth 1 before any global round)."""
+    comp = connected_components(pairs, src, dst)
     out = (
         records.join(comp.withColumnRenamed("id", id_col), id_col, "left")
         .withColumn("entity_id", F.coalesce(F.col("comp"), F.col(id_col)))

@@ -915,8 +915,8 @@ def fuzzy_dedup_clusters(
     components on the verified-pair graph: one bounded Arrow collect,
     and a driver-side union-find when the graph has at most 100k edges
     (the usual case — a 2,000-doc corpus with 10 % planted near-dups
-    yields 48 candidate pairs); above that, precontract plus diameter-bounded
-    hash-min rounds (dup clusters are shallow). The quadratic
+    yields 48 candidate pairs); above that, a per-partition contraction
+    plus diameter-bounded hash-min rounds (dup clusters are shallow). The quadratic
     exact-cluster hazard is guarded by ``max_bucket`` (run exact dedup
     first on boilerplate-heavy corpora).
     """

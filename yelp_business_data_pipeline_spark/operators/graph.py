@@ -27,7 +27,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import iterutil
 from .cleaning import duplicate_keys
+from .iterutil import localcheckpoint_keep_partitioning, localcheckpoint_partitioned
 
 NODE_LABELS = ("User", "Business", "Review", "Category", "City", "State", "Feature")
 REL_TYPES = (
@@ -575,52 +577,59 @@ def link_prediction_features(
     )
 
 
-def _k_core_local_peel(edges: DataFrame, k: int) -> DataFrame:
-    """Exact k-core of an edge frame SMALL enough for one task: collapse
-    to a single partition and peel with the textbook bucket/queue
-    algorithm in one Arrow pass. The result is the unique k-core, so it
-    is bit-identical to however many distributed rounds it replaces."""
-    import pandas as pd
+def _k_core_local_finish(
+    edges: DataFrame, k: int, stats: dict, rows: int | None = None
+) -> DataFrame | None:
+    """Exact k-core of canonical ``(a, b)`` edges that fit
+    ``iterutil.collect_bounded`` (``rows``: their count, when already
+    known), peeled on the driver with the textbook bucket/queue
+    algorithm; None when they do not fit. The result is the unique
+    k-core, so it is identical to however many distributed rounds it
+    replaces."""
+    from collections import deque
+
+    import pyarrow as pa
     from pyspark.sql.types import LongType, StructField, StructType
 
-    out_schema = StructType(
+    tbl = iterutil.collect_bounded(edges, rows)
+    if tbl is None:
+        return None
+    stats["local_finish"] = True
+    adj: dict = {}
+    for a, b in zip(tbl.column(0).to_pylist(), tbl.column(1).to_pylist()):
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    q = deque(v for v, nb in adj.items() if len(nb) < k)
+    while q:
+        v = q.popleft()
+        nbs = adj.pop(v, None)
+        if nbs is None:  # already peeled (queued twice)
+            continue
+        for u in nbs:
+            s = adj.get(u)
+            if s is not None:
+                s.discard(v)
+                if len(s) < k:
+                    q.append(u)
+    schema = StructType(
         [
             StructField("id", edges.schema["a"].dataType),
             StructField("degree", LongType()),
         ]
     )
-
-    def peel(batches):
-        from collections import deque
-
-        adj: dict = {}
-        for pdf in batches:  # incremental: never holds >1 Arrow batch + adj
-            for a, b in zip(pdf["a"].tolist(), pdf["b"].tolist()):
-                adj.setdefault(a, set()).add(b)
-                adj.setdefault(b, set()).add(a)
-        q = deque(v for v, nb in adj.items() if len(nb) < k)
-        while q:
-            v = q.popleft()
-            nbs = adj.pop(v, None)
-            if nbs is None:  # already peeled (queued twice)
-                continue
-            for u in nbs:
-                s = adj.get(u)
-                if s is not None:
-                    s.discard(v)
-                    if len(s) < k:
-                        q.append(u)
-        ids = list(adj)
-        yield pd.DataFrame({"id": ids, "degree": [len(adj[v]) for v in ids]})
-
-    return edges.coalesce(1).mapInPandas(peel, out_schema)
+    out = pa.table(
+        {
+            "id": pa.array(list(adj), tbl.column(0).type),
+            "degree": pa.array([len(nb) for nb in adj.values()], pa.int64()),
+        }
+    )
+    return edges.sparkSession.createDataFrame(out, schema)
 
 
 def _k_core_partitioned(
     edges: DataFrame,
     k: int,
     max_iter: int,
-    local_finish_threshold: int,
     stats: dict,
 ) -> DataFrame:
     """k-core peel in the Pregel layout (the pagerank regime, adapted to
@@ -646,8 +655,6 @@ def _k_core_partitioned(
     neighbor appears exactly once per orientation), so results are
     bit-identical across regimes (pinned in tests/test_kcore.py).
     """
-    from .iterutil import localcheckpoint_keep_partitioning, localcheckpoint_partitioned
-
     sym = localcheckpoint_partitioned(
         edges.select(F.col("a").alias("x"), F.col("b").alias("y")).unionAll(
             edges.select(F.col("b").alias("x"), F.col("a").alias("y"))
@@ -662,15 +669,17 @@ def _k_core_partitioned(
                 .limit(0)
                 .withColumn("degree", F.lit(0).cast("bigint"))
             )
-        if 0 < local_finish_threshold >= n_dir // 2:
-            # canonical orientation had a = greatest(endpoints)
-            stats["local_finish"] = True
-            return _k_core_local_peel(
-                sym.filter(F.col("x") > F.col("y")).select(
-                    F.col("x").alias("a"), F.col("y").alias("b")
-                ),
-                k,
-            )
+        # canonical orientation had a = greatest(endpoints)
+        local = _k_core_local_finish(
+            sym.filter(F.col("x") > F.col("y")).select(
+                F.col("x").alias("a"), F.col("y").alias("b")
+            ),
+            k,
+            stats,
+            n_dir // 2,
+        )
+        if local is not None:
+            return local
         deg = sym.groupBy("x").agg(F.count(F.lit(1)).alias("degree"))
         if n_dir > _KCORE_BROADCAST_DROP_MAX:
             # the gate below needs dropped.count(); without a cut that
@@ -739,9 +748,7 @@ def k_core(
     dst: str = "dst",
     max_iter: int = 50,
     checkpoint: bool = True,
-    local_finish_threshold: int = 100_000,
     stats: dict | None = None,
-    partition_edges: bool | None = None,
 ) -> DataFrame:
     """Vertices of the k-core: the maximal subgraph where every vertex
     has degree >= k (undirected; parallel edges and self-loops ignored).
@@ -760,27 +767,26 @@ def k_core(
     lineage never compounds; convergence = edge count unchanged (exact:
     peeling only ever removes edges, so a stable count IS a fixpoint).
 
-    **Local finish** (the iterative-tail pattern, same family as
-    connected_components' precontract): peeling shrinks the edge set
+    **Local finish** (shared with connected_components through
+    ``iterutil.collect_bounded``): peeling shrinks the edge set
     monotonically, and the tail of the cascade is many tiny rounds whose
-    cost is pure per-round job overhead. Once the surviving edge count
-    drops to ``local_finish_threshold`` (including round 0 — a small
-    input skips the distributed loop entirely), the remaining peel runs
-    as ONE Arrow pass over a single-partition collapse of the edges —
-    exact, so the result is identical to the distributed rounds it
-    replaces (pinned across both paths in tests/test_kcore.py). At 100 TB
-    the early rounds stay distributed and the threshold bounds the single
-    task's memory (~tens of MB at the default); ``0`` disables the finish
-    (every round distributed — the ``max_iter`` contract then applies to
-    the whole cascade). The local finisher is not round-bounded, so
-    ``max_iter`` governs only distributed rounds.
+    cost is pure per-round job overhead. Before the first round, one
+    bounded job collects the canonical edges; a graph of at most
+    ``iterutil._LOCAL_FINISH_EDGES`` edges is peeled on the driver and
+    never runs a distributed round. A larger one runs rounds until the
+    round's edge count says the survivors fit, then collects them and
+    peels the rest on the driver — exact, so the result is identical to
+    the distributed rounds it replaces (pinned across both paths in
+    tests/test_kcore.py). At 100 TB the early rounds stay distributed and
+    the bound caps the driver's memory (~tens of MB). The driver peel is
+    not round-bounded, so ``max_iter`` governs only distributed rounds.
+    ``checkpoint=False`` (plan inspection) skips the finish.
 
-    ``partition_edges`` picks the physical regime (pagerank's knob,
-    re-measured for the peel shape — BASELINE.md round-7 table): ``None``
-    (default) sizes the deduped edge set off the round-0 count (already
-    paid) and switches at the measured crossover; ``True``/``False``
-    force it. The Pregel regime symmetrizes the edge set (each
-    undirected edge stored in BOTH orientations — 2x rows) and
+    The physical regime is picked from the round-0 edge count (already
+    paid) at the measured ``_KCORE_PARTITION_EDGES_MIN`` crossover
+    (pagerank's rule, re-measured for the peel shape — BASELINE.md
+    round-7 table). Above it, the Pregel regime symmetrizes the edge set
+    (each undirected edge stored in BOTH orientations — 2x rows) and
     hash-places it ONCE on the first endpoint with retained-partitioning
     checkpoints: the per-round degree groupBy and the keep-side
     semi-join are then exchange-free EVERY round (degree output shares
@@ -789,9 +795,8 @@ def k_core(
     converts to a broadcast join in every round past the first bulk peel,
     so the edge frame stops shuffling entirely. At 100 TB this is the
     only viable shape: the default regime re-exchanges the full
-    surviving edge set once per round. Requires ``checkpoint=True``
-    (the layout is carried by the checkpoints — the bfs/pagerank
-    contract; raising beats a silently inert flag).
+    surviving edge set once per round. The layout is carried by the
+    checkpoints, so ``checkpoint=False`` always plans the default regime.
 
     Pass a ``stats`` dict to receive ``{"rounds": n, "local_finish":
     bool, "partitioned_edges": bool}`` (observability + test probe).
@@ -801,16 +806,11 @@ def k_core(
     """
     if k < 1:
         raise ValueError(f"k_core: k must be >= 1, got {k}")
-    if partition_edges and not checkpoint:
-        raise ValueError(
-            "k_core: partition_edges=True requires checkpoint=True — the "
-            "edge placement is carried by the retained-partitioning "
-            "checkpoints; without them the flag has no effect"
-        )
     if stats is None:
         stats = {}
     stats["rounds"] = 0
     stats["local_finish"] = False
+    stats["partitioned_edges"] = False
 
     def _cp(df: DataFrame, eager: bool = True) -> DataFrame:
         return df.localCheckpoint(eager=eager) if checkpoint else df
@@ -824,14 +824,16 @@ def k_core(
         .distinct(),
         eager=False,
     )
+    if checkpoint:
+        # round 0: the bounded collect materializes the lazy checkpoint,
+        # so a graph too large to finish here pays nothing twice
+        local = _k_core_local_finish(edges, k, stats)
+        if local is not None:
+            return local
     n_edges = edges.count()
-    if partition_edges is None:
-        partition_edges = checkpoint and n_edges >= _KCORE_PARTITION_EDGES_MIN
-    stats["partitioned_edges"] = bool(partition_edges)
-    if partition_edges:
-        return _k_core_partitioned(
-            edges, k, max_iter, local_finish_threshold, stats
-        )
+    if checkpoint and n_edges >= _KCORE_PARTITION_EDGES_MIN:
+        stats["partitioned_edges"] = True
+        return _k_core_partitioned(edges, k, max_iter, stats)
     for _ in range(max_iter):
         if n_edges == 0:
             # empty core with the INPUT id type (limit(0) keeps the
@@ -841,9 +843,10 @@ def k_core(
                 .limit(0)
                 .withColumn("degree", F.lit(0).cast("bigint"))
             )
-        if 0 < local_finish_threshold >= n_edges:
-            stats["local_finish"] = True
-            return _k_core_local_peel(edges, k)
+        if checkpoint:
+            local = _k_core_local_finish(edges, k, stats, n_edges)
+            if local is not None:
+                return local
         deg = (
             edges.select(F.col("a").alias("id"))
             .unionAll(edges.select(F.col("b").alias("id")))

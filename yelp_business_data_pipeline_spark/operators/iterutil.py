@@ -1,5 +1,7 @@
 """Shared plumbing for the iterative operators (BFS / PageRank / k-core /
-connected components): partitioning-preserving localCheckpoints.
+connected components): partitioning-preserving localCheckpoints, the
+convergence-check cadence, and the bounded collect behind the local
+finish.
 
 The iterative operators all follow the same BSP shape — a small mutable
 state frame joined against a large immutable edge frame once per round,
@@ -22,6 +24,16 @@ the checkpoint materialization, and the per-round joins still plan under
 AQE (EnsureRequirements refuses to coalesce a side that must co-partition
 with the fixed checkpoint layout, so correctness never depends on the
 toggle).
+
+Local finish: a graph of at most ``_LOCAL_FINISH_EDGES`` edges is
+solved on the driver, where every distributed round would be pure
+per-job overhead. ``collect_bounded`` is the one collect that finishes
+it — connected components calls it before its rounds, k-core before its
+rounds and again once the surviving edges fit.
+
+The constants below are read at call time, never bound at import (no
+``from .iterutil import _LOCAL_FINISH_EDGES``, no default argument), so
+a test that sets one forces every operator onto the path it selects.
 """
 
 from __future__ import annotations
@@ -31,6 +43,21 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame
 
 _AQE_KEY = "spark.sql.adaptive.enabled"
+
+#: Largest edge count an iterative operator finishes on the driver. The
+#: crossover lies above 4x this (4 cores, connected components, median
+#: of 3, local finish vs rounds): 100k edges in 6-member stars 1.2 vs
+#: 4.1 s (hashmin), 400k 3.9 vs 6.8 s; a 100k-edge random functional
+#: graph 1.2 vs 15.4 s (star), 400k 3.7 vs 36.8 s. It is not raised: the
+#: driver holds every vertex in Python dicts (100k bigint pairs are
+#: about 1.6 MB of Arrow).
+_LOCAL_FINISH_EDGES = 100_000
+
+#: Rounds between convergence checks in the pagerank and hashmin CC
+#: loops (CC also checks each of its first four rounds). Each check is a
+#: driver action (a full job submission), so batching them trades up to
+#: ``_CHECK_EVERY - 1`` extra cheap rounds for fewer round-trips.
+_CHECK_EVERY = 4
 
 
 @contextmanager
@@ -84,3 +111,17 @@ def localcheckpoint_keep_partitioning(df: DataFrame, eager: bool = True) -> Data
     """
     with _aqe_disabled(df.sparkSession):
         return df.localCheckpoint(eager=eager)
+
+
+def collect_bounded(df: DataFrame, rows: int | None = None):
+    """``df`` as a pyarrow Table when it holds at most
+    ``_LOCAL_FINISH_EDGES`` rows, else None. One bounded job —
+    ``limit(bound + 1).toArrow()`` — reads at most one row past the
+    bound; ``toArrow`` keeps nullable bigint ids integral (``toPandas``
+    would widen them to float64). ``rows``, when the caller already
+    counted ``df``, skips the job for a frame known to be too large."""
+    bound = _LOCAL_FINISH_EDGES
+    if rows is not None and rows > bound:
+        return None
+    tbl = df.limit(bound + 1).toArrow()
+    return None if tbl.num_rows > bound else tbl

@@ -11,7 +11,8 @@ Lineage is cut with ``localCheckpoint`` each round like
 connected_components — without it the plan doubles per iteration; swap
 for reliable ``checkpoint()`` on a real cluster.
 
-Two physical regimes, chosen adaptively (``partition_edges``):
+Two physical regimes, chosen from the measured edge count at call time
+(``_PARTITION_EDGES_MIN``):
 
 * **Small graphs** — plain per-round checkpoints, AQE on. AQE coalesces
   the tiny per-round shuffles to a handful of tasks, so the fixed
@@ -41,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import iterutil
 from .iterutil import localcheckpoint_keep_partitioning, localcheckpoint_partitioned
 
 # Symmetric-edge count above which the partitioned (Pregel-layout) regime
@@ -60,34 +62,30 @@ def pagerank(
     max_iter: int = 20,
     tol: float = 1e-6,
     personalize: DataFrame | None = None,
-    check_every: int = 4,
     stats: dict | None = None,
     checkpoint: bool = True,
-    partition_edges: bool | None = None,
 ) -> DataFrame:
     """(id, rank) for every vertex in ``edges``; ranks sum to 1.
 
     Stops when the L1 delta between rounds drops below ``tol`` (computed
     as a 1-row distributed aggregate) or after ``max_iter`` rounds. The
-    delta is evaluated only every ``check_every``-th round: each check is
-    a driver action (a full job submission, ~constant scheduling cost at
-    cluster scale), so batching cuts driver round-trips ``check_every``×
-    at the price of up to ``check_every - 1`` extra cheap iterations past
-    convergence. ``check_every=1`` restores the per-round test; the delta
-    compared is always consecutive-round L1, so ``tol`` semantics are
-    unchanged. Pass a ``stats`` dict to receive
+    delta is evaluated only every ``iterutil._CHECK_EVERY``-th round:
+    each check is a driver action (a full job submission, ~constant
+    scheduling cost at cluster scale), so batching cuts driver
+    round-trips at the price of up to ``_CHECK_EVERY - 1`` extra cheap
+    iterations past convergence. The delta compared is always
+    consecutive-round L1, so ``tol`` semantics do not depend on the
+    cadence. Pass a ``stats`` dict to receive
     ``{"iterations": n, "delta_checks": n, "partitioned_edges": bool}``
     (observability + test probe).
     ``checkpoint=False`` skips the per-round localCheckpoint lineage cuts
     so the RETURNED plan shows the genuine per-round join+groupBy shape
     (plan inspection / EXPLAIN.md only — never run many iterations with
-    it, the plan doubles per round).
-    ``partition_edges`` picks the physical regime (module docstring):
-    ``None`` (default) measures the deduped symmetric edge count off the
-    already-materialized checkpoint (a cheap scan, no extra shuffle) and
-    switches at the measured crossover; ``True``/``False`` force the
-    Pregel-layout / AQE regime — a cluster caller at real scale passes
-    ``True`` to skip the sizing count.
+    it, the plan doubles per round); it always plans the AQE regime.
+    The regime (module docstring) is picked from the deduped symmetric
+    edge count, measured off the already-materialized checkpoint (a
+    cheap scan, no extra shuffle), at the ``_PARTITION_EDGES_MIN``
+    crossover.
     Parallel edges are collapsed (a duplicated edge must not double a
     contribution); self-loops count like any other edge.
 
@@ -100,42 +98,21 @@ def pagerank(
     vector is a broadcast-joined indicator column, never a driver-side
     rank collect — the seed set can itself be large.
     """
-    # pure-python argument checks FIRST: failing after the edge/vertex
-    # materialization jobs would waste minutes of cluster work on a typo
-    if check_every < 1:
-        raise ValueError(f"pagerank: check_every must be >= 1, got {check_every}")
-    if partition_edges and not checkpoint:
-        # the Pregel regime IS the retained-partitioning checkpoint layout;
-        # without checkpoints the flag would silently do nothing (the bfs
-        # convention — fail loudly on a requested-but-inert regime)
-        raise ValueError(
-            "pagerank: partition_edges=True requires checkpoint=True — the "
-            "edge placement is carried by the retained-partitioning "
-            "checkpoints; plan-inspection mode (checkpoint=False) runs "
-            "without it"
-        )
-
     e_plain = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).distinct()
     if not checkpoint:
         # plan-inspection mode: no checkpoints, no repartition — the
         # returned plan is the honest per-round join+groupBy shape
         e, large = e_plain, False
-    elif partition_edges is None:
+    else:
         # materialize plainly first (the dedup exchange runs under AQE),
         # size the graph off the checkpoint, and only then pay the one-up-
-        # front placement shuffle if the graph clears the crossover
+        # front placement shuffle if the graph clears the crossover: edges
+        # partitioned by source ONCE, so the per-round edges×ranks join
+        # needs no exchange on the edge side, any round, ever
         e = e_plain.localCheckpoint()
         large = e.count() >= _PARTITION_EDGES_MIN
         if large:
             e = localcheckpoint_partitioned(e, "a")
-    elif partition_edges:
-        large = True
-        # edges partitioned by source ONCE: the per-round edges×ranks
-        # join then needs no exchange on the edge side, any round, ever
-        e = localcheckpoint_partitioned(e_plain, "a")
-    else:
-        large = False
-        e = e_plain.localCheckpoint()
 
     def _cp(df: DataFrame) -> DataFrame:
         if not checkpoint:
@@ -231,7 +208,7 @@ def pagerank(
         # Convergence is tested only on check rounds (and never on the final
         # round, where the loop exits regardless) — the L1 aggregate is
         # 1-row-cheap to compute but each .first() is a full job submission.
-        if (it + 1) % check_every == 0 and it + 1 < max_iter:
+        if (it + 1) % iterutil._CHECK_EVERY == 0 and it + 1 < max_iter:
             delta = (
                 new_ranks.alias("n")
                 .join(ranks.alias("o"), "id")

@@ -2490,20 +2490,17 @@ def pagerank_friend_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     "chains have diameter ~n_customers/50, so hash-min label propagation "
     "(O(diameter) rounds) is the wrong algorithm here; star contraction "
     "converges in O(log^2 n) round-pairs, each a groupBy+join on the same "
-    "key, after precontract=True's per-partition union-find Arrow pass "
-    "(two-phase CC) collapses each partition's edges to depth-1 star "
-    "forests with ZERO shuffle. Local-finish==star==hashmin==python-"
-    "union-find equality (incl. precontract, across partition layouts) "
-    "pinned in tests/test_components.py. One component per represented "
-    "nation.",
+    "key, after a per-partition union-find Arrow pass (two-phase CC) "
+    "collapses each partition's edges to depth-1 star forests with ZERO "
+    "shuffle. Local-finish==star==hashmin==python-union-find equality "
+    "(across partition layouts) pinned in tests/test_components.py. One "
+    "component per represented nation.",
 )
 def connected_components_friend_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.components import connected_components
 
     fwd = _friend_edges(spark, sf_dir)
-    comps = connected_components(
-        fwd, src="src", dst="dst", max_iter=40, algorithm="star", precontract=True
-    )
+    comps = connected_components(fwd, src="src", dst="dst", max_iter=40, algorithm="star")
     return comps.groupBy(F.col("comp").alias("component")).agg(
         F.count(F.lit(1)).alias("n_members")
     )
@@ -2560,11 +2557,12 @@ def bfs_distances_binary_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
     "support >= 2 — the basket.py collapse feeds the graph op). "
     "Iterative peeling is one degree groupBy + two semi-joins per round "
     "on a shrinking checkpointed edge set; once the cascade shrinks "
-    "under the local-finish threshold the remaining rounds collapse to "
-    "ONE exact Arrow peel (the iterative-tail pattern — at sf0.1 the "
-    "3.6k-edge graph takes that path immediately, at 100 TB the early "
-    "rounds stay distributed). Cross-path equality pinned in "
-    "tests/test_kcore.py. Rows-only after slot 50.",
+    "under the shared 100k-edge local-finish bound, one bounded Arrow "
+    "collect hands the survivors to an exact driver-side peel (the "
+    "connected_components finish — at sf0.1 the 3.6k-edge graph takes "
+    "that path before any round, at 100 TB the early rounds stay "
+    "distributed). Cross-path equality pinned in tests/test_kcore.py. "
+    "Rows-only after slot 50.",
 )
 def k_core_cooccurrence_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.basket import item_cooccurrence
