@@ -1,7 +1,5 @@
 from __future__ import annotations
 
-import importlib
-
 import pytest
 
 from yelp_business_data_pipeline_spark.session import get_spark
@@ -38,14 +36,19 @@ def partitioned_regime(monkeypatch):
     """Put ``pagerank`` and ``k_core`` in their Pregel-layout regime on
     any graph: with both edge-count crossovers at 0 every input is above
     them."""
-    from yelp_business_data_pipeline_spark.operators import graph
+    from yelp_business_data_pipeline_spark.operators import graph, ranking
 
-    monkeypatch.setattr(pagerank_module(), "_PARTITION_EDGES_MIN", 0)
+    monkeypatch.setattr(ranking, "_PARTITION_EDGES_MIN", 0)
     monkeypatch.setattr(graph, "_KCORE_PARTITION_EDGES_MIN", 0)
 
 
-def pagerank_module():
-    """The ``operators.pagerank`` module: the package re-exports the
-    function under the same name, so attribute access on the package
-    returns the function, where a monkeypatched constant does nothing."""
-    return importlib.import_module("yelp_business_data_pipeline_spark.operators.pagerank")
+@pytest.fixture
+def lazy_plans(monkeypatch):
+    """Plan inspection: with ``iterutil._CHECKPOINT`` off the lineage-
+    cutting operators return their whole lazy plan, so a test sees the
+    genuine round shape instead of a checkpoint scan. Connected
+    components then never collects, and pagerank and ``k_core`` plan
+    their default regime."""
+    from yelp_business_data_pipeline_spark.operators import iterutil
+
+    monkeypatch.setattr(iterutil, "_CHECKPOINT", False)

@@ -48,8 +48,12 @@ def _norm_rows(rows, col_order):
 
 
 def compare(name: str, sf_dir: str, spark) -> tuple[bool, str]:
+    return compare_frame(name, QUERIES[name].spark(spark, sf_dir), sf_dir)
+
+
+def compare_frame(name: str, sdf, sf_dir: str) -> tuple[bool, str]:
+    """``compare`` on ``sdf``, the already-built frame of query ``name``."""
     spec = QUERIES[name]
-    sdf = spec.spark(spark, sf_dir)
     s_cols = list(sdf.columns)
     s_rows = [tuple(r) for r in sdf.collect()]
 

@@ -98,12 +98,11 @@ def test_max_basket_guard_raises(spark):
     assert item_cooccurrence(df, "basket", "item", max_basket=64).count() > 0
 
 
+@pytest.mark.usefixtures("lazy_plans")
 def test_plan_has_no_self_join_and_only_scalar_crossjoin(spark, sf_dir):
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    # checkpoint=False: the pure-lazy composition, inspectable end to end.
-    lazy = item_cooccurrence(
-        li, "l_orderkey", "l_partkey", min_pairs=2, max_basket=64, checkpoint=False
-    )
+    # lineage cuts off: the pure-lazy composition, inspectable end to end.
+    lazy = item_cooccurrence(li, "l_orderkey", "l_partkey", min_pairs=2, max_basket=64)
     plan = lazy._jdf.queryExecution().executedPlan().toString()
     # pair expansion is HOF-local: no cartesian anywhere; the only
     # broadcast-nested-loop join is the 1-row n_baskets scalar.

@@ -90,10 +90,11 @@ def test_null_edges_ignored_and_dupe_seeds(spark):
     assert got == {1: 0, 2: 1}
 
 
+@pytest.mark.usefixtures("lazy_plans")
 def test_plan_no_cartesian(spark):
     e = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
     s = spark.createDataFrame([(1,)], "id long")
-    df = bfs_distances(e, s, checkpoint=False, max_depth=4)
+    df = bfs_distances(e, s, max_depth=4)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
 

@@ -151,7 +151,7 @@ def test_entity_resolution_end_to_end_on_customers(spark):
 
 
 # ---------------------------------------------------------------------------
-# PageRank (operators/pagerank.py)
+# PageRank (operators/ranking.py)
 # ---------------------------------------------------------------------------
 
 
@@ -175,7 +175,7 @@ def _python_pagerank(edge_list, damping=0.85, iters=50):
 
 
 def test_pagerank_matches_python_recompute(spark):
-    from yelp_business_data_pipeline_spark.operators.pagerank import pagerank
+    from yelp_business_data_pipeline_spark.operators.ranking import pagerank
 
     # small digraph with a dangling node (4), a hub (1), and a cycle
     edge_list = [(1, 2), (1, 3), (2, 1), (3, 1), (3, 4), (5, 1), (2, 4)]
@@ -191,7 +191,7 @@ def test_pagerank_matches_python_recompute(spark):
 
 
 def test_pagerank_duplicate_edges_do_not_double_contributions(spark):
-    from yelp_business_data_pipeline_spark.operators.pagerank import pagerank
+    from yelp_business_data_pipeline_spark.operators.ranking import pagerank
 
     e1 = spark.createDataFrame([(1, 2), (2, 1)], "src long, dst long")
     e2 = spark.createDataFrame([(1, 2), (1, 2), (2, 1)], "src long, dst long")
@@ -202,7 +202,7 @@ def test_pagerank_duplicate_edges_do_not_double_contributions(spark):
 
 
 def test_pagerank_empty_edges(spark):
-    from yelp_business_data_pipeline_spark.operators.pagerank import pagerank
+    from yelp_business_data_pipeline_spark.operators.ranking import pagerank
 
     e = spark.createDataFrame([], "src long, dst long")
     assert pagerank(e).count() == 0
@@ -214,7 +214,7 @@ def test_pagerank_batched_convergence_checks(spark, monkeypatch):
     run (the extra <=k-1 post-convergence iterations are sub-tol
     contractions)."""
     from yelp_business_data_pipeline_spark.operators import iterutil
-    from yelp_business_data_pipeline_spark.operators.pagerank import pagerank
+    from yelp_business_data_pipeline_spark.operators.ranking import pagerank
 
     assert iterutil._CHECK_EVERY == 4
     edge_list = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 1), (2, 4)]
@@ -242,11 +242,9 @@ def test_pagerank_partitioned_regime_matches_aqe_regime(spark, monkeypatch):
     checkpoints) must give bit-comparable ranks to the small-graph AQE
     regime and to the size rule — the regime is physical only. Covers
     the plain AND personalized paths plus the stats probe."""
-    from yelp_business_data_pipeline_spark.operators.pagerank import pagerank
+    from yelp_business_data_pipeline_spark.operators import ranking as module
+    from yelp_business_data_pipeline_spark.operators.ranking import pagerank
 
-    from .conftest import pagerank_module
-
-    module = pagerank_module()
     crossover = module._PARTITION_EDGES_MIN
 
     def run(min_edges, **kw):
@@ -292,7 +290,7 @@ def _python_ppr(edge_list, seeds, damping=0.85, iters=60):
 
 
 def test_personalized_pagerank_matches_python_and_localizes(spark):
-    from yelp_business_data_pipeline_spark.operators.pagerank import pagerank
+    from yelp_business_data_pipeline_spark.operators.ranking import pagerank
 
     # two loosely-connected triangles; seed inside the first; vertex 7 is
     # DANGLING (no out-edges) so the dangling-mass-to-seeds path (_dm * t)
@@ -512,10 +510,10 @@ def test_local_finish_equals_rounds_and_union_find(spark, monkeypatch):
             assert dist.schema == local.schema, (algo, dist.schema, local.schema)
 
 
-def test_local_finish_bound_is_inclusive(spark, monkeypatch):
+def test_local_finish_bound_is_inclusive(spark, monkeypatch, request):
     """With the bound at N, an N-edge input takes the local finish and an
     (N+1)-edge input the distributed rounds, with the same rows; and
-    checkpoint=False (plan inspection) never collects."""
+    plan inspection (``lazy_plans``) never collects."""
     from yelp_business_data_pipeline_spark.operators import iterutil
 
     monkeypatch.setattr(iterutil, "_LOCAL_FINISH_EDGES", 4)
@@ -526,5 +524,6 @@ def test_local_finish_bound_is_inclusive(spark, monkeypatch):
         got = _rows(connected_components(df))
         assert got == sorted(_union_find_oracle(edges[:n]).items()), n
     assert taken == [True, False]
-    connected_components(df, checkpoint=False)
+    request.getfixturevalue("lazy_plans")
+    connected_components(df)
     assert taken == [True, False]

@@ -166,13 +166,13 @@ def test_partition_edges_regime_matches_default(spark, monkeypatch):
     assert s["partitioned_edges"] and s["local_finish"] and s["rounds"] == 1
 
 
-@pytest.mark.usefixtures("partitioned_regime")
+@pytest.mark.usefixtures("partitioned_regime", "lazy_plans")
 def test_partition_edges_requires_checkpoint(spark):
-    # the Pregel layout is carried by the checkpoints: checkpoint=False
+    # the Pregel layout is carried by the checkpoints: without them k_core
     # stays in the default regime even above the crossover
     df = spark.createDataFrame([(1, 2)], "src long, dst long")
     s = {}
-    k_core(df, 1, checkpoint=False, stats=s).collect()
+    k_core(df, 1, stats=s).collect()
     assert s["partitioned_edges"] is False
 
 

@@ -192,22 +192,23 @@ def test_iterative_bench_queries_shape_and_counts(spark, sf_dir):
     assert sum(r.n_members for r in comp_rows) == n_cust
 
 
+@pytest.mark.usefixtures("lazy_plans")
 def test_iterative_round_plan_shapes_via_checkpoint_off(spark):
-    """checkpoint=False exposes the genuine per-round lineage the bench
+    """Lineage cuts off (``lazy_plans``) expose the genuine per-round lineage the bench
     queries truncate: pagerank's round = equi-joins + hash aggregates with
     the only BroadcastNestedLoopJoin being the 1-row dangling-mass scalar;
     star CC's round-pair = groupBy(min) + same-key joins, no cartesian and
     no nested-loop join at all."""
     from yelp_business_data_pipeline_spark.operators.components import connected_components
-    from yelp_business_data_pipeline_spark.operators.pagerank import pagerank
+    from yelp_business_data_pipeline_spark.operators.ranking import pagerank
 
     e = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (3, 4)], "src long, dst long"
     )
     # one round: further rounds re-embed the prior round's subtree in
-    # several branches (exactly the lineage compounding checkpoint=True
-    # exists to cut), so only the single-round plan has a stable shape
-    pr = pagerank(e, max_iter=1, checkpoint=False)
+    # several branches (exactly the lineage compounding the checkpoints
+    # exist to cut), so only the single-round plan has a stable shape
+    pr = pagerank(e, max_iter=1)
     p = plan_str(pr)
     assert "CartesianProduct" not in p
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
@@ -216,7 +217,7 @@ def test_iterative_round_plan_shapes_via_checkpoint_off(spark):
     assert plan_str(pr, "simple").count("BroadcastNestedLoopJoin") == 1, p
 
     pairs = spark.createDataFrame([(1, 2), (2, 3)], "doc_a long, doc_b long")
-    cc = connected_components(pairs, max_iter=4, algorithm="star", checkpoint=False)
+    cc = connected_components(pairs, max_iter=4, algorithm="star")
     p2 = plan_str(cc)
     assert "CartesianProduct" not in p2 and "BroadcastNestedLoopJoin" not in p2, p2
     assert "BatchEvalPython" not in p2 and "ArrowEvalPython" not in p2

@@ -3,17 +3,55 @@ driver's gate runs the same comparison at sf0.01)."""
 
 from __future__ import annotations
 
+import json
+
 import pytest
 
 from yelp_business_data_pipeline_spark.plans import QUERIES
 
-from .oracle_harness import compare
+from . import plan_digest
+from .oracle_harness import compare_frame
+
+
+@pytest.fixture(scope="module")
+def digest_entries():
+    return plan_digest.load()
+
+
+@pytest.fixture(scope="module", autouse=True)
+def _nothing_cached(spark):
+    """Earlier modules leave frames cached (``test_pq`` caches the
+    normalized query and corpus vectors), and the planner reads a cached
+    subtree wherever a query contains it: ``pq_ann_topk`` then plans
+    three InMemoryTableScans instead of three FileScans. The digest
+    describes each query in a session with nothing cached."""
+    spark.catalog.clearCache()
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
-def test_query_matches_oracle(name, spark, sf_dir):
-    ok, msg = compare(name, sf_dir, spark)
+def test_query_matches_oracle(name, spark, sf_dir, digest_entries):
+    """The rows match the oracle, and the plan matches its PLAN_DIGEST.json
+    entry (tests/plan_digest.py): the digest is read off the same frame,
+    before the collect, so no query is built twice.
+
+    The digest pins joins by kind, shuffle and file-scan counts, Python
+    evaluation and checkpoint or cache reads. It does not catch a dropped
+    broadcast hint: every dimension table at sf0.001 is under the
+    auto-broadcast threshold, so the join broadcasts with or without it."""
+    sdf = QUERIES[name].spark(spark, sf_dir)
+    got = plan_digest.digest(sdf)
+    ok, msg = compare_frame(name, sdf, sf_dir)
     assert ok, f"{name}: {msg}"
+    assert got == digest_entries.get(name), (
+        f"{name}: plan digest changed; new PLAN_DIGEST.json entry "
+        f"(or regenerate with python -m tests.plan_digest):\n"
+        f"{json.dumps(name)}: {json.dumps(got)}"
+    )
+
+
+def test_plan_digest_covers_registry(digest_entries):
+    """One PLAN_DIGEST.json entry per registered query, none stale."""
+    assert sorted(digest_entries) == sorted(QUERIES)
 
 
 from yelp_business_data_pipeline_spark.plans.registry import DEMOTED_ORACLES

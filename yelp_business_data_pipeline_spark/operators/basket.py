@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .dedup import bucket_pairs
+from .iterutil import cut_lineage
 
 
 def item_cooccurrence(
@@ -43,7 +44,6 @@ def item_cooccurrence(
     item_col: str,
     min_pairs: int = 1,
     max_basket: int | None = None,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Ordered item pairs (item_a < item_b) co-occurring in baskets, with
     association statistics.
@@ -64,16 +64,13 @@ def item_cooccurrence(
     # the raw scan per branch — measured 4 scans. A lazy localCheckpoint
     # computes the collapse once on first action and serves all branches
     # from executor-local storage (the pagerank/star-CC lineage pattern;
-    # the checkpointed frame is one row per basket — the SMALL shape). The
-    # checkpoint=False escape returns the pure-lazy composition for plan
-    # inspection and for callers that fan out to exactly one consumer.
-    baskets = (
+    # the checkpointed frame is one row per basket — the SMALL shape).
+    baskets = cut_lineage(
         df.filter(F.col(basket_col).isNotNull() & F.col(item_col).isNotNull())
         .groupBy(F.col(basket_col).alias("_basket"))
-        .agg(F.sort_array(F.collect_set(item_col)).alias("_ids"))
+        .agg(F.sort_array(F.collect_set(item_col)).alias("_ids")),
+        eager=False,
     )
-    if checkpoint:
-        baskets = baskets.localCheckpoint(eager=False)
     n_baskets = baskets.agg(F.count(F.lit(1)).alias("n_baskets"))
     item_n = (
         baskets.select(F.explode("_ids").alias("item"))

@@ -55,6 +55,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .iterutil import cut_lineage
+
 
 def bfs_distances(
     edges: DataFrame,
@@ -63,7 +65,6 @@ def bfs_distances(
     dst: str = "dst",
     id_col: str = "id",
     max_depth: int = 30,
-    checkpoint: bool = True,
     undirected: bool = False,
 ) -> DataFrame:
     """(id, dist): minimum hop count from any seed in ``sources`` (a
@@ -75,16 +76,12 @@ def bfs_distances(
     levels — distances beyond the cap would be silently wrong, so the
     cap fails loudly (the star-CC convention).
     """
-
-    def _cp(df: DataFrame, eager: bool = True) -> DataFrame:
-        return df.localCheckpoint(eager=eager) if checkpoint else df
-
-    e = _cp(
+    e = cut_lineage(
         edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d")).filter(
             F.col("_s").isNotNull() & F.col("_d").isNotNull()
         )
     )
-    frontier = _cp(
+    frontier = cut_lineage(
         sources.select(F.col(id_col).alias("id")).distinct().withColumn(
             "dist", F.lit(0)
         )
@@ -106,7 +103,7 @@ def bfs_distances(
         # lazy checkpoint + count: materializing the level and testing
         # emptiness fuse into ONE job (see iterutil docstring) — with the
         # eager-checkpoint-then-count shape each level costs two
-        nxt = _cp(nxt, eager=False)
+        nxt = cut_lineage(nxt, eager=False)
         if nxt.count() == 0:
             return visited
         # every member of the union is an already-materialized checkpoint:

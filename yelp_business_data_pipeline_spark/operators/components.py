@@ -112,7 +112,6 @@ def connected_components(
     dst: str = "doc_b",
     max_iter: int = 20,
     algorithm: str = "hashmin",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """(id, comp) for every vertex appearing in ``pairs``; comp =
     min vertex id reachable. Raises if ``max_iter`` rounds don't converge.
@@ -147,7 +146,7 @@ def connected_components(
     original graph, so the result is unchanged; the global round count
     drops because every intra-partition path is already depth 1.
 
-    **Local finish.** With ``checkpoint=True``, one bounded job first
+    **Local finish.** One bounded job first
     collects at most ``iterutil._LOCAL_FINISH_EDGES + 1`` input edges
     (Arrow). When the graph has at most that many edges (100,000;
     duplicates count) the components come from a union-find on the
@@ -157,8 +156,9 @@ def connected_components(
     BEFORE the contraction: the bound is then a property of the input,
     and a small graph skips the contraction's Python pass. Above the
     bound the rounds run as if the collect had not happened, reading the
-    checkpoint it materialized. ``checkpoint=False`` (plan inspection)
-    skips the finish, so the plan keeps the rounds' full lineage.
+    checkpoint it materialized. With ``iterutil._CHECKPOINT`` off (plan
+    inspection) the finish is skipped, so the plan keeps the rounds' full
+    lineage.
 
     NULL endpoints: every endpoint is a vertex, a NULL endpoint adds one
     NULL vertex with a NULL ``comp``, and an edge with a NULL endpoint
@@ -166,31 +166,28 @@ def connected_components(
     """
     if algorithm not in ("hashmin", "star"):
         raise ValueError(f"unknown algorithm {algorithm!r}: use 'hashmin' or 'star'")
-    if checkpoint:
+    if iterutil._CHECKPOINT:
         # Lazy: the local finish's bounded collect materializes every
         # partition (its local limit runs in each one and the cache keeps
         # whole partitions), so the upstream subtree — for the dedup tail
         # LSH banding + Jaccard verify — runs once, and both round
         # structures' self-unions read executor-local blocks.
-        pairs = pairs.select(F.col(src), F.col(dst)).localCheckpoint(eager=False)
+        pairs = iterutil.cut_lineage(pairs.select(F.col(src), F.col(dst)), eager=False)
         local = _local_finish(pairs, src, dst)
         if local is not None:
             return local
-    pairs = _contract_partitions(pairs, src, dst)
-    if checkpoint:
-        # the rounds read the contracted edges twice (self-union /
-        # vertex set): cut here so the Python pass runs once
-        pairs = pairs.localCheckpoint(eager=False)
+    # the rounds read the contracted edges twice (self-union / vertex
+    # set): cut here so the Python pass runs once
+    pairs = iterutil.cut_lineage(_contract_partitions(pairs, src, dst), eager=False)
     if algorithm == "star":
-        return _cc_star(pairs, src, dst, max_iter, checkpoint)
+        return _cc_star(pairs, src, dst, max_iter)
 
     def _cp(df: DataFrame) -> DataFrame:
-        # r13: lazy, and GATED on the flag (ADVICE r12 — plan-inspection
-        # mode previously still truncated here). Each round's frame is
-        # materialized by the convergence check's job instead of its own
-        # eager job (the bfs.py fuse pattern): one job per checked round,
-        # zero jobs for the rounds a batched check window skips.
-        return df.localCheckpoint(eager=False) if checkpoint else df
+        # lazy: each round's frame is materialized by the convergence
+        # check's job instead of its own eager job (the bfs.py fuse
+        # pattern): one job per checked round, zero jobs for the rounds a
+        # batched check window skips
+        return iterutil.cut_lineage(df, eager=False)
 
     edges = _cp(
         pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
@@ -316,9 +313,7 @@ def _contract_partitions(pairs: DataFrame, src: str, dst: str) -> DataFrame:
     )
 
 
-def _cc_star(
-    pairs: DataFrame, src: str, dst: str, max_iter: int, checkpoint: bool = True
-) -> DataFrame:
+def _cc_star(pairs: DataFrame, src: str, dst: str, max_iter: int) -> DataFrame:
     """Alternating large-star / small-star contraction.
 
     Edges are kept normalized as (hi, lo) with hi > lo. Per round-pair:
@@ -336,12 +331,10 @@ def _cc_star(
     witness), checked per pair — the potential argument in the paper makes
     equality a valid stop."""
     def _cp(df: DataFrame) -> DataFrame:
-        # checkpoint=False: plan-inspection mode (EXPLAIN) — keeps the
-        # genuine round lineage visible instead of a truncated RDD scan.
-        # r13: LAZY — every _cp() here is immediately followed by the
-        # _stats probe, whose job materializes the frame (the bfs.py
-        # fuse pattern), halving the star path's per-round job count.
-        return df.localCheckpoint(eager=False) if checkpoint else df
+        # LAZY: every _cp() here is immediately followed by the _stats
+        # probe, whose job materializes the frame (the bfs.py fuse
+        # pattern), halving the star path's per-round job count
+        return iterutil.cut_lineage(df, eager=False)
 
     def _stats(df: DataFrame) -> tuple:
         # One job per round: (edge count, order-independent multiset

@@ -480,7 +480,6 @@ def link_prediction_features(
     min_common: int = 1,
     max_center_degree: int | None = None,
     exclude_existing: bool = True,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Link-prediction features for vertex pairs of an undirected graph:
     ``common_neighbors``, ``adamic_adar`` (Adamic & Adar 2003 — common
@@ -518,22 +517,21 @@ def link_prediction_features(
     """
     from .dedup import bucket_pairs
 
-    def _cp(df: DataFrame) -> DataFrame:
-        return df.localCheckpoint(eager=False) if checkpoint else df
-
-    und = _cp(
+    und = iterutil.cut_lineage(
         pairs.select(
             F.greatest(F.col(src), F.col(dst)).alias("a"),
             F.least(F.col(src), F.col(dst)).alias("b"),
         )
         .filter(F.col("a") != F.col("b"))
-        .distinct()
+        .distinct(),
+        eager=False,
     )
     nbrs = und.select(F.col("a").alias("w"), F.col("b").alias("n")).unionAll(
         und.select(F.col("b").alias("w"), F.col("a").alias("n"))
     )
-    centers = _cp(
-        nbrs.groupBy("w").agg(F.sort_array(F.collect_set("n")).alias("_ids"))
+    centers = iterutil.cut_lineage(
+        nbrs.groupBy("w").agg(F.sort_array(F.collect_set("n")).alias("_ids")),
+        eager=False,
     )
     deg = centers.select("w", F.size("_ids").alias("deg"))
     expandable = centers.filter(F.size("_ids") >= 2).withColumn(
@@ -747,7 +745,6 @@ def k_core(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 50,
-    checkpoint: bool = True,
     stats: dict | None = None,
 ) -> DataFrame:
     """Vertices of the k-core: the maximal subgraph where every vertex
@@ -780,7 +777,8 @@ def k_core(
     tests/test_kcore.py). At 100 TB the early rounds stay distributed and
     the bound caps the driver's memory (~tens of MB). The driver peel is
     not round-bounded, so ``max_iter`` governs only distributed rounds.
-    ``checkpoint=False`` (plan inspection) skips the finish.
+    With ``iterutil._CHECKPOINT`` off (plan inspection) the finish is
+    skipped.
 
     The physical regime is picked from the round-0 edge count (already
     paid) at the measured ``_KCORE_PARTITION_EDGES_MIN`` crossover
@@ -796,7 +794,8 @@ def k_core(
     so the edge frame stops shuffling entirely. At 100 TB this is the
     only viable shape: the default regime re-exchanges the full
     surviving edge set once per round. The layout is carried by the
-    checkpoints, so ``checkpoint=False`` always plans the default regime.
+    checkpoints, so with ``iterutil._CHECKPOINT`` off k_core always plans
+    the default regime.
 
     Pass a ``stats`` dict to receive ``{"rounds": n, "local_finish":
     bool, "partitioned_edges": bool}`` (observability + test probe).
@@ -812,10 +811,7 @@ def k_core(
     stats["local_finish"] = False
     stats["partitioned_edges"] = False
 
-    def _cp(df: DataFrame, eager: bool = True) -> DataFrame:
-        return df.localCheckpoint(eager=eager) if checkpoint else df
-
-    edges = _cp(
+    edges = iterutil.cut_lineage(
         pairs.select(
             F.greatest(F.col(src), F.col(dst)).alias("a"),
             F.least(F.col(src), F.col(dst)).alias("b"),
@@ -824,14 +820,14 @@ def k_core(
         .distinct(),
         eager=False,
     )
-    if checkpoint:
+    if iterutil._CHECKPOINT:
         # round 0: the bounded collect materializes the lazy checkpoint,
         # so a graph too large to finish here pays nothing twice
         local = _k_core_local_finish(edges, k, stats)
         if local is not None:
             return local
     n_edges = edges.count()
-    if checkpoint and n_edges >= _KCORE_PARTITION_EDGES_MIN:
+    if iterutil._CHECKPOINT and n_edges >= _KCORE_PARTITION_EDGES_MIN:
         stats["partitioned_edges"] = True
         return _k_core_partitioned(edges, k, max_iter, stats)
     for _ in range(max_iter):
@@ -843,7 +839,7 @@ def k_core(
                 .limit(0)
                 .withColumn("degree", F.lit(0).cast("bigint"))
             )
-        if checkpoint:
+        if iterutil._CHECKPOINT:
             local = _k_core_local_finish(edges, k, stats, n_edges)
             if local is not None:
                 return local
@@ -857,7 +853,7 @@ def k_core(
         # lazy checkpoint + count fuse "cut lineage" and "test convergence"
         # into one job per round; the parent edge frame is already
         # materialized, so broadcast pre-jobs never re-walk history
-        pruned = _cp(
+        pruned = iterutil.cut_lineage(
             edges.join(keep.withColumnRenamed("id", "a"), "a", "left_semi").join(
                 keep.withColumnRenamed("id", "b"), "b", "left_semi"
             ),

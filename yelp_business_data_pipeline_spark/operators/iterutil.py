@@ -59,6 +59,12 @@ _LOCAL_FINISH_EDGES = 100_000
 #: ``_CHECK_EVERY - 1`` extra cheap rounds for fewer round-trips.
 _CHECK_EVERY = 4
 
+#: Whether ``cut_lineage`` checkpoints. Off (plan inspection only, the
+#: ``lazy_plans`` test fixture), every operator returns its whole lazy
+#: plan and skips what needs a materialized frame: no local finish, and
+#: pagerank and k_core plan their default regime.
+_CHECKPOINT = True
+
 
 @contextmanager
 def _aqe_disabled(spark):
@@ -111,6 +117,12 @@ def localcheckpoint_keep_partitioning(df: DataFrame, eager: bool = True) -> Data
     """
     with _aqe_disabled(df.sparkSession):
         return df.localCheckpoint(eager=eager)
+
+
+def cut_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
+    """``df.localCheckpoint(eager=eager)``, or ``df`` itself when
+    ``_CHECKPOINT`` is off."""
+    return df.localCheckpoint(eager=eager) if _CHECKPOINT else df
 
 
 def collect_bounded(df: DataFrame, rows: int | None = None):

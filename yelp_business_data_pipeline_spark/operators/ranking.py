@@ -63,7 +63,6 @@ def pagerank(
     tol: float = 1e-6,
     personalize: DataFrame | None = None,
     stats: dict | None = None,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """(id, rank) for every vertex in ``edges``; ranks sum to 1.
 
@@ -77,11 +76,9 @@ def pagerank(
     consecutive-round L1, so ``tol`` semantics do not depend on the
     cadence. Pass a ``stats`` dict to receive
     ``{"iterations": n, "delta_checks": n, "partitioned_edges": bool}``
-    (observability + test probe).
-    ``checkpoint=False`` skips the per-round localCheckpoint lineage cuts
-    so the RETURNED plan shows the genuine per-round join+groupBy shape
-    (plan inspection / EXPLAIN.md only — never run many iterations with
-    it, the plan doubles per round); it always plans the AQE regime.
+    (observability + test probe). With ``iterutil._CHECKPOINT`` off
+    (plan inspection) the returned plan is the genuine per-round
+    join+groupBy lineage in the AQE regime.
     The regime (module docstring) is picked from the deduped symmetric
     edge count, measured off the already-materialized checkpoint (a
     cheap scan, no extra shuffle), at the ``_PARTITION_EDGES_MIN``
@@ -98,25 +95,19 @@ def pagerank(
     vector is a broadcast-joined indicator column, never a driver-side
     rank collect — the seed set can itself be large.
     """
-    e_plain = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).distinct()
-    if not checkpoint:
-        # plan-inspection mode: no checkpoints, no repartition — the
-        # returned plan is the honest per-round join+groupBy shape
-        e, large = e_plain, False
-    else:
-        # materialize plainly first (the dedup exchange runs under AQE),
-        # size the graph off the checkpoint, and only then pay the one-up-
-        # front placement shuffle if the graph clears the crossover: edges
-        # partitioned by source ONCE, so the per-round edges×ranks join
-        # needs no exchange on the edge side, any round, ever
-        e = e_plain.localCheckpoint()
-        large = e.count() >= _PARTITION_EDGES_MIN
-        if large:
-            e = localcheckpoint_partitioned(e, "a")
+    # materialize plainly first (the dedup exchange runs under AQE), size
+    # the graph off the checkpoint, and only then pay the one-up-front
+    # placement shuffle if the graph clears the crossover: edges
+    # partitioned by source ONCE, so the per-round edges×ranks join needs
+    # no exchange on the edge side, any round, ever
+    e = iterutil.cut_lineage(
+        edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).distinct()
+    )
+    large = iterutil._CHECKPOINT and e.count() >= _PARTITION_EDGES_MIN
+    if large:
+        e = localcheckpoint_partitioned(e, "a")
 
     def _cp(df: DataFrame) -> DataFrame:
-        if not checkpoint:
-            return df
         if large:
             # retained-partitioning checkpoints (iterutil): every per-round
             # frame's plan ends keyed on the vertex id, so keeping the hash
@@ -124,7 +115,7 @@ def pagerank(
             # contributions groupBy — the Pregel one-shuffle-per-superstep
             # cost model (plan rationale in iterutil's module docstring)
             return localcheckpoint_keep_partitioning(df)
-        return df.localCheckpoint()
+        return iterutil.cut_lineage(df)
 
     vertices = _cp(
         e.select(F.col("a").alias("id"))

@@ -2466,7 +2466,7 @@ def pq_ann_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "1-row scalar, no Python eval.",
 )
 def pagerank_friend_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.pagerank import pagerank
+    from ..operators.ranking import pagerank
 
     fwd = _friend_edges(spark, sf_dir)
     # forward edges all run low->high (acctbal, custkey) rank, so the
