@@ -9,6 +9,11 @@ it, and the counts do not depend on the core count. Nodes under an
 whatever the session's cache holds, so only the ``InMemoryTableScan``
 that reads it is. A node absent from an entry has count 0.
 
+``ReusedExchange`` is 0 in every entry and cannot be anything else here:
+under AQE, exchange reuse is decided at stage creation, after the plan
+the digest reads, which lists every exchange whether or not it is later
+reused. A change that breaks exchange reuse does not move the digest.
+
 ``test_queries_oracle.test_query_matches_oracle`` checks each entry on
 the frame it already builds for the oracle comparison. Regenerate the
 whole file (builds every registered query at sf0.001, about 90 s):

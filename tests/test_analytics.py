@@ -17,7 +17,9 @@ from .test_yelp_etl import etl  # noqa: F401
 
 @pytest.fixture(scope="module")
 def unified(etl):  # noqa: F811
-    return unified_analytics(etl["review"], etl["user"], etl["business"]).cache()
+    u = unified_analytics(etl["review"], etl["user"], etl["business"]).cache()
+    yield u
+    u.unpersist()
 
 
 def test_sentiment_by_city(unified):

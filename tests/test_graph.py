@@ -24,7 +24,9 @@ def graph(etl):  # noqa: F811
     friends = user_friend_edges(etl["user"])
     v = build_vertices(etl["business"], etl["review"], etl["user"]).cache()
     e = build_edges(etl["business"], etl["review"], etl["user"], friends).cache()
-    return v, e
+    yield v, e
+    v.unpersist()
+    e.unpersist()
 
 
 def test_vertex_labels(graph, etl):

@@ -18,7 +18,9 @@ from yelp_business_data_pipeline_spark.operators.multimodal import (
 def media_df(spark):
     rows = [(1, bytes([10, 20, 30, 40, 50])), (2, b""), (3, bytes(range(64)))]
     df = spark.createDataFrame(rows, ["media_id", "payload"])
-    return df.withColumn("media_meta", media_meta_expr(F.col("payload"), "image", "png")).cache()
+    media = df.withColumn("media_meta", media_meta_expr(F.col("payload"), "image", "png")).cache()
+    yield media
+    media.unpersist()
 
 
 def test_meta_struct(media_df):

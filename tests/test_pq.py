@@ -30,7 +30,9 @@ def qc(spark):
     e = e.select("vec_id", F.transform(F.col("v0"), lambda x: x / norm).alias("v"))
     q = e.filter(F.col("vec_id") < 5).select(F.col("vec_id").alias("q_id"), "v").cache()
     c = e.filter(F.col("vec_id") >= 5).select(F.col("vec_id").alias("c_id"), "v").cache()
-    return q, c
+    yield q, c
+    q.unpersist()
+    c.unpersist()
 
 
 def test_pq_recall_and_determinism(spark, qc):

@@ -82,6 +82,50 @@ def test_append_sort_by_survives_rebalance(spark, tmp_path):
         assert spark.read.parquet(path).count() == 300
 
 
+def _empty_batch(spark, tmp_path, source):
+    """An input that yields no rows, built the ways an ETL batch gets there."""
+    from pyspark.sql import functions as F
+
+    if source == "static":
+        return spark.createDataFrame([], SCHEMA)
+    folder = tmp_path / "in"
+    folder.mkdir()
+    if source == "malformed":
+        (folder / "a.json").write_text("{broken\nNOT JSON\n")
+    elif source == "filtered":
+        (folder / "a.json").write_text('{"id": 1, "v": "x"}\n{"id": 2, "v": "y"}\n')
+    df = read_json_lines(spark, str(folder), SCHEMA)
+    return df.filter(F.col("id") > 100) if source == "filtered" else df
+
+
+@pytest.mark.parametrize("partition_by", [["v"], None], ids=["partitioned", "unpartitioned"])
+@pytest.mark.parametrize("source", ["static", "empty_folder", "malformed", "filtered"])
+def test_empty_first_append_leaves_no_directory(spark, tmp_path, source, partition_by):
+    """A first write that appends no rows leaves no table behind: the
+    directory the write created is removed, whether Spark ran the
+    observed count (unpartitioned) or skipped it (partitioned)."""
+    import os
+
+    out = str(tmp_path / "t")
+    write_append_idempotent(
+        _empty_batch(spark, tmp_path, source), out, keys=["id"], partition_by=partition_by
+    )
+    assert not os.path.exists(out)
+
+
+def test_first_append_caches_nothing(spark, tmp_path):
+    """A first write has no target to anti-join, so it writes the dedup
+    directly and leaves no entry in Spark's CacheManager."""
+    # start from an empty CacheManager: earlier modules' frames are not
+    # this writer's to count
+    spark.catalog.clearCache()
+    out = str(tmp_path / "t")
+    df = spark.createDataFrame([(1, "a"), (2, "b"), (2, "b")], ["id", "v"])
+    write_append_idempotent(df, out, keys=["id"], partition_by=["v"])
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert spark.read.parquet(out).count() == 2
+
+
 def test_write_overwrite(spark, tmp_path):
     out = str(tmp_path / "t")
     write_overwrite(spark.createDataFrame([(1, "a")], ["id", "v"]), out)

@@ -175,11 +175,14 @@ def etl(spark, tmp_path_factory):
     braw = read_json_lines(spark, _write_jsonl(tmp, "business.json", BUSINESSES), BUSINESS_RAW_SCHEMA)
     rraw = read_json_lines(spark, _write_jsonl(tmp, "review.json", REVIEWS), REVIEW_RAW_SCHEMA)
     uraw = read_json_lines(spark, _write_jsonl(tmp, "user.json", USERS), USER_RAW_SCHEMA)
-    return {
+    frames = {
         "business": business_etl(braw).cache(),
         "review": review_etl(rraw).cache(),
         "user": user_etl(uraw, as_of="2026-01-01 00:00:00").cache(),
     }
+    yield frames
+    for df in frames.values():
+        df.unpersist()
 
 
 # --- business (reference Business_ETL.py; test_cases/business.py) ----------

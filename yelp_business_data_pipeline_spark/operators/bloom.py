@@ -280,7 +280,6 @@ def bloom_prefilter(
     n_bits: int,
     n_hashes: int,
     impl: str = "md5",
-    persist: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Split a batch against a filter built over the persistent store's
     keys: ``(definitely_novel, candidates)``.
@@ -293,20 +292,14 @@ def bloom_prefilter(
     fraction through :func:`~.incdedup.exact_annotate` and unioning the
     novel rows back yields EXACTLY the direct full-join annotation.
 
-    The annotated frame persists before the split by default (the
-    stream_crawl_pipeline both-consumers rule): a caller acts on BOTH
-    halves by definition, and without the persist each half would
-    re-run the probe plan — doubling the very cost the prefilter
-    amortizes. The cache entry lives until Spark evicts it — fine for
-    batch jobs, a per-call LEAK for always-on loops: long-running
-    callers should pass ``persist=False`` and manage the lifecycle
-    themselves via :func:`bloom_may_contain` (the streaming crawl sink
-    does exactly that, unpersisting per micro-batch)."""
+    Both halves are lazy filters over one probe plan, so each half that
+    runs re-runs the probe. A caller that consumes both halves should
+    make the split itself: persist the :func:`bloom_may_contain` frame,
+    filter it on ``may_contain``, and unpersist it once both halves are
+    consumed — as the streaming crawl sink does per micro-batch."""
     annotated = bloom_may_contain(
         df, bloom, value_col, n_bits, n_hashes, impl=impl
     )
-    if persist:
-        annotated = annotated.persist()
     novel = annotated.filter(~F.col("may_contain")).drop("may_contain")
     candidates = annotated.filter(F.col("may_contain")).drop("may_contain")
     return novel, candidates

@@ -5,10 +5,10 @@ session timezone (oracle comparability), Arrow enabled (fast pandas
 interchange for the few Pandas-UDF operators). ``spark.sql.shuffle.partitions``
 defaults to 32 (``SPARK_GRAFT_SHUFFLE`` or ``shuffle_partitions`` override
 it), whatever the core count; AQE coalesces it down at runtime, except in
-a persisted frame, which keeps the full count (why the writers rebalance:
-``sources/writers.py`` notes). On a real cluster the deployer sets the
-count (rule of thumb: 2-3× total executor cores, or rely on AQE coalescing
-from a higher initial number).
+a persisted frame, which keeps the full count (why an append into an
+existing table rebalances: ``sources/writers.py`` notes). On a real cluster
+the deployer sets the count (rule of thumb: 2-3× total executor cores, or
+rely on AQE coalescing from a higher initial number).
 """
 
 from __future__ import annotations

@@ -11,8 +11,9 @@ Scale notes: partitioned writes enable partition pruning downstream;
 ``partitionOverwriteMode=dynamic`` (set in the session factory) makes
 partitioned overwrites replace only touched partitions. The anti-join reads
 only the key column of the existing table (column-pruned parquet scan), so
-idempotent append at 100 TB costs one key-scan + the dedup shuffle + one
-rebalance shuffle, not a rewrite.
+idempotent append into an existing table at 100 TB costs one key-scan + the
+dedup shuffle + one rebalance shuffle, not a rewrite; a first write has no
+key-scan, and an unpartitioned one no rebalance.
 
 Write layout (``_write_table``, shared by every writer): a partitioned write
 is rebalanced by its partition columns, so AQE sizes the write tasks and a
@@ -21,11 +22,13 @@ write adds about ``partition values × ⌈bytes / advisory size⌉`` files
 one file per partition value at small scale, a hot value split at the
 advisory size (``OptimizeSkewInRebalancePartitions``). An unpartitioned
 write keeps its upstream tasks (file-scan splits, or a final shuffle that
-AQE coalesces). The exception is ``write_append_idempotent``: it writes off
-a persisted shuffle, which keeps all ``spark.sql.shuffle.partitions`` while
+AQE coalesces). The exception is ``write_append_idempotent`` into an
+existing target: it writes off a persisted anti-join, which keeps all
+``spark.sql.shuffle.partitions`` while
 ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`` is off
-(Spark's default), so its unpartitioned append gets a plain REBALANCE. Each
-rebalance costs one extra shuffle-map stage.
+(Spark's default), so that unpartitioned append gets a plain REBALANCE. A
+first write caches nothing, so AQE coalesces its dedup shuffle like any
+other. Each rebalance costs one extra shuffle-map stage.
 """
 
 from __future__ import annotations
@@ -33,7 +36,7 @@ from __future__ import annotations
 import datetime as _dt
 import threading
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 # Above this many affected partitions, merge_upsert switches its rewrite-set
 # predicate from a literal OR-of-ANDs (statically prunable, provable in
@@ -240,10 +243,15 @@ def write_append_idempotent(
     the user table's ``friend`` column for friendless users) must still
     dedupe — a plain equi-anti-join would re-append NULL-keyed rows forever.
 
-    Cost: the deduplicating shuffle, the anti-join against the existing
-    key column, and one rebalance shuffle before the write (module notes).
+    Cost: a first write (no target yet) is the deduplicating shuffle and
+    the write, with no cache and no emptiness probe. An append into an
+    existing target adds the anti-join against its key column, a persist
+    of its result with an emptiness probe, and one rebalance shuffle
+    (module notes).
     """
     from functools import reduce
+
+    from pyspark.sql import functions as F
 
     spark: SparkSession = df.sparkSession
     fresh = df.dropDuplicates(keys)
@@ -255,26 +263,36 @@ def write_append_idempotent(
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
     _recover_stale_swap(spark, fs, jvm, path)
+    # Appending nothing must not create table state: an empty write would
+    # still materialize the directory, falsely signalling "this domain has
+    # data" to consumers gating on table existence (pipeline.py's unified
+    # DAG gate).
+    if not fs.exists(hpath):
+        # First write: nothing to anti-join against, so the dedup is written
+        # directly and counted inside the write job. The directory was absent
+        # on entry, so a write that counted no rows removes what it created.
+        obs = Observation()
+        _write_table(
+            fresh.observe(obs, F.count(F.lit(1)).alias("rows")),
+            path, "append", partition_by, sort_by,
+        )
+        if _observed_rows(obs) == 0 and fs.exists(hpath) and not fs.delete(hpath, True):
+            raise IOError(f"write_append_idempotent: failed to remove empty {path}")
+        return
     existing_keys = (
         _read_target(spark, path, df, [c for c in (partition_by or []) if c in keys])
         .select(*keys)
         .alias("_existing")
-        if fs.exists(hpath)
-        else None
     )
-    if existing_keys is not None:
-        fresh_a = fresh.alias("_fresh")
-        cond = reduce(
-            lambda a, b: a & b,
-            [fresh_a[k].eqNullSafe(existing_keys[k]) for k in keys],
-        )
-        fresh = fresh_a.join(existing_keys, on=cond, how="left_anti")
-    # Appending nothing must not create table state: an empty write would
-    # still materialize the directory, falsely signalling "this domain has
-    # data" to consumers gating on table existence (pipeline.py's unified
-    # DAG gate). The anti-join is persisted so the emptiness probe and the
-    # write execute it ONCE, not twice (it scans the whole existing key
-    # column — at 100 TB recomputing it doubles the advertised cost).
+    fresh_a = fresh.alias("_fresh")
+    cond = reduce(
+        lambda a, b: a & b,
+        [fresh_a[k].eqNullSafe(existing_keys[k]) for k in keys],
+    )
+    fresh = fresh_a.join(existing_keys, on=cond, how="left_anti")
+    # The anti-join is persisted so the emptiness probe and the write
+    # execute it ONCE, not twice (it scans the whole existing key column —
+    # at 100 TB recomputing it doubles the advertised cost).
     cached = fresh.persist()
     try:
         if cached.isEmpty():
@@ -283,6 +301,17 @@ def write_append_idempotent(
         _write_table(out, path, "append", partition_by, sort_by)
     finally:
         cached.unpersist()
+
+
+def _observed_rows(obs: Observation) -> int:
+    """The ``rows`` count of an Observation attached to a write.
+
+    Spark never runs the observed node of an empty partitioned write
+    (pyspark 4.1.2): its metrics row is then empty, and ``Observation.get``
+    fails converting it. No metrics row means no row reached the node: 0."""
+    if obs._jo.getRow().length() == 0:
+        return 0
+    return obs.get["rows"]
 
 
 def merge_upsert(
