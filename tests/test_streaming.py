@@ -600,13 +600,11 @@ def test_stream_cdc_upsert_numeric_looking_string_partition(spark, tmp_path):
     run()
     assert os.path.exists(os.path.join(out, "p=01"))
     assert not os.path.exists(os.path.join(out, "p=1"))
-    from yelp_business_data_pipeline_spark.sources.writers import (
-        _read_no_partition_inference,
-    )
+    from yelp_business_data_pipeline_spark.sources.writers import _read_target
 
     got = sorted(
         (r.id, r.v, r.p, r.seq)
-        for r in _read_no_partition_inference(spark, out).collect()
+        for r in _read_target(spark, out, {"p": T.StringType()}).collect()
     )
     assert got == [(1, "newer", "01", 7)], got
 
@@ -1419,6 +1417,29 @@ def test_stream_web_crawl_pipeline_warc_source_equals_json(spark, tmp_path, sf_d
             str(tmp_path / "x4"), model, lm, cuts,
             source_format="avro", **knobs,
         )
+
+
+def test_stream_web_crawl_pipeline_bad_source_format_caches_nothing(spark, tmp_path):
+    """An unknown source_format is rejected before the frozen model frames
+    are persisted: the failed call leaves the caller's LM and cut frames
+    out of the cache."""
+    import pytest as _pytest
+
+    from yelp_business_data_pipeline_spark.streaming import stream_web_crawl_pipeline
+
+    spark.catalog.clearCache()
+    uni, bi, total, cuts = (spark.range(n).toDF("x") for n in (1, 2, 3, 4))
+    schema = T.StructType(
+        [T.StructField("url", T.StringType()), T.StructField("html", T.StringType())]
+    )
+    with _pytest.raises(ValueError, match="source_format"):
+        stream_web_crawl_pipeline(
+            spark, str(tmp_path / "src"), schema,
+            str(tmp_path / "x1"), str(tmp_path / "x2"), str(tmp_path / "x3"),
+            str(tmp_path / "x4"), None, (uni, bi, total), cuts,
+            source_format="warcs",
+        )
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_stream_web_crawl_pipeline_script_routing(spark, tmp_path, sf_dir):

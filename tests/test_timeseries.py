@@ -338,6 +338,97 @@ def test_exactly_once_refresh_survives_replay(spark, tmp_path):
     assert folded() == {("a", 0): (3, 7.0), ("b", 1): (2, 9.0)}
 
 
+def _stored_groups(spark, path):
+    """Group directories on disk, and the stored table read back with the
+    group typed as a string (so '01' and '1' stay apart)."""
+    import os
+
+    from pyspark.sql import types as T
+
+    from yelp_business_data_pipeline_spark.sources.writers import _read_target
+
+    dirs = sorted(d for d in os.listdir(path) if d.startswith("g="))
+    return dirs, _read_target(spark, path, {"g": T.StringType()})
+
+
+def test_continuous_aggregate_update_keeps_numeric_looking_groups_apart(spark, tmp_path):
+    """String groups '01' and '1' are two groups: refreshing '01' must add
+    to '01' alone. A read-back that infers the group type from directory
+    names sees both as int 1, matches both stored rows and stops the
+    refresh on merge_upsert's duplicate-key ValueError."""
+    from yelp_business_data_pipeline_spark.operators.timeseries import (
+        continuous_aggregate_update,
+    )
+
+    path = str(tmp_path / "rollup")
+    schema = "g string, t timestamp, v double"
+
+    def apply(rows):
+        continuous_aggregate_update(
+            spark.createDataFrame(rows, schema), path,
+            group_cols=["g"], ts_col="t", grain="hour", value_col="v",
+        )
+
+    apply([("01", _ts(0), 1.0), ("1", _ts(0), 10.0)])
+    apply([("01", _ts(0), 2.0)])
+    dirs, stored = _stored_groups(spark, path)
+    assert dirs == ["g=01", "g=1"]
+    assert {r.g: (r.n_events, r.value_sum) for r in stored.collect()} == {
+        "01": (2, 3.0),
+        "1": (1, 10.0),
+    }
+
+
+def test_continuous_aggregate_update_string_group_into_numeric_looking_store(spark, tmp_path):
+    """A stored rollup whose groups all look numeric must still take a
+    group 'ab': an inferred int group column would fail the join with
+    CAST_INVALID_INPUT. Every group stays a string."""
+    from yelp_business_data_pipeline_spark.operators.timeseries import (
+        continuous_aggregate_update,
+    )
+
+    path = str(tmp_path / "rollup")
+    schema = "g string, t timestamp, v double"
+    for rows in ([("1", _ts(0), 1.0), ("2", _ts(1), 2.0)], [("ab", _ts(0), 3.0), ("1", _ts(0), 4.0)]):
+        continuous_aggregate_update(
+            spark.createDataFrame(rows, schema), path,
+            group_cols=["g"], ts_col="t", grain="hour", value_col="v",
+        )
+    dirs, stored = _stored_groups(spark, path)
+    assert dirs == ["g=1", "g=2", "g=ab"]
+    assert {r.g: (r.n_events, r.value_sum) for r in stored.collect()} == {
+        "1": (2, 5.0),
+        "2": (1, 2.0),
+        "ab": (1, 3.0),
+    }
+
+
+def test_incremental_distinct_rollup_keeps_numeric_looking_groups_apart(spark, tmp_path):
+    """The distinct rollup reads its stored sketches back the same way:
+    refreshing '01' unions into '01' alone and leaves '1' as it was."""
+    from yelp_business_data_pipeline_spark.operators.timeseries import (
+        incremental_distinct_rollup,
+    )
+
+    path = str(tmp_path / "rollup")
+    schema = "g string, t timestamp, uid long"
+    b1 = [("01", _ts(0), i) for i in range(10)] + [("1", _ts(0), i) for i in range(3)]
+    b2 = [("01", _ts(0), i) for i in range(5, 20)]
+    for rows in (b1, b2):
+        incremental_distinct_rollup(
+            spark.createDataFrame(rows, schema), path,
+            group_cols=["g"], ts_col="t", grain="hour", id_col="uid",
+        )
+    dirs, stored = _stored_groups(spark, path)
+    assert dirs == ["g=01", "g=1"]
+    est = (
+        stored.select("g", F.hll_sketch_estimate("n_distinct_hll").alias("n"))
+        .collect()
+    )
+    # exact at this size: the HLL sketch is still in its exact list mode
+    assert {r.g: r.n for r in est} == {"01": 20, "1": 3}
+
+
 class TestEwmaByKey:
     @staticmethod
     def _model(rows, hl):

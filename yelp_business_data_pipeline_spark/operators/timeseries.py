@@ -111,6 +111,22 @@ def gapfill_locf(
     return out
 
 
+def _stored_matches(
+    delta: DataFrame, rollup_path: str, keys: list[str], pcols: list[str]
+) -> DataFrame | None:
+    """The stored rollup rows sharing a key with ``delta``, or None before
+    the first refresh. The partition columns are typed as ``delta`` types
+    them, not inferred from directory names (the typed read-back in
+    ``sources/writers.py``'s module notes)."""
+    from ..sources.writers import _exists, _read_target
+
+    spark = delta.sparkSession
+    if not _exists(spark, rollup_path):
+        return None
+    stored = _read_target(spark, rollup_path, {c: delta.schema[c].dataType for c in pcols})
+    return stored.join(delta.select(*keys), on=keys, how="left_semi")
+
+
 def continuous_aggregate_update(
     batch: DataFrame,
     rollup_path: str,
@@ -144,13 +160,16 @@ def continuous_aggregate_update(
     additive by design); feed it from exactly-once ingest (St1) or the CDC
     stream so each event arrives once.
 
+    The stored rows are read back by :func:`_stored_matches`: string
+    groups ``'01'`` and ``'1'`` stay two groups, and a numeric-looking
+    store still accepts a group ``'ab'``.
+
     Returns merge_upsert's stats dict.
     """
     from pyspark.sql import functions as F
 
     from ..sources.writers import merge_upsert
 
-    spark = batch.sparkSession
     gcols = list(group_cols)
     keys = [*gcols, bucket_col]
     pcols = [*gcols, "bucket_date"]
@@ -164,12 +183,9 @@ def continuous_aggregate_update(
         .withColumn("bucket_date", F.to_date(F.col(bucket_col)))
     )
 
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(rollup_path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(hpath):
-        existing = spark.read.parquet(rollup_path)
-        matched = existing.join(delta.select(*keys), on=keys, how="left_semi").select(
+    stored = _stored_matches(delta, rollup_path, keys, pcols)
+    if stored is not None:
+        matched = stored.select(
             *keys,
             F.col("n_events").alias("_old_n"),
             F.col("value_sum").alias("_old_s"),
@@ -214,13 +230,13 @@ def incremental_distinct_rollup(
     merging batches that SHARE ids stays correct — the sketch absorbs
     duplicates. Estimates carry standard HLL error (~2% at the default
     lgK); the union estimate can differ in the last ulps from a
-    single-pass sketch (mode promotion), never beyond sketch error.
+    single-pass sketch (mode promotion), never beyond sketch error. The
+    stored sketches are read back by :func:`_stored_matches`.
     """
     from pyspark.sql import functions as F
 
     from ..sources.writers import merge_upsert
 
-    spark = batch.sparkSession
     gcols = list(group_cols)
     keys = [*gcols, bucket_col]
     pcols = [*gcols, "bucket_date"]
@@ -231,12 +247,9 @@ def incremental_distinct_rollup(
         .withColumn("bucket_date", F.to_date(F.col(bucket_col)))
     )
 
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(rollup_path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(hpath):
-        existing = spark.read.parquet(rollup_path)
-        matched = existing.join(delta.select(*keys), on=keys, how="left_semi").select(
+    stored = _stored_matches(delta, rollup_path, keys, pcols)
+    if stored is not None:
+        matched = stored.select(
             *keys, F.col("n_distinct_hll").alias("_old_hll")
         )
         delta = (
@@ -310,7 +323,12 @@ def read_continuous_aggregate(
     """Fold a contribution table (see
     :func:`continuous_aggregate_update_exactly_once`) to one row per
     (group, bucket): counts sum; sums sum with NULL algebra (all-NULL
-    contributions stay NULL)."""
+    contributions stay NULL).
+
+    Unlike the refreshes, this read has no batch to type the group
+    columns from, so they keep Spark's directory-name type inference:
+    when every stored group looks numeric, string groups ``'01'`` and
+    ``'1'`` both read back as int 1 and fold into one row."""
     from pyspark.sql import functions as F
 
     gcols = list(group_cols)

@@ -44,7 +44,7 @@ from .operators.unified import unified_analytics
 from .operators.user import user_etl, user_friend_edges
 from .schemas import BUSINESS_RAW_SCHEMA, REVIEW_RAW_SCHEMA, USER_RAW_SCHEMA
 from .sources.readers import read_json_lines
-from .sources.writers import write_append_idempotent, write_overwrite
+from .sources.writers import _exists, write_append_idempotent, write_overwrite
 from .streaming.pipeline import stream_domain_etl
 
 
@@ -160,12 +160,6 @@ def run_streaming(
     return _rebuild_unified(spark, paths, build_graph)
 
 
-def _domain_exists(spark: SparkSession, path: str) -> bool:
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(hpath)
-
-
 def _rebuild_unified(
     spark: SparkSession, paths: YelpPaths, build_graph: bool
 ) -> dict[str, DataFrame]:
@@ -177,7 +171,7 @@ def _rebuild_unified(
     out: dict[str, DataFrame] = {
         d.name: spark.read.parquet(d.out_path(paths))
         for d in DOMAINS
-        if _domain_exists(spark, d.out_path(paths))
+        if _exists(spark, d.out_path(paths))
     }
     if len(out) == len(DOMAINS):
         biz_t, rev_t, usr_t = out["business"], out["review"], out["user"]

@@ -29,12 +29,38 @@ existing target: it writes off a persisted anti-join, which keeps all
 (Spark's default), so that unpartitioned append gets a plain REBALANCE. A
 first write caches nothing, so AQE coalesces its dedup shuffle like any
 other. Each rebalance costs one extra shuffle-map stage.
+
+Stored-table protocol (every module that reads a stored table back goes
+through these helpers; ``_filesystem`` is the one place a path's Hadoop
+``FileSystem`` is resolved, so any configured scheme works, not only local
+paths):
+
+- *Existence.* ``_exists`` asks the filesystem (a metadata call; a read
+  attempt on a missing path would work too, but logs a handled-exception
+  stack trace). The pipeline's unified-rebuild gate, the streams' stores
+  and the rollups use it.
+- *Crashed swaps.* A writer asks ``_recover_stale_swap`` instead, which
+  checks the primary and its swap backups in one pass: a primary missing
+  next to a backup is a crashed merge or compaction and raises, rather
+  than letting a first write mask the lost table; a backup next to a
+  primary is a finished swap's leftover and is deleted.
+- *Typed read-back.* ``_read_target`` reads a table back for merging with
+  its partition columns typed as the writer's frame types them. Spark's
+  default partition discovery infers a type from directory names, so a
+  string value ``'01'`` reads back as int 1, collides with ``'1'`` and is
+  re-written as ``g=1``; a numeric-looking store meeting a group ``'ab'``
+  then fails the cast. The read passes a schema instead: field names and
+  data-column types from the table itself (a column missing on either
+  side still fails the merge), partition-column types from the caller, and
+  Spark casts each raw directory string to that type without inference
+  (SPARK-26188). Switching partition type inference off in the session
+  conf would do the same, but every other read on the session during that
+  window would lose inference too.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
-import threading
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 
@@ -47,14 +73,6 @@ AFFECTED_LITERAL_MAX = 32
 
 #: Directory name Spark/Hive use for a NULL partition value.
 HIVE_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
-
-# partitionColumnTypeInference is a SESSION conf: set/restore around a read
-# races with concurrent jobs on the same SparkSession (two CDC streams, a
-# merge next to a compaction). Partition discovery happens eagerly inside
-# spark.read.parquet, so holding this lock across {set, read, restore}
-# scopes the override correctly for every in-process caller.
-_PARTITION_INFERENCE_LOCK = threading.Lock()
-
 
 def _escape_partition_value(spark: SparkSession, v) -> str:
     """Directory-name form of one partition value, exactly as Spark wrote it.
@@ -91,48 +109,44 @@ def _escape_partition_value(spark: SparkSession, v) -> str:
     )
 
 
-def _read_no_partition_inference(spark: SparkSession, path: str) -> DataFrame:
-    """spark.read.parquet with directory-name partition-TYPE inference off,
-    concurrency-safe: the session conf is mutated only inside the module
-    lock (see _PARTITION_INFERENCE_LOCK). All partition columns arrive as
-    written strings; callers cast explicitly."""
-    conf_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    with _PARTITION_INFERENCE_LOCK:
-        old = spark.conf.get(conf_key)
-        spark.conf.set(conf_key, "false")
-        try:
-            return spark.read.parquet(path)
-        finally:
-            spark.conf.set(conf_key, old)
+def _filesystem(spark: SparkSession, path: str):
+    """``(fs, hpath)``: the Hadoop ``FileSystem`` holding ``path`` and the
+    path as a Hadoop ``Path`` (module notes)."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
 
 
-def _read_target(spark: SparkSession, path: str, like: DataFrame, pcols: list[str]) -> DataFrame:
-    """Read a parquet target for merging, with partition-column types taken
-    from the SOURCE schema instead of directory-name inference.
+def _exists(spark: SparkSession, path: str) -> bool:
+    """Whether a stored table (or any file) exists at ``path``."""
+    fs, hpath = _filesystem(spark, path)
+    return bool(fs.exists(hpath))
 
-    Default partition-type inference parses directory names, so a string
-    partition value that looks numeric ('01') reads back as int 1 —
-    changing key equality under eqNullSafe and re-writing the partition as
-    p=1. Disable inference for this read (partition values arrive as
-    written strings) and cast to the source column's type: exact for the
-    string case, and the identical parse Spark would have done otherwise
-    for genuinely-typed columns.
-    """
-    from pyspark.sql import functions as F
 
-    tgt = _read_no_partition_inference(spark, path)
-    for c in pcols:
-        tgt = tgt.withColumn(c, F.col(c).cast(like.schema[c].dataType))
-    return tgt
+def _read_target(spark: SparkSession, path: str, partition_types: dict) -> DataFrame:
+    """Read a stored table back for merging, with the partition columns
+    named in ``partition_types`` (col -> Spark DataType) typed as given
+    rather than inferred from directory names (module notes)."""
+    from pyspark.sql import types as T
+
+    stored = spark.read.parquet(path)
+    if not partition_types:
+        return stored
+    schema = T.StructType(
+        [
+            T.StructField(f.name, partition_types.get(f.name, f.dataType), f.nullable)
+            for f in stored.schema
+        ]
+    )
+    return spark.read.schema(schema).parquet(path)
 
 
 #: staged-swap backup suffixes, one per swapping writer.
 _BACKUP_SUFFIXES = ("__premerge", "__precompact")
 
 
-def _recover_stale_swap(spark: SparkSession, fs, jvm, path: str) -> None:
+def _recover_stale_swap(fs, jvm, path: str) -> bool:
     """Detect a crashed directory swap BEFORE treating the target as absent
-    or readable.
+    or readable; return whether the target exists.
 
     The swap protocol (write staging -> rename primary to backup -> rename
     staging to primary -> delete backup) can crash in two observable
@@ -161,6 +175,7 @@ def _recover_stale_swap(spark: SparkSession, fs, jvm, path: str) -> None:
                 f"Restore it (rename {path}{suffix} back to {path}) before "
                 "writing; refusing to create a fresh table over lost data"
             )
+    return bool(primary_exists)
 
 
 def _swap_directories(fs, jvm, path: str, staging: str, backup: str, op: str) -> None:
@@ -255,19 +270,12 @@ def write_append_idempotent(
 
     spark: SparkSession = df.sparkSession
     fresh = df.dropDuplicates(keys)
-    # Does the target exist yet? (filesystem metadata check — a read attempt
-    # would work but logs a scary handled-exception stack trace). A missing
-    # path with a swap backup present is a crashed merge/compact — refuse
-    # to treat it as first-write (that would mask the lost table).
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    _recover_stale_swap(spark, fs, jvm, path)
     # Appending nothing must not create table state: an empty write would
     # still materialize the directory, falsely signalling "this domain has
     # data" to consumers gating on table existence (pipeline.py's unified
     # DAG gate).
-    if not fs.exists(hpath):
+    fs, hpath = _filesystem(spark, path)
+    if not _recover_stale_swap(fs, spark._jvm, path):
         # First write: nothing to anti-join against, so the dedup is written
         # directly and counted inside the write job. The directory was absent
         # on entry, so a write that counted no rows removes what it created.
@@ -279,8 +287,9 @@ def write_append_idempotent(
         if _observed_rows(obs) == 0 and fs.exists(hpath) and not fs.delete(hpath, True):
             raise IOError(f"write_append_idempotent: failed to remove empty {path}")
         return
+    key_types = {c: df.schema[c].dataType for c in partition_by or [] if c in keys}
     existing_keys = (
-        _read_target(spark, path, df, [c for c in (partition_by or []) if c in keys])
+        _read_target(spark, path, key_types)
         .select(*keys)
         .alias("_existing")
     )
@@ -426,16 +435,12 @@ def _merge_upsert_body(
         return {"created": False, "affected_partitions": 0, "emptied_partitions": 0}
 
     jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    # A missing path with a swap backup present is a crashed merge/compact:
-    # creating a "new" table here would silently mask the lost history.
-    _recover_stale_swap(spark, fs, jvm, path)
-    if not fs.exists(hpath):
+    fs, _ = _filesystem(spark, path)
+    if not _recover_stale_swap(fs, jvm, path):
         write_overwrite(fresh, path, partition_by=partition_by, sort_by=sort_by)
         return {"created": True, "affected_partitions": 0, "emptied_partitions": 0}
 
-    tgt = _read_target(spark, path, fresh, pcols)
+    tgt = _read_target(spark, path, {c: fresh.schema[c].dataType for c in pcols})
     src_keys = fresh.select(*keys).dropDuplicates(keys).alias("_src")
 
     def _key_cond(left):
@@ -557,10 +562,11 @@ def compact_parquet(
     clustered on the partition columns so each partition directory
     collapses to one file (a heavily-skewed single partition stays one
     task — acceptable for maintenance; split it manually if it exceeds
-    executor memory). ``partition_types`` (col -> Spark DataType) re-reads
-    with directory-name type inference DISABLED and casts explicitly — the
-    same '01'-reads-back-as-1 hazard merge_upsert guards against; pass it
-    whenever partition values are strings that can look numeric.
+    executor memory). ``partition_types`` (col -> Spark DataType) types
+    those partition columns on the read instead of inferring them from
+    directory names — the typed read-back of the module notes, which guards
+    the same '01'-reads-back-as-1 hazard for merge_upsert; pass it whenever
+    partition values are strings that can look numeric.
 
     Staged rewrite: write to ``<path>__compacting``, then swap directories
     via filesystem renames so readers never observe a HALF-written table.
@@ -576,23 +582,14 @@ def compact_parquet(
     import math
 
     jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(conf)
-    _recover_stale_swap(spark, fs, jvm, path)
+    fs, hpath = _filesystem(spark, path)
+    _recover_stale_swap(fs, jvm, path)
     total_bytes = fs.getContentSummary(hpath).getLength()
     n_files = max(1, math.ceil(total_bytes / (target_mb * 1024 * 1024)))
 
     staging = f"{path}__compacting"
     backup = f"{path}__precompact"
-    if partition_types:
-        from pyspark.sql import functions as F
-
-        df = _read_no_partition_inference(spark, path)
-        for c, dt in partition_types.items():
-            df = df.withColumn(c, F.col(c).cast(dt))
-    else:
-        df = spark.read.parquet(path)
+    df = _read_target(spark, path, partition_types or {})
     if partition_by:
         writer = df.repartition(n_files, *partition_by).write.mode("overwrite").partitionBy(
             *partition_by
@@ -755,10 +752,8 @@ def merge_bloom_store(
 
     spark = new_words.sparkSession
     jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    _recover_stale_swap(spark, fs, jvm, path)
-    if not fs.exists(hpath):
+    fs, _ = _filesystem(spark, path)
+    if not _recover_stale_swap(fs, jvm, path):
         new_words.write.mode("overwrite").parquet(path)
         return
     # an empty fold is a no-op on an OR-bitmap — skip the full

@@ -36,7 +36,47 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..sources.writers import write_append_idempotent
+from ..sources.writers import _exists, _read_target, write_append_idempotent
+
+
+def _json_file_stream(
+    spark: SparkSession,
+    source_dir: str,
+    schema: T.StructType,
+    max_files_per_trigger: int | None,
+) -> DataFrame:
+    """The shared stream reader: schema-pinned JSON file source, optional
+    per-trigger file cap. Only *.json files trigger processing — the
+    reference Lambda skips non-JSON keys (trigeer_ETL_Pipeline.py:70-72)."""
+    reader = spark.readStream.schema(schema).option("pathGlobFilter", "*.json")
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    return reader.json(source_dir)
+
+
+def _drain(
+    raw: DataFrame,
+    sink: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+    on_batch_complete: Callable[[int], None] | None,
+):
+    """Start the query every stream here runs: ``sink(batch_df, epoch_id)``
+    per micro-batch under Trigger.AvailableNow (drain what is present, then
+    stop), checkpointed at ``checkpoint_dir``. ``on_batch_complete(epoch_id)``
+    runs after the sink's writes and before Spark commits the batch to the
+    checkpoint."""
+
+    def _batch(batch_df: DataFrame, epoch_id: int) -> None:
+        sink(batch_df, epoch_id)
+        if on_batch_complete is not None:
+            on_batch_complete(epoch_id)
+
+    return (
+        raw.writeStream.foreachBatch(_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def stream_domain_etl(
@@ -70,12 +110,7 @@ def stream_domain_etl(
     restarted query REPLAYS the batch. Exactly-once table state survives
     because the sink is the keyed idempotent writer (replayed rows
     anti-join away) — pinned by the checkpoint-recovery test."""
-    # Only *.json files trigger processing — the reference Lambda skips
-    # non-JSON keys (trigeer_ETL_Pipeline.py:70-72).
-    reader = spark.readStream.schema(schema).option("pathGlobFilter", "*.json")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    raw = reader.json(source_dir)
+    raw = _json_file_stream(spark, source_dir, schema, max_files_per_trigger)
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
         write_append_idempotent(
@@ -85,15 +120,8 @@ def stream_domain_etl(
             partition_by=partition_by,
             sort_by=sort_by,
         )
-        if on_batch_complete is not None:
-            on_batch_complete(epoch_id)
 
-    return (
-        raw.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(raw, _sink, checkpoint_dir, on_batch_complete)
 
 
 def stream_cdc_upsert(
@@ -142,25 +170,18 @@ def stream_cdc_upsert(
 
     if compact_every is not None and compact_every < 1:
         raise ValueError(f"compact_every must be >= 1, got {compact_every}")
-    reader = spark.readStream.schema(schema).option("pathGlobFilter", "*.json")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    raw = reader.json(source_dir)
+    raw = _json_file_stream(spark, source_dir, schema, max_files_per_trigger)
+    ptypes = {c: schema[c].dataType for c in partition_by or []}
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
         from functools import reduce
 
-        from ..sources.writers import _read_target
-
         src = batch_df
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(out_path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(hpath):
+        if _exists(spark, out_path):
             # _read_target, not a raw read: directory-name type inference
             # would re-type numeric-looking string partition values ('01'
             # -> 1) and silently re-home their rows on the next merge.
-            existing = _read_target(spark, out_path, src, list(partition_by or []))
+            existing = _read_target(spark, out_path, ptypes)
             # null-safe key match, like merge_upsert's own joins: a
             # null-keyed stored row must still enter out-of-order
             # arbitration, or an older change in the batch regresses it.
@@ -180,9 +201,6 @@ def stream_cdc_upsert(
             dedup_order_by=order_by,
         )
         if compact_every is not None and (epoch_id + 1) % compact_every == 0:
-            ptypes = (
-                {c: schema[c].dataType for c in partition_by} if partition_by else None
-            )
             compact_parquet(
                 spark,
                 out_path,
@@ -190,29 +208,8 @@ def stream_cdc_upsert(
                 partition_by=partition_by,
                 partition_types=ptypes,
             )
-        if on_batch_complete is not None:
-            on_batch_complete(epoch_id)
 
-    return (
-        raw.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def _json_file_stream(
-    spark: SparkSession,
-    source_dir: str,
-    schema: T.StructType,
-    max_files_per_trigger: int | None,
-) -> DataFrame:
-    """The shared crawl-ingest reader: schema-pinned JSON file source,
-    optional per-trigger file cap."""
-    reader = spark.readStream.schema(schema).option("pathGlobFilter", "*.json")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.json(source_dir)
+    return _drain(raw, _sink, checkpoint_dir, on_batch_complete)
 
 
 #: binaryFile's fixed source schema (required explicitly for streaming).
@@ -320,15 +317,6 @@ def _within_batch_fp_reps(
     )
 
 
-def _path_exists(sp: SparkSession, path: str) -> bool:
-    """Hadoop-FS existence check (works for any configured filesystem,
-    not just local paths) — shared by every store-backed batch stage."""
-    jvm = sp._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(sp._jsc.hadoopConfiguration())
-    return bool(fs.exists(hpath))
-
-
 def _annotate_against_store(
     reps: DataFrame,
     store_path: str,
@@ -344,7 +332,7 @@ def _annotate_against_store(
     from ..operators.incdedup import exact_dups_against_index
 
     sp = reps.sparkSession
-    if _path_exists(sp, store_path):
+    if _exists(sp, store_path):
         return exact_dups_against_index(
             reps, sp.read.parquet(store_path), id_col, text_col, prefix_tokens
         )
@@ -458,9 +446,7 @@ def stream_incremental_dedup(
         id_type = reps.schema[id_col].dataType
         ann = None
         if bloom_path is not None:
-            if not _path_exists(spark, bloom_path) and _path_exists(
-                spark, store_path
-            ):
+            if not _exists(spark, bloom_path) and _exists(spark, store_path):
                 # bloom enabled on a pipeline whose store PRE-EXISTS (or
                 # the bloom dir was lost): seed the filter from the
                 # store's fingerprints FIRST — a filter missing stored
@@ -477,7 +463,7 @@ def stream_incremental_dedup(
                     bloom_bits,
                     bloom_hashes,
                 )
-        if bloom_path is not None and _path_exists(spark, bloom_path):
+        if bloom_path is not None and _exists(spark, bloom_path):
             fps = reps.withColumn("_fp", fingerprint(F.col(text_col), prefix_tokens))
             # explicit lifecycle instead of bloom_prefilter: an always-on
             # stream must unpersist the probe frame per batch or leak one
@@ -525,15 +511,8 @@ def stream_incremental_dedup(
             novel.unpersist()
             if ann is not None:
                 ann.unpersist()
-        if on_batch_complete is not None:
-            on_batch_complete(epoch_id)
 
-    return (
-        raw.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(raw, _sink, checkpoint_dir, on_batch_complete)
 
 
 def stream_pretrain_screen(
@@ -599,15 +578,8 @@ def stream_pretrain_screen(
             verdicts.filter(F.col("keep")).select(id_col), id_col, "left_semi"
         ).select(*data_cols)
         merge_upsert(kept, out_path, keys=[id_col])
-        if on_batch_complete is not None:
-            on_batch_complete(epoch_id)
 
-    return (
-        raw.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(raw, _sink, checkpoint_dir, on_batch_complete)
 
 
 def stream_crawl_pipeline(
@@ -705,15 +677,8 @@ def stream_crawl_pipeline(
             )
         finally:
             novel.unpersist()
-        if on_batch_complete is not None:
-            on_batch_complete(epoch_id)
 
-    return (
-        raw.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(raw, _sink, checkpoint_dir, on_batch_complete)
 
 
 def stream_web_crawl_pipeline(
@@ -797,7 +762,6 @@ def stream_web_crawl_pipeline(
     from ..operators.urls import frontier_dedup
     from ..sources.writers import merge_upsert
 
-    lm, ppl_cuts = _persist_frozen_inputs(lm, ppl_cuts)
     if source_format == "json":
         raw = _json_file_stream(spark, source_dir, schema, max_files_per_trigger)
     elif source_format == "warc":
@@ -811,6 +775,7 @@ def stream_web_crawl_pipeline(
             f"stream_web_crawl_pipeline: unknown source_format "
             f"{source_format!r} — 'json' or 'warc'"
         )
+    lm, ppl_cuts = _persist_frozen_inputs(lm, ppl_cuts)
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
         sp = batch_df.sparkSession
@@ -818,7 +783,7 @@ def stream_web_crawl_pipeline(
         fresh = frontier_dedup(
             pages, url_col, [F.col(url_col)], canonical_col=canonical_col
         )
-        if _path_exists(sp, frontier_path):
+        if _exists(sp, frontier_path):
             fresh = fresh.join(
                 sp.read.parquet(frontier_path), canonical_col, "left_anti"
             )
@@ -884,15 +849,8 @@ def stream_web_crawl_pipeline(
                 novel.unpersist()
         finally:
             fresh.unpersist()
-        if on_batch_complete is not None:
-            on_batch_complete(epoch_id)
 
-    return (
-        raw.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(raw, _sink, checkpoint_dir, on_batch_complete)
 
 
 def streaming_event_counts(
