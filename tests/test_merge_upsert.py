@@ -524,3 +524,24 @@ def test_fractional_timestamp_partition_emptied_directory_deleted(spark, tmp_pat
     assert not any("10%3A30" in d for d in _os.listdir(path))
     got = sorted((r.id, r.v) for r in spark.read.parquet(path).collect())
     assert got == [(1, "a2"), (2, "b")]
+
+
+def test_unpartitioned_merge_into_path_with_trailing_slash(spark, tmp_path):
+    """A table path ending in '/' names the same table: the staging and
+    backup directories of the swap are siblings of the table, never
+    directories inside it."""
+    batches = [
+        spark.createDataFrame([(1, "a"), (2, "b")], ["id", "v"]),
+        spark.createDataFrame([(2, "B"), (3, "c")], ["id", "v"]),
+    ]
+    plain, slashed = str(tmp_path / "plain"), str(tmp_path / "tbl") + "/"
+    for batch in batches:
+        merge_upsert(batch, plain, keys=["id"])
+        merge_upsert(batch, slashed, keys=["id"])
+
+    def rows(path):
+        return sorted((r.id, r.v) for r in spark.read.parquet(path).collect())
+
+    assert rows(slashed) == rows(plain) == [(1, "a"), (2, "B"), (3, "c")]
+    assert sorted(os.listdir(tmp_path)) == ["plain", "tbl"]
+    assert not any(d.startswith("__") for d in os.listdir(slashed))

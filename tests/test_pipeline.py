@@ -3,9 +3,14 @@ idempotent re-run, catalog views, graph outputs."""
 
 from __future__ import annotations
 
+import dataclasses
 import json
+import os
+import threading
 
 import pytest
+from py4j.clientserver import ClientServerConnection
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from yelp_business_data_pipeline_spark.pipeline import YelpPaths, run_batch, run_streaming
@@ -103,3 +108,108 @@ def test_partitioned_domain_layout(spark, paths):
     il = spark.read.parquet(paths.business_out).filter(F.col("state") == "IL")
     assert il.count() == 3  # 3 categories of b1
     assert "unified" in out and out["unified"].count() == 15
+
+
+def _settled(spark):
+    """The status store, once the listener bus has delivered every event
+    of the jobs that have run so far."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    return sc.statusStore()
+
+
+def _job_ids(spark) -> set[int]:
+    jobs = _settled(spark).jobsList(None)
+    return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+
+def test_run_batch_jobs_carry_the_callers_group_and_tags(spark, paths):
+    """The domain loads run on their own threads, yet every job of the call
+    carries the caller's job group, description and session tag."""
+    sc = spark.sparkContext
+    group, tag = "run-batch-attribution", "run_batch_attribution"
+    before = _job_ids(spark)
+    sc.setJobGroup(group, "attributed run_batch")
+    spark.addTag(tag)
+    try:
+        run_batch(spark, paths)
+    finally:
+        spark.removeTag(tag)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    started = _job_ids(spark) - before
+    assert started
+    assert started <= set(sc.statusTracker().getJobIdsForGroup(group))
+    store = _settled(spark)
+    tagged = 0
+    for job_id in started:
+        job = store.job(job_id)
+        assert job.description().get() == "attributed run_batch", job_id
+        # Session tags reach the jobs of SQL executions; a parquet schema-
+        # inference job of the unified rebuild runs outside one, with no tag.
+        tags = [t for t in job.jobTags().mkString("\n").split("\n") if t]
+        if tags:
+            tagged += 1
+            assert any(t.endswith(f"-{tag}") for t in tags), (job_id, tags)
+    assert tagged
+
+
+def _threads() -> set[threading.Thread]:
+    """Live threads, less py4j's callback-server connections: the JVM opens
+    one whenever it calls into Python, which includes releasing a Python
+    object it garbage-collected (a streaming batch function, say), at any
+    time and unrelated to the call under test."""
+    def callback_connection(t: threading.Thread) -> bool:
+        target = getattr(t, "_target", None)
+        return isinstance(getattr(target, "__self__", None), ClientServerConnection)
+
+    return {t for t in threading.enumerate() if not callback_connection(t)}
+
+
+def _rows(df) -> list[str]:
+    return sorted(
+        json.dumps(r.asDict(recursive=True), sort_keys=True, default=str) for r in df.collect()
+    )
+
+
+def test_failed_load_lets_the_other_loads_finish(spark, paths, tmp_path):
+    """A missing review folder fails its load only: business and user are
+    written, unified is not rebuilt, and the call leaves no job or thread
+    running behind it."""
+    broken = dataclasses.replace(paths, review_raw=str(tmp_path / "no_reviews"))
+    threads = _threads()
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        run_batch(spark, broken)
+    assert os.path.isdir(paths.business_out) and os.path.isdir(paths.user_out)
+    assert not os.path.exists(paths.review_out)
+    assert not os.path.exists(paths.unified_out)
+    _settled(spark)
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+    assert _threads() <= threads  # no thread outlives the call
+
+
+def test_rerun_after_a_failed_load_matches_a_clean_run(spark, paths, tmp_path):
+    """Loads are idempotent: once the missing folder exists, re-running the
+    failed batch completes the missing domain and gives the same rows as
+    one clean run."""
+    broken = dataclasses.replace(paths, review_raw=str(tmp_path / "late_reviews"))
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        run_batch(spark, broken)
+    os.rename(paths.review_raw, broken.review_raw)
+    rerun = run_batch(spark, broken)
+    clean = run_batch(spark, dataclasses.replace(broken, out_dir=str(tmp_path / "clean")))
+    assert sorted(rerun) == sorted(clean) == ["business", "review", "unified", "user"]
+    for name in clean:
+        assert _rows(rerun[name]) == _rows(clean[name]), name
+
+
+def test_every_failed_load_is_reported(spark, paths, tmp_path):
+    """Two failed loads: the first in DOMAINS order is raised, and the
+    other is attached to it as a note."""
+    review_raw, user_raw = str(tmp_path / "no_reviews"), str(tmp_path / "no_users")
+    broken = dataclasses.replace(paths, review_raw=review_raw, user_raw=user_raw)
+    with pytest.raises(AnalysisException, match="no_reviews") as err:
+        run_batch(spark, broken)
+    notes = getattr(err.value, "__notes__", [])
+    assert len(notes) == 1 and "user load" in notes[0] and "no_users" in notes[0], notes
+    assert os.path.isdir(paths.business_out)

@@ -170,6 +170,29 @@ def test_compact_parquet(spark, tmp_path):
     assert sorted(r.id for r in spark.read.parquet(out).collect()) == rows_before
 
 
+
+def test_compact_parquet_path_with_trailing_slash(spark, tmp_path):
+    """Compacting ``tbl/`` stages and backs up beside the table, as for
+    ``tbl``: the same rows, and no ``__compacting`` or ``__precompact``
+    directory left inside the table or beside it."""
+    import os
+
+    from yelp_business_data_pipeline_spark.sources.writers import compact_parquet
+
+    def rows(path):
+        return sorted((r.id, r.v) for r in spark.read.parquet(path).collect())
+
+    plain, slashed = str(tmp_path / "plain"), str(tmp_path / "tbl") + "/"
+    for out in (plain, slashed):
+        for i in range(3):
+            spark.createDataFrame([(i * 10 + j, f"v{i}") for j in range(5)], ["id", "v"]).coalesce(
+                2
+            ).write.mode("append").parquet(out)
+        assert compact_parquet(spark, out, target_mb=128) == 1
+    assert rows(slashed) == rows(plain) and len(rows(plain)) == 15
+    assert sorted(os.listdir(tmp_path)) == ["plain", "tbl"]
+    assert not any(d.startswith("__") for d in os.listdir(slashed))
+
 def test_schema_evolution_on_append(spark, tmp_path):
     """Appended batches may gain columns over time (the reference re-infers
     schemas per batch, silently drifting; this engine reads evolved tables

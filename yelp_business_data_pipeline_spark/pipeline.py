@@ -8,7 +8,11 @@ UnifiedAnalytics; domains append, unified rebuilds; Glue crawler refreshes
 the catalog; CSV exports feed Neo4j. Here:
 
 - ``run_batch``   — one batch pass raw JSON -> processed parquet ->
-  unified -> (optional) graph tables. Domains use the idempotent append
+  unified -> (optional) graph tables. The three domain loads run
+  concurrently, as the reference DAG and ``run_streaming`` do; each load's
+  jobs carry the caller's job group, description and tags. The unified
+  gate is unchanged: it rebuilds once all three loads have finished and
+  all three tables exist. Domains use the idempotent append
   writer (re-running a batch is a no-op); unified is a plain overwrite
   rebuild (Spark deletes, then writes — a failed rebuild leaves the
   unified table missing until the next run rebuilds it).
@@ -29,6 +33,7 @@ by state (SURVEY.md §1.4) so downstream filters prune partitions.
 from __future__ import annotations
 
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from functools import partial
 from typing import NamedTuple
@@ -36,6 +41,7 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.util import inheritable_thread_target
 
 from .operators.business import business_etl
 from .operators.graph import build_edges, build_vertices
@@ -104,7 +110,7 @@ def _review_etl(raw: DataFrame, as_of: str | None) -> DataFrame:
     return review_etl(raw).withColumn("review_year", F.year("date"))
 
 
-#: In write order: business, review, user.
+#: In the order ``run_batch`` reports load failures: business, review, user.
 DOMAINS = (
     Domain("business", BUSINESS_RAW_SCHEMA, lambda raw, as_of: business_etl(raw), "state"),
     Domain("review", REVIEW_RAW_SCHEMA, _review_etl, "review_year"),
@@ -121,16 +127,39 @@ def run_batch(
     """One batch pass over the raw JSON folders. Returns the output tables,
     each registered as a ``yelp_<name>`` temp view.
 
+    The three domain loads (read, ETL, idempotent append) run concurrently,
+    one thread each, with the caller's job group, description and tags;
+    unified rebuilds after all three have finished.
+
     Idempotent: re-running with the same inputs appends nothing (domain
     writers anti-join on primary keys) and rebuilds unified to the same
     state.
+
+    Failure: a failed load does not stop the others. Once every load has
+    finished, the first failure in ``DOMAINS`` order is raised, with each
+    other failure attached to it as a note, and unified is not rebuilt.
+    The domains that loaded keep their rows; since the loads are
+    idempotent, re-running after the cause is fixed completes the missing
+    domain and rebuilds unified.
     """
-    for d in DOMAINS:
+    def load(d: Domain) -> None:
         raw = read_json_lines(spark, d.raw_path(paths), d.raw_schema)
         write_append_idempotent(
             d.etl(raw, as_of), d.out_path(paths), keys=DOMAIN_KEYS[d.name],
             partition_by=d.partition_by,
         )
+
+    # One wrap per submission: each clones the caller's local properties
+    # (job group, description, tags) for its own thread, so the threads
+    # never share the one Properties object Spark sets the execution id on.
+    with ThreadPoolExecutor(len(DOMAINS)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(load), d) for d in DOMAINS]
+    failed = [(d.name, e) for d, f in zip(DOMAINS, futures) if (e := f.exception()) is not None]
+    if failed:
+        (_, first), *rest = failed
+        for name, e in rest:
+            first.add_note(f"the {name} load also failed: {type(e).__name__}: {e}")
+        raise first
     return _rebuild_unified(spark, paths, build_graph)
 
 

@@ -144,6 +144,14 @@ def _read_target(spark: SparkSession, path: str, partition_types: dict) -> DataF
 _BACKUP_SUFFIXES = ("__premerge", "__precompact")
 
 
+def _swap_sibling(path: str, suffix: str) -> str:
+    """The staging or backup directory of a staged swap of table ``path``:
+    a sibling of the table, named from the path without its trailing
+    ``/`` (``tbl/`` gives ``tbl__merging``, never ``tbl/__merging`` inside
+    the table)."""
+    return f"{path.rstrip('/')}{suffix}"
+
+
 def _recover_stale_swap(fs, jvm, path: str) -> bool:
     """Detect a crashed directory swap BEFORE treating the target as absent
     or readable; return whether the target exists.
@@ -162,7 +170,8 @@ def _recover_stale_swap(fs, jvm, path: str) -> bool:
     """
     primary_exists = fs.exists(jvm.org.apache.hadoop.fs.Path(path))
     for suffix in _BACKUP_SUFFIXES:
-        b_path = jvm.org.apache.hadoop.fs.Path(f"{path}{suffix}")
+        backup = _swap_sibling(path, suffix)
+        b_path = jvm.org.apache.hadoop.fs.Path(backup)
         if not fs.exists(b_path):
             continue
         if primary_exists:
@@ -171,8 +180,8 @@ def _recover_stale_swap(fs, jvm, path: str) -> bool:
         else:
             raise IOError(
                 f"stale swap backup detected: {path} is missing but "
-                f"{path}{suffix} exists — a directory swap crashed mid-way. "
-                f"Restore it (rename {path}{suffix} back to {path}) before "
+                f"{backup} exists — a directory swap crashed mid-way. "
+                f"Restore it (rename {backup} back to {path}) before "
                 "writing; refusing to create a fresh table over lost data"
             )
     return bool(primary_exists)
@@ -449,7 +458,7 @@ def _merge_upsert_body(
     if not pcols:
         tgt_a = tgt.alias("_tgt")
         out = tgt_a.join(src_keys, on=_key_cond(tgt_a), how="left_anti").unionByName(fresh)
-        staging, backup = f"{path}__merging", f"{path}__premerge"
+        staging, backup = _swap_sibling(path, "__merging"), _swap_sibling(path, "__premerge")
         _write_table(out, staging, "overwrite", sort_by=sort_by)
         _swap_directories(fs, jvm, path, staging, backup, "merge")
         return {"created": False, "affected_partitions": 0, "emptied_partitions": 0}
@@ -587,8 +596,8 @@ def compact_parquet(
     total_bytes = fs.getContentSummary(hpath).getLength()
     n_files = max(1, math.ceil(total_bytes / (target_mb * 1024 * 1024)))
 
-    staging = f"{path}__compacting"
-    backup = f"{path}__precompact"
+    staging = _swap_sibling(path, "__compacting")
+    backup = _swap_sibling(path, "__precompact")
     df = _read_target(spark, path, partition_types or {})
     if partition_by:
         writer = df.repartition(n_files, *partition_by).write.mode("overwrite").partitionBy(
@@ -765,6 +774,6 @@ def merge_bloom_store(
     merged = merge_blooms(
         [spark.read.parquet(path), new_words], n_bits, n_hashes
     )
-    staging, backup = f"{path}__merging", f"{path}__premerge"
+    staging, backup = _swap_sibling(path, "__merging"), _swap_sibling(path, "__premerge")
     merged.write.mode("overwrite").parquet(staging)
     _swap_directories(fs, jvm, path, staging, backup, "merge")
