@@ -2,8 +2,7 @@
 construction guarantee, EXACT merge closure (bit equality, the KMV
 precedent), observed-vs-designed FPR, layout invariance, parameter
 guards, the exact DuckDB twin (BLOOM_MEMBERSHIP_ORACLE — rotation
-queue), JVM-only plan shape, and the incremental-dedup prefilter
-equivalence the module exists for."""
+queue) and JVM-only plan shape."""
 
 from __future__ import annotations
 
@@ -13,7 +12,6 @@ from pyspark.sql import functions as F
 from yelp_business_data_pipeline_spark.operators.bloom import (
     bloom_may_contain,
     bloom_params,
-    bloom_prefilter,
     build_bloom,
     merge_blooms,
 )
@@ -172,55 +170,3 @@ def test_registry_gate_layout():
     assert names.index("bloom_membership_panel") < 50
     assert QUERIES["bloom_membership_panel"].oracle == BLOOM_MEMBERSHIP_ORACLE
 
-
-def test_prefilter_equals_direct_store_join(spark):
-    """The reason the module exists: splitting a batch on the bloom and
-    running ONLY the may-contain fraction through the fingerprint-store
-    join must reproduce the direct full-join annotation exactly —
-    guaranteed by no-false-negatives, pinned here end to end against
-    operators/incdedup."""
-    from yelp_business_data_pipeline_spark.operators.incdedup import (
-        exact_dups_against_index,
-        exact_fingerprint_index,
-    )
-    from yelp_business_data_pipeline_spark.operators.text import fingerprint
-
-    store = spark.createDataFrame(
-        [
-            (1, "alpha beta gamma"),
-            (2, "alpha beta delta"),  # same 2-token fingerprint as 1
-            (3, "unique snowflake text"),
-            (4, "other corpus doc"),
-        ],
-        "doc_id long, text string",
-    )
-    batch = spark.createDataFrame(
-        [
-            (10, "alpha beta echo"),       # dup_of 1 (fingerprint match)
-            (11, "unique snowflake copy"),  # dup_of 3
-            (12, "genuinely novel page"),   # novel
-            (13, "another novel page"),     # novel
-        ],
-        "doc_id long, text string",
-    )
-    index = exact_fingerprint_index(store)
-    m, k = bloom_params(4, 0.01)
-    bl = build_bloom(index, "fingerprint", m, k)
-
-    direct = exact_dups_against_index(batch, index)
-
-    probed = batch.withColumn("_fp", fingerprint(F.col("text"), 2))
-    novel, candidates = bloom_prefilter(probed, bl, "_fp", m, k)
-    via_split = (
-        exact_dups_against_index(candidates.drop("_fp"), index)
-        .unionByName(
-            novel.drop("_fp").withColumn(
-                "dup_of", F.lit(None).cast("long")
-            )
-        )
-    )
-    d = {r["doc_id"]: r["dup_of"] for r in direct.collect()}
-    s = {r["doc_id"]: r["dup_of"] for r in via_split.collect()}
-    assert d == s == {10: 1, 11: 3, 12: None, 13: None}
-    # and the split genuinely skipped store work for the novel fraction
-    assert novel.count() >= 1

@@ -123,6 +123,23 @@ def _job_ids(spark) -> set[int]:
     return {jobs.apply(i).jobId() for i in range(jobs.size())}
 
 
+@pytest.mark.parametrize("mode", ["batch", "streaming"])
+def test_rebuild_reads_back_the_schema_an_inferring_read_gives(spark, paths, tmp_path, mode):
+    """The unified rebuild reads every table with a schema it already has
+    (no inference job); the frames carry the same columns, types and order
+    as a plain read of each table."""
+    if mode == "batch":
+        out = run_batch(spark, paths)
+    else:
+        out = run_streaming(spark, paths, checkpoint_dir=str(tmp_path / "ckpt"))
+    assert set(out) == {"business", "review", "user", "unified"}
+    for name, df in out.items():
+        inferred = spark.read.parquet(getattr(paths, f"{name}_out")).schema
+        assert [(f.name, f.dataType) for f in df.schema] == [
+            (f.name, f.dataType) for f in inferred
+        ], name
+
+
 def test_run_batch_jobs_carry_the_callers_group_and_tags(spark, paths):
     """The domain loads run on their own threads, yet every job of the call
     carries the caller's job group, description and session tag."""
@@ -141,17 +158,11 @@ def test_run_batch_jobs_carry_the_callers_group_and_tags(spark, paths):
     assert started
     assert started <= set(sc.statusTracker().getJobIdsForGroup(group))
     store = _settled(spark)
-    tagged = 0
     for job_id in started:
         job = store.job(job_id)
         assert job.description().get() == "attributed run_batch", job_id
-        # Session tags reach the jobs of SQL executions; a parquet schema-
-        # inference job of the unified rebuild runs outside one, with no tag.
         tags = [t for t in job.jobTags().mkString("\n").split("\n") if t]
-        if tags:
-            tagged += 1
-            assert any(t.endswith(f"-{tag}") for t in tags), (job_id, tags)
-    assert tagged
+        assert any(t.endswith(f"-{tag}") for t in tags), (job_id, tags)
 
 
 def _threads() -> set[threading.Thread]:

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -17,6 +18,33 @@ from yelp_business_data_pipeline_spark.streaming import (
 )
 
 from .test_yelp_etl import REVIEWS
+
+
+@pytest.fixture(scope="module")
+def frozen_models(spark, sf_dir):
+    """(classifier, bigram LM, perplexity cuts), fit once on the
+    reference corpus for every crawl-stream test in this module. The
+    streams cache the LM and cut frames; teardown releases them."""
+    from yelp_business_data_pipeline_spark.operators.ppl import (
+        fit_bigram_lm,
+        perplexity_thresholds,
+        score_perplexity,
+    )
+    from yelp_business_data_pipeline_spark.operators.qualityclf import (
+        train_quality_classifier,
+    )
+
+    ref = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    model = train_quality_classifier(
+        ref, F.col("lang") == "en", buckets=4096, n_train=256
+    )
+    lm = fit_bigram_lm(ref)
+    cuts = perplexity_thresholds(
+        score_perplexity(ref, lm, carry=("lang",)).filter(F.col("ppl").isNotNull())
+    )
+    yield model, lm, cuts
+    for f in (*lm, cuts):
+        f.unpersist()
 
 
 def test_stream_domain_etl_idempotent(spark, tmp_path):
@@ -778,7 +806,7 @@ def test_stream_incremental_dedup_dirty_batch_self_heals(spark, tmp_path):
     assert rows[0].text == "page body A"  # deterministic pick (text asc)
 
 
-def test_stream_pretrain_screen_frozen_models(spark, tmp_path, sf_dir):
+def test_stream_pretrain_screen_frozen_models(spark, tmp_path, sf_dir, frozen_models):
     """The streaming quality half of the crawl loop: classifier, LM,
     and perplexity cuts are fit ONCE on the reference corpus; the
     stream's kept set must equal the batch pretrain_screen run with the
@@ -787,25 +815,11 @@ def test_stream_pretrain_screen_frozen_models(spark, tmp_path, sf_dir):
     nothing (exactly-once table state)."""
     from pyspark.sql import functions as F
 
-    from yelp_business_data_pipeline_spark.operators.ppl import (
-        fit_bigram_lm,
-        perplexity_thresholds,
-        score_perplexity,
-    )
-    from yelp_business_data_pipeline_spark.operators.qualityclf import (
-        train_quality_classifier,
-    )
     from yelp_business_data_pipeline_spark.operators.screen import pretrain_screen
     from yelp_business_data_pipeline_spark.streaming import stream_pretrain_screen
 
     ref = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    model = train_quality_classifier(
-        ref, F.col("lang") == "en", buckets=4096, n_train=256
-    )
-    lm = fit_bigram_lm(ref)
-    cuts = perplexity_thresholds(
-        score_perplexity(ref, lm, carry=("lang",)).filter(F.col("ppl").isNotNull())
-    )
+    model, lm, cuts = frozen_models
     # min_kept_lines=0: the synthetic docs are single-line without
     # terminal punctuation, so C4's sentence floor would zero the kept
     # set (documented in quality_gate_panel) — relaxing ONLY that knob
@@ -878,7 +892,7 @@ def test_stream_pretrain_screen_frozen_models(spark, tmp_path, sf_dir):
     assert again == got_all
 
 
-def test_stream_crawl_pipeline_full_loop(spark, tmp_path, sf_dir):
+def test_stream_crawl_pipeline_full_loop(spark, tmp_path, sf_dir, frozen_models):
     """The complete production crawl day in one query — dedup against
     the accumulated store FIRST, then the frozen screen. Batch 2 carries
     a cross-snapshot dup (dropped before the screen ever prices it), a
@@ -889,25 +903,11 @@ def test_stream_crawl_pipeline_full_loop(spark, tmp_path, sf_dir):
     from pyspark.errors.exceptions.captured import StreamingQueryException
     from pyspark.sql import functions as F
 
-    from yelp_business_data_pipeline_spark.operators.ppl import (
-        fit_bigram_lm,
-        perplexity_thresholds,
-        score_perplexity,
-    )
-    from yelp_business_data_pipeline_spark.operators.qualityclf import (
-        train_quality_classifier,
-    )
     from yelp_business_data_pipeline_spark.operators.screen import pretrain_screen
     from yelp_business_data_pipeline_spark.streaming import stream_crawl_pipeline
 
     ref = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    model = train_quality_classifier(
-        ref, F.col("lang") == "en", buckets=4096, n_train=256
-    )
-    lm = fit_bigram_lm(ref)
-    cuts = perplexity_thresholds(
-        score_perplexity(ref, lm, carry=("lang",)).filter(F.col("ppl").isNotNull())
-    )
+    model, lm, cuts = frozen_models
     knobs = dict(min_words=20, min_stopword_hits=1, min_kept_lines=0)
 
     # crawl docs drawn from the reference corpus so verdicts are mixed;
@@ -1031,7 +1031,7 @@ def test_dirty_batch_collapse_is_deterministic_over_all_columns(spark):
     assert picks == {None}  # nulls-first over lang: one winner, every layout
 
 
-def test_stream_web_crawl_pipeline_from_raw_pages(spark, tmp_path, sf_dir):
+def test_stream_web_crawl_pipeline_from_raw_pages(spark, tmp_path, sf_dir, frozen_models):
     """The raw-page crawl loop: (url, html) in — frontier dedup before
     parsing, extraction, content dedup, frozen screen. Tracking-param
     mirrors collapse in-batch, a re-crawl under new params is
@@ -1041,26 +1041,12 @@ def test_stream_web_crawl_pipeline_from_raw_pages(spark, tmp_path, sf_dir):
     every file changes no table."""
     import shutil
 
-    from yelp_business_data_pipeline_spark.operators.ppl import (
-        fit_bigram_lm,
-        perplexity_thresholds,
-        score_perplexity,
-    )
-    from yelp_business_data_pipeline_spark.operators.qualityclf import (
-        train_quality_classifier,
-    )
     from yelp_business_data_pipeline_spark.operators.screen import pretrain_screen
     from yelp_business_data_pipeline_spark.operators.text import lang_id
     from yelp_business_data_pipeline_spark.streaming import stream_web_crawl_pipeline
 
     ref = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    model = train_quality_classifier(
-        ref, F.col("lang") == "en", buckets=4096, n_train=256
-    )
-    lm = fit_bigram_lm(ref)
-    cuts = perplexity_thresholds(
-        score_perplexity(ref, lm, carry=("lang",)).filter(F.col("ppl").isNotNull())
-    )
+    model, lm, cuts = frozen_models
     knobs = dict(min_words=20, min_stopword_hits=1, min_kept_lines=0)
 
     pool = [
@@ -1179,143 +1165,7 @@ def test_stream_web_crawl_pipeline_from_raw_pages(spark, tmp_path, sf_dir):
     assert after == before
 
 
-def test_stream_incremental_dedup_bloom_prefilter_same_state(spark, tmp_path):
-    """The bloom-accelerated loop must land EXACTLY the state of the
-    direct loop on the same crawl days — bloom-negative rows skip the
-    store join as guaranteed novel, may-contain rows go through it, and
-    the filter folds batch fingerprints ahead of the store merge. Also
-    pins the crash-replay hazard window the update ORDER exists for: an
-    injected crash AFTER the sink's writes (bloom already folded) must
-    replay to the identical final state — bloom-AHEAD-of-store is the
-    safe direction."""
-    import pytest
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    from yelp_business_data_pipeline_spark.streaming import stream_incremental_dedup
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    src = tmp_path / "crawl"
-    src.mkdir()
-    out = str(tmp_path / "corpus")
-    store = str(tmp_path / "store")
-    ckpt = str(tmp_path / "ckpt")
-    bloom = str(tmp_path / "bloom")
-    kw = dict(bloom_path=bloom, bloom_bits=63 * 512, bloom_hashes=5)
-
-    b1 = [
-        {"doc_id": 1, "text": "alpha beta gamma delta"},
-        {"doc_id": 2, "text": "totally different words here"},
-    ]
-    (src / "b1.json").write_text("\n".join(json.dumps(r) for r in b1))
-    stream_incremental_dedup(
-        spark, str(src), schema, out, store, ckpt, **kw
-    ).awaitTermination()
-    # the filter exists and covers the store's fingerprints
-    assert spark.read.parquet(bloom).count() > 0
-
-    b2 = [
-        {"doc_id": 10, "text": "alpha beta gamma delta"},  # dup of stored 1
-        {"doc_id": 11, "text": "fresh novel content one"},
-        {"doc_id": 12, "text": "fresh novel content one"},  # within-batch dup
-        {"doc_id": 13, "text": "another new page entirely"},
-    ]
-    (src / "b2.json").write_text("\n".join(json.dumps(r) for r in b2))
-
-    def _crash(epoch_id: int) -> None:
-        raise RuntimeError("injected crash between sink write and checkpoint commit")
-
-    q = stream_incremental_dedup(
-        spark, str(src), schema, out, store, ckpt, on_batch_complete=_crash, **kw
-    )
-    with pytest.raises(StreamingQueryException, match="injected crash"):
-        q.awaitTermination()
-    # replay: bloom already holds batch 2's prints (folded before the
-    # crash point); every batch-2 doc probes may-contain, the store join
-    # arbitrates, and the final state matches the direct loop's exactly
-    stream_incremental_dedup(
-        spark, str(src), schema, out, store, ckpt, **kw
-    ).awaitTermination()
-    final = sorted(r.doc_id for r in spark.read.parquet(out).collect())
-    assert final == [1, 2, 11, 13], f"bloom loop diverged: {final}"
-    assert {r.index_id for r in spark.read.parquet(store).collect()} == {1, 2, 11, 13}
-
-    # cross-check vs the direct (no-bloom) loop over the same two days
-    out2, store2, ckpt2 = (
-        str(tmp_path / "corpus2"), str(tmp_path / "store2"), str(tmp_path / "ckpt2")
-    )
-    stream_incremental_dedup(
-        spark, str(src), schema, out2, store2, ckpt2
-    ).awaitTermination()
-    direct = sorted(
-        (r.doc_id, r.text) for r in spark.read.parquet(out2).collect()
-    )
-    via = sorted((r.doc_id, r.text) for r in spark.read.parquet(out).collect())
-    assert direct == via
-
-    # the persistent filter still answers membership for every stored
-    # fingerprint (bloom >= store invariant)
-    from yelp_business_data_pipeline_spark.operators.bloom import bloom_may_contain
-    from yelp_business_data_pipeline_spark.operators.incdedup import (
-        exact_fingerprint_index,
-    )
-
-    idx = exact_fingerprint_index(spark.read.parquet(out))
-    ann = bloom_may_contain(
-        idx, spark.read.parquet(bloom), "fingerprint", 63 * 512, 5
-    )
-    assert ann.filter("NOT may_contain").count() == 0
-
-
-def test_stream_bloom_enabled_after_store_exists_seeds_from_store(spark, tmp_path):
-    """THE bloom>=store invariant at enable time: turning bloom_path on
-    for a pipeline whose fingerprint store already has entries (or
-    recreating a lost bloom dir) must seed the filter FROM THE STORE —
-    a batch-only filter would mark dups of pre-bloom documents
-    guaranteed-novel and re-insert them."""
-    from yelp_business_data_pipeline_spark.streaming import stream_incremental_dedup
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    src = tmp_path / "crawl"
-    src.mkdir()
-    out, store, ckpt = (
-        str(tmp_path / "corpus"), str(tmp_path / "store"), str(tmp_path / "ckpt")
-    )
-    # day 1: NO bloom — the store is born without a filter
-    (src / "b1.json").write_text(
-        json.dumps({"doc_id": 1, "text": "pre bloom page body"})
-    )
-    stream_incremental_dedup(
-        spark, str(src), schema, out, store, ckpt
-    ).awaitTermination()
-    # day 2: bloom enabled; the batch carries a dup of the PRE-BLOOM doc
-    (src / "b2.json").write_text(
-        "\n".join(
-            json.dumps(r)
-            for r in [
-                {"doc_id": 20, "text": "pre bloom page body"},  # dup of 1
-                {"doc_id": 21, "text": "genuinely new page"},
-            ]
-        )
-    )
-    stream_incremental_dedup(
-        spark, str(src), schema, out, store, ckpt,
-        bloom_path=str(tmp_path / "bloom"), bloom_bits=63 * 512, bloom_hashes=5,
-    ).awaitTermination()
-    final = sorted(r.doc_id for r in spark.read.parquet(out).collect())
-    assert final == [1, 21], f"pre-bloom dup re-inserted: {final}"
-
-
-def test_stream_web_crawl_pipeline_warc_source_equals_json(spark, tmp_path, sf_dir):
+def test_stream_web_crawl_pipeline_warc_source_equals_json(spark, tmp_path, sf_dir, frozen_models):
     """The r10 WARC front-end (source_format='warc'): the SAME pages fed
     as Common Crawl-style .warc.gz segments (one gzip member per record)
     must produce a byte-identical kept corpus, frontier, and store as
@@ -1325,27 +1175,13 @@ def test_stream_web_crawl_pipeline_warc_source_equals_json(spark, tmp_path, sf_d
 
     import pytest as _pytest
 
-    from yelp_business_data_pipeline_spark.operators.ppl import (
-        fit_bigram_lm,
-        perplexity_thresholds,
-        score_perplexity,
-    )
-    from yelp_business_data_pipeline_spark.operators.qualityclf import (
-        train_quality_classifier,
-    )
     from yelp_business_data_pipeline_spark.sources.warc import write_warc_bytes
     from yelp_business_data_pipeline_spark.streaming import (
         stream_web_crawl_pipeline,
     )
 
     ref = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    model = train_quality_classifier(
-        ref, F.col("lang") == "en", buckets=4096, n_train=256
-    )
-    lm = fit_bigram_lm(ref)
-    cuts = perplexity_thresholds(
-        score_perplexity(ref, lm, carry=("lang",)).filter(F.col("ppl").isNotNull())
-    )
+    model, lm, cuts = frozen_models
     knobs = dict(min_words=20, min_stopword_hits=1, min_kept_lines=0)
 
     pool = [
@@ -1442,33 +1278,19 @@ def test_stream_web_crawl_pipeline_bad_source_format_caches_nothing(spark, tmp_p
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
-def test_stream_web_crawl_pipeline_script_routing(spark, tmp_path, sf_dir):
+def test_stream_web_crawl_pipeline_script_routing(spark, tmp_path, sf_dir, frozen_models):
     """script_route flows through the crawl loop (r11): a page that
     PASSES the unrouted screen but is dominated by a non-latin script is
     rejected from the corpus when routing is on — while still entering
     the frontier and the fingerprint store like every rejected page —
     and the stream's keep set equals the batch screen's routed verdicts
     (the frozen-model equivalence pin, routing edition)."""
-    from yelp_business_data_pipeline_spark.operators.ppl import (
-        fit_bigram_lm,
-        perplexity_thresholds,
-        score_perplexity,
-    )
-    from yelp_business_data_pipeline_spark.operators.qualityclf import (
-        train_quality_classifier,
-    )
     from yelp_business_data_pipeline_spark.operators.screen import pretrain_screen
     from yelp_business_data_pipeline_spark.operators.text import lang_id
     from yelp_business_data_pipeline_spark.streaming import stream_web_crawl_pipeline
 
     ref = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    model = train_quality_classifier(
-        ref, F.col("lang") == "en", buckets=4096, n_train=256
-    )
-    lm = fit_bigram_lm(ref)
-    cuts = perplexity_thresholds(
-        score_perplexity(ref, lm, carry=("lang",)).filter(F.col("ppl").isNotNull())
-    )
+    model, lm, cuts = frozen_models
     knobs = dict(min_words=20, min_stopword_hits=1, min_kept_lines=0)
 
     pool = [
@@ -1542,7 +1364,7 @@ def test_stream_web_crawl_pipeline_script_routing(spark, tmp_path, sf_dir):
     assert canon[k_vic] in stored  # fingerprint indexed despite rejection
 
 
-def test_stream_web_crawl_pipeline_compression_gate(spark, tmp_path, sf_dir):
+def test_stream_web_crawl_pipeline_compression_gate(spark, tmp_path, sf_dir, frozen_models):
     """compression_bounds flows through the crawl loop (r11 session 2):
     with the cut placed between two otherwise-KEPT pages' DEFLATE
     ratios, the more-compressible page stays in the corpus and the other
@@ -1550,26 +1372,12 @@ def test_stream_web_crawl_pipeline_compression_gate(spark, tmp_path, sf_dir):
     the fingerprint store like every rejected page."""
     import zlib
 
-    from yelp_business_data_pipeline_spark.operators.ppl import (
-        fit_bigram_lm,
-        perplexity_thresholds,
-        score_perplexity,
-    )
-    from yelp_business_data_pipeline_spark.operators.qualityclf import (
-        train_quality_classifier,
-    )
     from yelp_business_data_pipeline_spark.operators.screen import pretrain_screen
     from yelp_business_data_pipeline_spark.operators.text import lang_id
     from yelp_business_data_pipeline_spark.streaming import stream_web_crawl_pipeline
 
     ref = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    model = train_quality_classifier(
-        ref, F.col("lang") == "en", buckets=4096, n_train=256
-    )
-    lm = fit_bigram_lm(ref)
-    cuts = perplexity_thresholds(
-        score_perplexity(ref, lm, carry=("lang",)).filter(F.col("ppl").isNotNull())
-    )
+    model, lm, cuts = frozen_models
     knobs = dict(min_words=20, min_stopword_hits=1, min_kept_lines=0)
 
     pool = [

@@ -14,6 +14,11 @@ synthetic JSON files through BOTH paths and prints ONE JSON line:
 ``domain_out_files`` is the parquet file count of the domain-ETL sink
 after its drain: the small files that B micro-batch appends leave behind.
 
+Two other modes print their own JSON line instead: ``--curve``, the
+batch-size amortization curve of the domain-ETL drain (:func:`curve`),
+and ``--crawl``, the raw-page crawl-loop throughput of
+``stream_web_crawl_pipeline`` (:func:`crawl`).
+
 Workload shape (deterministic, no RNG):
 - domain ETL: N files x M review-shaped JSON rows, maxFilesPerTrigger
   bounds each micro-batch (several batches, like the per-S3-object
@@ -411,193 +416,6 @@ def crawl() -> None:
         shutil.rmtree(base_root, ignore_errors=True)
 
 
-def dedup_bloom() -> None:
-    """Bloom store-join bypass A/B (VERDICT r10 item 5): drain the SAME
-    mostly-novel batch stream through ``stream_incremental_dedup`` with
-    ``bloom_path`` set vs None, against an identical PRE-POPULATED
-    fingerprint store, at 1x and 10x batch volume. Prints ONE JSON line::
-
-        {"metric": "dedup_bloom_ab", "store_rows": S, "rows": {...}}
-
-    Setup (untimed — these are deploy-time costs): the store / output
-    table / bloom bitmap are built DIRECTLY with the same batch
-    primitives the sink calls (merge_upsert + exact_fingerprint_index +
-    build_bloom/merge_bloom_store), at TWO store sizes, so the A/B also
-    measures how the verdict moves as the store grows while the bitmap
-    stays fixed. Each timed drain starts from a byte-identical copy of
-    (store, out[, bloom]) and a fresh checkpoint — the ONLY difference
-    between A and B rows is the prefilter. The win mechanism: bloom-
-    negative rows are guaranteed novel and skip the store read + rank-2
-    join; the bloom leg PAYS a per-batch bitmap read/fold/rewrite, so
-    it wins only once the store join costs more than that fixed work."""
-    import duckdb
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from yelp_business_data_pipeline_spark.operators.incdedup import (
-        exact_fingerprint_index,
-    )
-    from yelp_business_data_pipeline_spark.sources.writers import (
-        merge_bloom_store,
-        merge_upsert,
-    )
-    from yelp_business_data_pipeline_spark.streaming import (
-        stream_incremental_dedup,
-    )
-
-    from yelp_business_data_pipeline_spark.operators.bloom import bloom_params
-
-    spark = get_spark(app_name="bench-dedup-bloom")
-    base_root = tempfile.mkdtemp(prefix="stream_bloom_")
-    try:
-        texts = [
-            r[0][:32]
-            for r in duckdb.connect()
-            .execute(
-                "SELECT text FROM read_parquet("
-                "'/root/repo/.scaledata/sf0.1/documents.parquet') "
-                "ORDER BY doc_id LIMIT 200"
-            )
-            .fetchall()
-        ]
-
-        def doc_text(i: int) -> str:
-            # unique PREFIX: the store fingerprint is md5(first
-            # prefix_tokens tokens), so novelty must live at the front
-            return f"u{i} x{i} " + texts[i % len(texts)]
-
-        def write_docs(src_dir: str, lo: int, hi: int, n_files: int) -> int:
-            ids = list(range(lo, hi))
-            per = (len(ids) + n_files - 1) // n_files
-            for f in range(n_files):
-                chunk = ids[f * per : (f + 1) * per]
-                if not chunk:
-                    break
-                with open(os.path.join(src_dir, f"d{f:04d}.json"), "w") as fh:
-                    fh.write(
-                        "\n".join(
-                            json.dumps({"doc_id": i, "text": doc_text(i)})
-                            for i in chunk
-                        )
-                    )
-            return len(ids)
-
-        schema = T.StructType(
-            [
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("text", T.StringType()),
-            ]
-        )
-
-        def drain(src: str, base: str, bloom: bool, bits: int, hashes: int) -> float:
-            t0 = time.perf_counter()
-            q = stream_incremental_dedup(
-                spark,
-                src,
-                schema,
-                os.path.join(base, "out"),
-                os.path.join(base, "store"),
-                os.path.join(base, "ckpt"),
-                max_files_per_trigger=FILES_PER_TRIGGER,
-                bloom_path=os.path.join(base, "bloom") if bloom else None,
-                bloom_bits=bits,
-                bloom_hashes=hashes,
-            )
-            q.awaitTermination()
-            return time.perf_counter() - t0
-
-        def build_state(golden: str, n_seed: int, bits: int, hashes: int) -> None:
-            """Deploy-time state build with the sink's own primitives."""
-            base = F.element_at(
-                F.array(*[F.lit(t) for t in texts]),
-                (F.col("doc_id") % len(texts) + 1).cast("int"),
-            )
-            docs = spark.range(0, n_seed).select(
-                F.col("id").alias("doc_id"),
-                F.concat(
-                    F.lit("u"), F.col("id"), F.lit(" x"), F.col("id"),
-                    F.lit(" "), base,
-                ).alias("text"),
-            ).withColumn("doc_id", F.col("doc_id").cast("long"))
-            merge_upsert(docs, os.path.join(golden, "out"), keys=["doc_id"])
-            idx = exact_fingerprint_index(docs, "doc_id", "text", 2)
-            merge_upsert(idx, os.path.join(golden, "store"), keys=["index_id"])
-            from yelp_business_data_pipeline_spark.operators.bloom import (
-                build_bloom,
-            )
-
-            merge_bloom_store(
-                build_bloom(idx.select("fingerprint"), "fingerprint", bits, hashes),
-                os.path.join(golden, "bloom"),
-                bits,
-                hashes,
-            )
-
-        rows: dict[str, dict] = {}
-        store_sizes = {}
-        tiers = (
-            ("store40k", 40_000, (("1x", 5_000), ("10x", 50_000))),
-            ("store500k", 500_000, (("1x", 5_000), ("10x", 50_000))),
-            # the crossover tier: a store big enough that its per-batch
-            # join prices more than the bloom leg's fixed bitmap work
-            ("store10m", 10_000_000, (("10x", 50_000),)),
-        )
-        for tag, n_seed, scales in tiers:
-            bits, hashes = bloom_params(n_seed, 0.01)
-            golden = os.path.join(base_root, f"golden_{tag}")
-            os.makedirs(golden)
-            build_state(golden, n_seed, bits, hashes)
-            store_sizes[tag] = {
-                "rows": spark.read.parquet(os.path.join(golden, "store")).count(),
-                "bloom_bits": bits,
-                "bloom_hashes": hashes,
-            }
-            for scale, n_new in scales:
-                src = os.path.join(base_root, f"new_{tag}_{scale}")
-                os.makedirs(src)
-                total = write_docs(src, n_seed, n_seed + n_new, N_FILES)
-                for bloom in (False, True):
-                    rates = []
-                    for rep in range(REPEATS if scale == "1x" else 1):
-                        base = os.path.join(
-                            base_root, f"run_{tag}_{scale}_{bloom}_{rep}"
-                        )
-                        shutil.copytree(os.path.join(golden, "store"),
-                                        os.path.join(base, "store"))
-                        shutil.copytree(os.path.join(golden, "out"),
-                                        os.path.join(base, "out"))
-                        if bloom:
-                            shutil.copytree(os.path.join(golden, "bloom"),
-                                            os.path.join(base, "bloom"))
-                        rates.append(
-                            total / drain(src, base, bloom, bits, hashes)
-                        )
-                        # A/B honesty: both variants land the same state
-                        n_out = spark.read.parquet(
-                            os.path.join(base, "out")
-                        ).count()
-                        assert n_out == n_seed + n_new, (n_out, n_seed + n_new)
-                        shutil.rmtree(base, ignore_errors=True)
-                    key = f"{tag}_{scale}_{'bloom' if bloom else 'no_bloom'}"
-                    rows[key] = {
-                        "rows_per_s": round(sorted(rates)[len(rates) // 2]),
-                        "band": [round(min(rates)), round(max(rates))],
-                        "rows": total,
-                    }
-        print(
-            json.dumps(
-                {
-                    "metric": "dedup_bloom_ab",
-                    "stores": store_sizes,
-                    "rows": rows,
-                },
-                separators=(",", ":"),
-            )
-        )
-    finally:
-        shutil.rmtree(base_root, ignore_errors=True)
-
-
 def main() -> None:
     spark = get_spark(app_name="bench-streaming")
     base_root = tempfile.mkdtemp(prefix="stream_bench_")
@@ -651,6 +469,4 @@ def main() -> None:
 if __name__ == "__main__":
     if "--crawl" in sys.argv:
         sys.exit(crawl())
-    if "--dedup-bloom" in sys.argv:
-        sys.exit(dedup_bloom())
     sys.exit(curve() if "--curve" in sys.argv else main())

@@ -1,5 +1,4 @@
-"""Distributed Bloom filter — set membership as a DataFrame, the crawl
-frontier's cheap pre-filter.
+"""Distributed Bloom filter — set membership as a DataFrame.
 
 The filter IS a table, never a driver object: sparse bitmap words
 ``(word_idx long, word long)`` plus the build parameters carried on every
@@ -22,19 +21,12 @@ Everything is JVM expressions + JVM aggregates (``bit_or``, ``bool_and``,
 DuckDB twin (``plans.extensions.BLOOM_MEMBERSHIP_ORACLE``).
 
 Why a Bloom filter when the repo already has HLL/KMV/MG sketches: those
-answer *cardinality* questions; the frontier/incremental-dedup loop needs
-a *membership* question — "was this canonical URL / content fingerprint
-ever seen?" — where a false positive only costs a redundant store-join
-probe and a false negative would re-crawl or re-ingest. Bloom filters
-have NO false negatives by construction, so ``may_contain == false`` rows
-can skip the (much wider) persistent-store join entirely:
-:func:`bloom_prefilter` splits a batch that way, and the pytest
-integration pins that the split path's final annotation equals the
-direct store-join path's. At 100 TB the win is proportional to novelty:
-a mostly-novel crawl batch touches the store only for the small
-may-contain fraction, and the filter rides along at ~1.3 bytes/key
-(vs the store's full fingerprint rows) — broadcastable for billions of
-keys sharded, millions unsharded.
+answer *cardinality* questions; this one answers a *membership* question
+— "was this canonical URL / content fingerprint ever seen?" — with NO
+false negatives by construction, at ~1.3 bytes/key. It does not sit in
+front of the streaming fingerprint-store join: a store-join bypass that
+routed bloom-negative rows around it measured slower at every store size
+from 40k to 10M fingerprints (BASELINE.md, round-11 A/B) and was deleted.
 
 Word layout: 63 usable bits per word (positions 0..62). Bit 63 stays
 clear so ``1 << bit`` never reaches the sign bit — DuckDB raises on
@@ -53,7 +45,7 @@ every other sketch family).
 Reference scope note: the reference pipeline (notebook ETL glue,
 reference README.md) has no membership structure at all — this module is
 part of the LLM-scale extension surface, same tier as the incremental
-dedup store it accelerates (operators/incdedup.py).
+dedup store (operators/incdedup.py).
 """
 
 from __future__ import annotations
@@ -70,7 +62,6 @@ __all__ = [
     "build_bloom",
     "merge_blooms",
     "bloom_may_contain",
-    "bloom_prefilter",
 ]
 
 BITS_PER_WORD = 63  # sign bit never used — see module docstring
@@ -272,34 +263,3 @@ def bloom_may_contain(
         *df.columns, F.coalesce(F.col("_may"), F.lit(False)).alias(out_col)
     )
 
-
-def bloom_prefilter(
-    df: DataFrame,
-    bloom: DataFrame,
-    value_col: str,
-    n_bits: int,
-    n_hashes: int,
-    impl: str = "md5",
-) -> tuple[DataFrame, DataFrame]:
-    """Split a batch against a filter built over the persistent store's
-    keys: ``(definitely_novel, candidates)``.
-
-    ``definitely_novel`` rows (``may_contain == false``) are guaranteed
-    absent from the store — no false negatives — so the incremental-dedup
-    loop can skip the store join for them outright; only ``candidates``
-    (true members + the sized false-positive fraction) pay the wide
-    fingerprint-store join. Pinned in pytest: routing only the candidate
-    fraction through :func:`~.incdedup.exact_annotate` and unioning the
-    novel rows back yields EXACTLY the direct full-join annotation.
-
-    Both halves are lazy filters over one probe plan, so each half that
-    runs re-runs the probe. A caller that consumes both halves should
-    make the split itself: persist the :func:`bloom_may_contain` frame,
-    filter it on ``may_contain``, and unpersist it once both halves are
-    consumed — as the streaming crawl sink does per micro-batch."""
-    annotated = bloom_may_contain(
-        df, bloom, value_col, n_bits, n_hashes, impl=impl
-    )
-    novel = annotated.filter(~F.col("may_contain")).drop("may_contain")
-    candidates = annotated.filter(F.col("may_contain")).drop("may_contain")
-    return novel, candidates

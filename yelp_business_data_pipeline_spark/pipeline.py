@@ -104,6 +104,14 @@ class Domain(NamedTuple):
     def out_path(self, paths: YelpPaths) -> str:
         return getattr(paths, f"{self.name}_out")
 
+    def table_schema(self, etl: DataFrame) -> T.StructType:
+        """The schema a read of the table written from ``etl`` gives: the
+        partition column moves last, where Spark lists it."""
+        return T.StructType(
+            [f for f in etl.schema if f.name != self.partition_col]
+            + [f for f in etl.schema if f.name == self.partition_col]
+        )
+
 
 def _review_etl(raw: DataFrame, as_of: str | None) -> DataFrame:
     # review_year is derived and kept in the schema: it is the partition column
@@ -142,12 +150,13 @@ def run_batch(
     idempotent, re-running after the cause is fixed completes the missing
     domain and rebuilds unified.
     """
-    def load(d: Domain) -> None:
+    def load(d: Domain) -> T.StructType:
         raw = read_json_lines(spark, d.raw_path(paths), d.raw_schema)
+        etl = d.etl(raw, as_of)
         write_append_idempotent(
-            d.etl(raw, as_of), d.out_path(paths), keys=DOMAIN_KEYS[d.name],
-            partition_by=d.partition_by,
+            etl, d.out_path(paths), keys=DOMAIN_KEYS[d.name], partition_by=d.partition_by,
         )
+        return d.table_schema(etl)
 
     # One wrap per submission: each clones the caller's local properties
     # (job group, description, tags) for its own thread, so the threads
@@ -160,7 +169,7 @@ def run_batch(
         for name, e in rest:
             first.add_note(f"the {name} load also failed: {type(e).__name__}: {e}")
         raise first
-    return _rebuild_unified(spark, paths, build_graph)
+    return _rebuild_unified(spark, paths, build_graph, [f.result() for f in futures])
 
 
 def run_streaming(
@@ -186,26 +195,35 @@ def run_streaming(
     ]
     for q in streams:
         q.awaitTermination()
-    return _rebuild_unified(spark, paths, build_graph)
+    # the ETL over an empty raw frame: analysis only, no job
+    schemas = [
+        d.table_schema(d.etl(spark.createDataFrame([], d.raw_schema), as_of))
+        for d in DOMAINS
+    ]
+    return _rebuild_unified(spark, paths, build_graph, schemas)
 
 
 def _rebuild_unified(
-    spark: SparkSession, paths: YelpPaths, build_graph: bool
+    spark: SparkSession, paths: YelpPaths, build_graph: bool, schemas: list[T.StructType]
 ) -> dict[str, DataFrame]:
     # The reference's job DAG gates UnifiedAnalytics on ALL THREE domain
     # tasks having produced data (README.md:150,215: 'Only when all three
     # domains have data will the UnifiedAnalytics task execute'). Mirror
     # that: with any domain still missing, return what exists and skip the
     # unified rebuild.
+    # Every read names its schema (``schemas``, in ``DOMAINS`` order): an
+    # inferring read runs a schema job outside any SQL execution, which
+    # carries none of the session's tags.
     out: dict[str, DataFrame] = {
-        d.name: spark.read.parquet(d.out_path(paths))
-        for d in DOMAINS
+        d.name: spark.read.schema(s).parquet(d.out_path(paths))
+        for d, s in zip(DOMAINS, schemas)
         if _exists(spark, d.out_path(paths))
     }
     if len(out) == len(DOMAINS):
         biz_t, rev_t, usr_t = out["business"], out["review"], out["user"]
-        write_overwrite(unified_analytics(rev_t, usr_t, biz_t), paths.unified_out)
-        out["unified"] = spark.read.parquet(paths.unified_out)
+        unified = unified_analytics(rev_t, usr_t, biz_t)
+        write_overwrite(unified, paths.unified_out)
+        out["unified"] = spark.read.schema(unified.schema).parquet(paths.unified_out)
         if build_graph:
             out["vertices"] = build_vertices(biz_t, rev_t, usr_t)
             out["edges"] = build_edges(biz_t, rev_t, usr_t, user_friend_edges(usr_t))

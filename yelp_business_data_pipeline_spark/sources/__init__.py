@@ -10,7 +10,6 @@ from .warc import (
 from .writers import (
     compact_parquet,
     export_csv,
-    merge_bloom_store,
     merge_upsert,
     shard_assignment,
     shard_manifest,
@@ -32,7 +31,6 @@ __all__ = [
     "write_warc_bytes",
     "compact_parquet",
     "export_csv",
-    "merge_bloom_store",
     "merge_upsert",
     "shard_assignment",
     "shard_manifest",

@@ -742,38 +742,3 @@ def write_training_shards(
     manifest.coalesce(1).write.mode("overwrite").parquet(f"{path}/manifest")
     return df.sparkSession.read.parquet(f"{path}/manifest")
 
-
-def merge_bloom_store(
-    new_words: DataFrame,
-    path: str,
-    n_bits: int,
-    n_hashes: int,
-) -> None:
-    """Fold freshly-built bloom words into the persistent filter at
-    ``path`` (create it on first write). Same staging+swap discipline as
-    ``merge_upsert`` — the merged frame READS the current store, so an
-    in-place overwrite would clobber its own input; a crash between
-    write and swap recovers via the standard stale-swap rule. The merge
-    itself is exact bit_or (operators/bloom.py:merge_blooms), and every
-    stored row carries its build params, so folding with mismatched
-    (n_bits, n_hashes) raises in-plan instead of corrupting the bitmap."""
-    from ..operators.bloom import merge_blooms
-
-    spark = new_words.sparkSession
-    jvm = spark._jvm
-    fs, _ = _filesystem(spark, path)
-    if not _recover_stale_swap(fs, jvm, path):
-        new_words.write.mode("overwrite").parquet(path)
-        return
-    # an empty fold is a no-op on an OR-bitmap — skip the full
-    # read+rewrite+swap of the store (streaming replays and dup-heavy
-    # batches deliver empty novel sets routinely; merge_upsert's
-    # fresh.isEmpty() short-circuit, same reason)
-    if new_words.isEmpty():
-        return
-    merged = merge_blooms(
-        [spark.read.parquet(path), new_words], n_bits, n_hashes
-    )
-    staging, backup = _swap_sibling(path, "__merging"), _swap_sibling(path, "__premerge")
-    merged.write.mode("overwrite").parquet(staging)
-    _swap_directories(fs, jvm, path, staging, backup, "merge")

@@ -30,13 +30,19 @@ but any Spark-first engine should expose.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..sources.writers import _exists, _read_target, write_append_idempotent
+from ..sources.writers import (
+    _exists,
+    _read_target,
+    merge_upsert,
+    write_append_idempotent,
+)
 
 
 def _json_file_stream(
@@ -166,7 +172,7 @@ def stream_cdc_upsert(
     compaction stays exactly-once; partition-column types are pinned from
     the stream schema (never re-inferred from directory names).
     """
-    from ..sources.writers import compact_parquet, merge_upsert
+    from ..sources.writers import compact_parquet
 
     if compact_every is not None and compact_every < 1:
         raise ValueError(f"compact_every must be >= 1, got {compact_every}")
@@ -239,7 +245,6 @@ def _warc_file_stream(
     wants pages. Payload bytes decode as UTF-8 with replacement (crawl
     HTML is dirty by nature; the extractor downstream is the judge of
     content, and a decode error must not kill an always-on stream)."""
-    from collections.abc import Iterator
 
     import pandas as pd
 
@@ -317,46 +322,95 @@ def _within_batch_fp_reps(
     )
 
 
-def _annotate_against_store(
-    reps: DataFrame,
-    store_path: str,
-    id_col: str,
-    text_col: str,
-    prefix_tokens: int,
-) -> DataFrame:
-    """Annotate batch representatives against the persistent fingerprint
-    store (``dup_of`` NULL = novel); before the store's first write the
-    whole batch is novel, with ``dup_of`` mirroring id_col's ACTUAL type
-    (string-keyed corpora exist) so the annotated schema is identical
-    between the first batch and every later one."""
+@contextmanager
+def _novel_docs(
+    docs: DataFrame, store_path: str, id_col: str, text_col: str, prefix_tokens: int
+) -> Iterator[DataFrame]:
+    """The batch's NOVEL docs, persisted for the ``with`` block: the
+    within-batch fingerprint representatives that no OTHER doc in the
+    persistent fingerprint store shares a print with
+    (``exact_dups_against_index`` — two compact hash equi-joins; the
+    accumulated corpus text stays cold). Before the store's first write
+    every representative is novel.
+
+    Persisted because every caller consumes the set twice (its corpus
+    or screen leg, then the store write): without the cut the batch
+    window, the store read and the rank-2 join all run once per
+    consumer."""
     from ..operators.incdedup import exact_dups_against_index
 
-    sp = reps.sparkSession
+    novel = _within_batch_fp_reps(docs, id_col, text_col, prefix_tokens)
+    sp = novel.sparkSession
     if _exists(sp, store_path):
-        return exact_dups_against_index(
-            reps, sp.read.parquet(store_path), id_col, text_col, prefix_tokens
+        novel = (
+            exact_dups_against_index(
+                novel, sp.read.parquet(store_path), id_col, text_col, prefix_tokens
+            )
+            .filter(F.col("dup_of").isNull())
+            .drop("dup_of")
         )
-    return reps.withColumn(
-        "dup_of", F.lit(None).cast(reps.schema[id_col].dataType)
+    novel = novel.persist()
+    try:
+        yield novel
+    finally:
+        novel.unpersist()
+
+
+def _index_novel(
+    novel: DataFrame, store_path: str, id_col: str, text_col: str, prefix_tokens: int
+) -> None:
+    """Merge the novel docs' fingerprints into the store, keyed on the
+    doc id, so re-indexing a replayed batch is idempotent."""
+    from ..operators.incdedup import exact_fingerprint_index
+
+    merge_upsert(
+        exact_fingerprint_index(novel, id_col, text_col, prefix_tokens),
+        store_path,
+        keys=["index_id"],
     )
 
 
-def _persist_frozen_inputs(lm, ppl_cuts: DataFrame):
-    """Cache the frozen model frames (LM count tables + cut points)
-    before a stream starts: they are consumed by EVERY micro-batch, and
+def _frozen_screen(
+    clf_model, lm, ppl_cuts: DataFrame, id_col: str, text_col: str, by: str, **knobs
+) -> Callable[[DataFrame], DataFrame]:
+    """The composed pretraining screen (operators/screen.py) over FROZEN
+    models, built once per stream call: returns ``kept(docs)``, the docs
+    whose verdict is ``keep`` (a left-semi join on ``id_col``, so the
+    docs' own columns pass through). ``knobs`` are the stream's screen
+    thresholds, passed to ``pretrain_screen`` unchanged.
+
+    The model frames (LM count tables + cut points) are cached here,
+    before the stream starts: EVERY micro-batch consumes them, and
     without the cache each foreachBatch would re-run the full
-    reference-corpus aggregations behind them (lazy lineage). MEMORY_AND_DISK:
-    a web-scale bigram table spills instead of evicting. At true scale,
-    prefer passing parquet-backed frames (write the fitted tables once,
-    read them back) — this cache is the in-session safety net, not a
-    substitute."""
+    reference-corpus aggregations behind them (lazy lineage).
+    MEMORY_AND_DISK: a web-scale bigram table spills instead of
+    evicting. At true scale, prefer passing parquet-backed frames (write
+    the fitted tables once, read them back) — this cache is the
+    in-session safety net, not a substitute."""
     from pyspark import StorageLevel
 
-    uni, bi, total = lm
-    frames = (uni, bi, total, ppl_cuts)
-    for f in frames:
+    from ..operators.screen import pretrain_screen
+
+    for f in (*lm, ppl_cuts):
         f.persist(StorageLevel.MEMORY_AND_DISK)
-    return (uni, bi, total), ppl_cuts
+
+    def kept(docs: DataFrame) -> DataFrame:
+        verdicts = pretrain_screen(
+            docs,
+            clf_model,
+            lm,
+            id_col=id_col,
+            text_col=text_col,
+            carry=(by,),
+            by=by,
+            ppl_cuts=ppl_cuts,
+            **knobs,
+        )
+        return docs.join(
+            verdicts.filter(F.col("keep")).select(id_col), id_col, "left_semi"
+        )
+
+    return kept
 
 
 def stream_incremental_dedup(
@@ -371,9 +425,6 @@ def stream_incremental_dedup(
     prefix_tokens: int = 2,
     max_files_per_trigger: int | None = None,
     on_batch_complete: Callable[[int], None] | None = None,
-    bloom_path: str | None = None,
-    bloom_bits: int = 63 * (1 << 20),
-    bloom_hashes: int = 5,
 ):
     """Streaming crawl-ingest dedup: the incremental (cross-snapshot)
     dedup family (operators/incdedup.py) wired into a file stream — the
@@ -407,110 +458,14 @@ def stream_incremental_dedup(
     provenance exists transiently inside the batch. Run the batch
     ``incremental_dedup_panel`` machinery over a snapshot when an audit
     trail is needed.
-
-    ``bloom_path`` (optional) maintains a persistent Bloom filter over
-    the store's fingerprints (operators/bloom.py) and splits each batch
-    on it BEFORE the store join: bloom-negative rows are GUARANTEED
-    novel (no false negatives) and skip the store read entirely — on a
-    mostly-novel crawl batch the wide store join prices only the
-    may-contain fraction. WHEN TO USE (measured, BASELINE.md round-11
-    A/B): only when the per-batch store READ is the expensive term — a
-    store on remote object storage (each batch re-reads it; the bitmap
-    is ~16 MB at 10M prints vs a multi-GB store scan) or a store too
-    large to hash-join per batch. On executor-local NVMe leave it None:
-    the store join is two narrow hash equi-joins and the bloom leg's
-    extra per-batch jobs (bitmap read + probe, build, read+fold+rewrite)
-    measured SLOWER at every store size from 40k to 10M fingerprints. Update ORDER is the correctness invariant
-    (the frontier-written-LAST rule, inverted): the filter folds the
-    batch's novel fingerprints FIRST, then the corpus/store merge — the
-    bloom may run AHEAD of the store (a false positive costs one store
-    probe that finds nothing -> still novel) but can never fall BEHIND
-    it (a bloom-negative for an indexed print would re-insert a dup).
-    A replay therefore recomputes the identical novel set whether the
-    crash hit before or after the bloom fold (pinned). Size
-    ``bloom_bits`` for the corpus you expect (bloom_params); the stored
-    rows carry their build params, so restarting with different sizing
-    raises loudly instead of corrupting the bitmap.
     """
-    from ..operators.incdedup import exact_fingerprint_index
-    from ..operators.text import fingerprint
-    from ..sources.writers import merge_bloom_store, merge_upsert
-
     raw = _json_file_stream(spark, source_dir, schema, max_files_per_trigger)
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-        from ..operators.bloom import bloom_may_contain, build_bloom
-
         unique = _collapse_one_row_per_id(batch_df, id_col, text_col)
-        reps = _within_batch_fp_reps(unique, id_col, text_col, prefix_tokens)
-        id_type = reps.schema[id_col].dataType
-        ann = None
-        if bloom_path is not None:
-            if not _exists(spark, bloom_path) and _exists(spark, store_path):
-                # bloom enabled on a pipeline whose store PRE-EXISTS (or
-                # the bloom dir was lost): seed the filter from the
-                # store's fingerprints FIRST — a filter missing stored
-                # prints would mark their future dups guaranteed-novel
-                # and re-insert them (the bloom >= store invariant)
-                merge_bloom_store(
-                    build_bloom(
-                        spark.read.parquet(store_path).select("fingerprint"),
-                        "fingerprint",
-                        bloom_bits,
-                        bloom_hashes,
-                    ),
-                    bloom_path,
-                    bloom_bits,
-                    bloom_hashes,
-                )
-        if bloom_path is not None and _exists(spark, bloom_path):
-            fps = reps.withColumn("_fp", fingerprint(F.col(text_col), prefix_tokens))
-            # explicit lifecycle instead of bloom_prefilter: an always-on
-            # stream must unpersist the probe frame per batch or leak one
-            # cache entry per micro-batch into executor storage
-            ann = bloom_may_contain(
-                fps, spark.read.parquet(bloom_path), "_fp",
-                bloom_bits, bloom_hashes,
-            ).persist()
-            annotated = _annotate_against_store(
-                ann.filter(F.col("may_contain"))
-                .drop("may_contain", "_fp"),
-                store_path, id_col, text_col, prefix_tokens,
-            ).unionByName(
-                ann.filter(~F.col("may_contain"))
-                .drop("may_contain", "_fp")
-                .withColumn("dup_of", F.lit(None).cast(id_type))
-            )
-        else:
-            annotated = _annotate_against_store(
-                reps, store_path, id_col, text_col, prefix_tokens
-            )
-        # persist: BOTH writes consume novel — without the cut the batch
-        # window, store read, and rank-2 join all run twice per batch
-        novel = annotated.filter(F.col("dup_of").isNull()).drop("dup_of").persist()
-        try:
-            # ONE fingerprint-index projection feeds both the bloom fold
-            # and the store merge
-            idx = exact_fingerprint_index(novel, id_col, text_col, prefix_tokens)
-            if bloom_path is not None:
-                # bloom folds FIRST — see the update-order invariant above
-                merge_bloom_store(
-                    build_bloom(
-                        idx.select("fingerprint"),
-                        "fingerprint",
-                        bloom_bits,
-                        bloom_hashes,
-                    ),
-                    bloom_path,
-                    bloom_bits,
-                    bloom_hashes,
-                )
+        with _novel_docs(unique, store_path, id_col, text_col, prefix_tokens) as novel:
             merge_upsert(novel, out_path, keys=[id_col])
-            merge_upsert(idx, store_path, keys=["index_id"])
-        finally:
-            novel.unpersist()
-            if ann is not None:
-                ann.unpersist()
+            _index_novel(novel, store_path, id_col, text_col, prefix_tokens)
 
     return _drain(raw, _sink, checkpoint_dir, on_batch_complete)
 
@@ -551,33 +506,23 @@ def stream_pretrain_screen(
     docs are dropped (persist only the screened corpus); run the batch
     ``pretrain_screen`` over a snapshot for per-doc audit columns.
     """
-    from ..operators.screen import pretrain_screen
-    from ..sources.writers import merge_upsert
-
-    lm, ppl_cuts = _persist_frozen_inputs(lm, ppl_cuts)
+    screen = _frozen_screen(
+        clf_model,
+        lm,
+        ppl_cuts,
+        id_col,
+        text_col,
+        by,
+        clf_threshold=clf_threshold,
+        min_words=min_words,
+        min_stopword_hits=min_stopword_hits,
+        min_kept_lines=min_kept_lines,
+    )
     raw = _json_file_stream(spark, source_dir, schema, max_files_per_trigger)
-    data_cols = [f.name for f in schema.fields]
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
         unique = _collapse_one_row_per_id(batch_df, id_col, text_col)
-        verdicts = pretrain_screen(
-            unique,
-            clf_model,
-            lm,
-            id_col=id_col,
-            text_col=text_col,
-            carry=(by,),
-            by=by,
-            clf_threshold=clf_threshold,
-            min_words=min_words,
-            min_stopword_hits=min_stopword_hits,
-            min_kept_lines=min_kept_lines,
-            ppl_cuts=ppl_cuts,
-        )
-        kept = unique.join(
-            verdicts.filter(F.col("keep")).select(id_col), id_col, "left_semi"
-        ).select(*data_cols)
-        merge_upsert(kept, out_path, keys=[id_col])
+        merge_upsert(screen(unique), out_path, keys=[id_col])
 
     return _drain(raw, _sink, checkpoint_dir, on_batch_complete)
 
@@ -635,48 +580,25 @@ def stream_crawl_pipeline(
     store row), the verdict is a pure function of (doc, frozen models),
     and both sinks are keyed merge_upserts.
     """
-    from ..operators.incdedup import exact_fingerprint_index
-    from ..operators.screen import pretrain_screen
-    from ..sources.writers import merge_upsert
-
-    lm, ppl_cuts = _persist_frozen_inputs(lm, ppl_cuts)
+    screen = _frozen_screen(
+        clf_model,
+        lm,
+        ppl_cuts,
+        id_col,
+        text_col,
+        by,
+        clf_threshold=clf_threshold,
+        min_words=min_words,
+        min_stopword_hits=min_stopword_hits,
+        min_kept_lines=min_kept_lines,
+    )
     raw = _json_file_stream(spark, source_dir, schema, max_files_per_trigger)
-    data_cols = [f.name for f in schema.fields]
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
         unique = _collapse_one_row_per_id(batch_df, id_col, text_col)
-        reps = _within_batch_fp_reps(unique, id_col, text_col, prefix_tokens)
-        annotated = _annotate_against_store(
-            reps, store_path, id_col, text_col, prefix_tokens
-        )
-        # persist: the screen leg AND the index write both consume novel
-        novel = annotated.filter(F.col("dup_of").isNull()).drop("dup_of").persist()
-        try:
-            verdicts = pretrain_screen(
-                novel,
-                clf_model,
-                lm,
-                id_col=id_col,
-                text_col=text_col,
-                carry=(by,),
-                by=by,
-                clf_threshold=clf_threshold,
-                min_words=min_words,
-                min_stopword_hits=min_stopword_hits,
-                min_kept_lines=min_kept_lines,
-                ppl_cuts=ppl_cuts,
-            )
-            kept = novel.join(
-                verdicts.filter(F.col("keep")).select(id_col), id_col, "left_semi"
-            ).select(*data_cols)
-            merge_upsert(kept, out_path, keys=[id_col])
-            merge_upsert(
-                exact_fingerprint_index(novel, id_col, text_col, prefix_tokens),
-                store_path,
-                keys=["index_id"],
-            )
-        finally:
-            novel.unpersist()
+        with _novel_docs(unique, store_path, id_col, text_col, prefix_tokens) as novel:
+            merge_upsert(screen(novel), out_path, keys=[id_col])
+            _index_novel(novel, store_path, id_col, text_col, prefix_tokens)
 
     return _drain(raw, _sink, checkpoint_dir, on_batch_complete)
 
@@ -756,11 +678,8 @@ def stream_web_crawl_pipeline(
     never re-screened; route them to a per-script pipeline from the raw
     pages instead). A multilingual crawl wants this ON."""
     from ..operators.htmlx import extract_main_text
-    from ..operators.incdedup import exact_fingerprint_index
-    from ..operators.screen import pretrain_screen
     from ..operators.text import lang_id
     from ..operators.urls import frontier_dedup
-    from ..sources.writers import merge_upsert
 
     if source_format == "json":
         raw = _json_file_stream(spark, source_dir, schema, max_files_per_trigger)
@@ -775,7 +694,21 @@ def stream_web_crawl_pipeline(
             f"stream_web_crawl_pipeline: unknown source_format "
             f"{source_format!r} — 'json' or 'warc'"
         )
-    lm, ppl_cuts = _persist_frozen_inputs(lm, ppl_cuts)
+    screen = _frozen_screen(
+        clf_model,
+        lm,
+        ppl_cuts,
+        canonical_col,
+        "text",
+        by,
+        clf_threshold=clf_threshold,
+        min_words=min_words,
+        min_stopword_hits=min_stopword_hits,
+        min_kept_lines=min_kept_lines,
+        script_route=script_route,
+        route_scripts=route_scripts,
+        compression_bounds=compression_bounds,
+    )
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
         sp = batch_df.sparkSession
@@ -804,49 +737,20 @@ def stream_web_crawl_pipeline(
                 )
                 .withColumn(by, lang_id(F.col("text")))
             )
-            reps = _within_batch_fp_reps(docs, canonical_col, "text", prefix_tokens)
-            annotated = _annotate_against_store(
-                reps, store_path, canonical_col, "text", prefix_tokens
-            )
-            novel = annotated.filter(F.col("dup_of").isNull()).drop("dup_of").persist()
-            try:
-                verdicts = pretrain_screen(
-                    novel,
-                    clf_model,
-                    lm,
-                    id_col=canonical_col,
-                    text_col="text",
-                    carry=(by,),
-                    by=by,
-                    clf_threshold=clf_threshold,
-                    min_words=min_words,
-                    min_stopword_hits=min_stopword_hits,
-                    min_kept_lines=min_kept_lines,
-                    ppl_cuts=ppl_cuts,
-                    script_route=script_route,
-                    route_scripts=route_scripts,
-                    compression_bounds=compression_bounds,
-                )
-                kept = novel.join(
-                    verdicts.filter(F.col("keep")).select(canonical_col),
-                    canonical_col,
-                    "left_semi",
-                ).select(canonical_col, by, "title", "text")
-                merge_upsert(kept, out_path, keys=[canonical_col])
+            with _novel_docs(
+                docs, store_path, canonical_col, "text", prefix_tokens
+            ) as novel:
                 merge_upsert(
-                    exact_fingerprint_index(
-                        novel, canonical_col, "text", prefix_tokens
-                    ),
-                    store_path,
-                    keys=["index_id"],
+                    screen(novel).select(canonical_col, by, "title", "text"),
+                    out_path,
+                    keys=[canonical_col],
                 )
+                _index_novel(novel, store_path, canonical_col, "text", prefix_tokens)
                 # frontier LAST: content-dup pages record here too, so a
                 # re-crawl of a mirror url is frontier-dropped next time
                 merge_upsert(
                     fresh.select(canonical_col), frontier_path, keys=[canonical_col]
                 )
-            finally:
-                novel.unpersist()
         finally:
             fresh.unpersist()
 
