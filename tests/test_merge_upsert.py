@@ -184,30 +184,40 @@ def test_unpartitioned_merge_full_semantics(spark, tmp_path):
 
 
 def test_affected_partition_predicate_prunes_scan(spark, tmp_path):
-    """The rewrite-set scan must prune at the FILE INDEX (PartitionFilters),
-    not post-scan — the read-side half of the touched-slice-only claim (the
-    mtime test above is the write-side half)."""
-    from functools import reduce
-
-    from pyspark.sql import functions as F
+    """The merge's own reads, counted from Spark's ``number of files read``
+    metrics: the matched-key scan reads every file once and the rewrite
+    slice only the affected partitions' files — at 5 and at 40 affected
+    partitions alike (the read-side half of the touched-slice-only claim;
+    the mtime test above is the write-side half)."""
+    from tests.files_read import files_read
+    from yelp_business_data_pipeline_spark.sources.writers import write_overwrite
 
     out = str(tmp_path / "t")
-    _seed(spark, out)
-    tgt = spark.read.parquet(out)
-    pred = reduce(
-        lambda a, b: a | b, [tgt["p"].eqNullSafe(F.lit(v)) for v in (1, 2)]
+    n = 300
+    write_overwrite(
+        spark.range(n).selectExpr("id", "concat('v', id) AS v", "id AS p"), out, partition_by=["p"]
     )
-    plan = tgt.filter(pred)._jdf.queryExecution().executedPlan().toString()
-    scan = next(line for line in plan.splitlines() if "FileScan" in line)
-    assert "PartitionFilters: [((p" in scan, scan
+    for n_aff in (5, 40):
+        assert len(_files(out)) == n  # one file per partition
+        batch = spark.range(n_aff).selectExpr(
+            "id * 7 AS id", f"concat('V{n_aff}_', id) AS v", "id * 7 AS p"
+        )
+        stats, read = files_read(
+            spark, lambda: merge_upsert(batch, out, keys=["id"], partition_by=["p"])
+        )
+        assert stats["affected_partitions"] == n_aff
+        assert read == n + n_aff, (n_aff, read)
+    got = {r.id: r.v for r in spark.read.parquet(out).collect()}
+    assert len(got) == n
+    assert got[7] == "V40_1" and got[273] == "V40_39" and got[1] == "v1"
 
 
 def test_wide_merge_thousand_partitions(spark, tmp_path):
     """A CDC batch touching ~1,000 partitions must not blow up Catalyst
-    analysis (the literal OR-of-ANDs predicate is thousands deep there);
-    above AFFECTED_LITERAL_MAX the rewrite-set slice switches to a
-    broadcast semi-join on the partition columns. Semantics must be
-    identical: updates land, untouched partitions keep their exact files."""
+    analysis: the rewrite-set slice takes its partition values from one
+    subquery, so the plan is the same size at any affected-set size (a
+    literal OR-of-ANDs predicate would be thousands deep here). Updates
+    land, untouched partitions keep their exact files."""
     out = str(tmp_path / "t")
     n = 1200
     seed = spark.range(n).selectExpr("id", "concat('v', id) AS v", "id AS p")
@@ -445,15 +455,15 @@ def test_completed_swap_leftover_backup_is_cleaned(spark, tmp_path):
 
 def test_null_partition_in_target_wide_path_merges(spark, tmp_path):
     """A TARGET holding a NULL partition (other writers can produce one)
-    must still merge on the wide (semi-join) path: the matched null-
-    partition row is rewritten, and the emptied __HIVE_DEFAULT_PARTITION__
-    directory is deleted."""
+    must still merge when the merge touches many partitions (40 here): the
+    matched null-partition row is rewritten, and the emptied
+    __HIVE_DEFAULT_PARTITION__ directory is deleted."""
     import os as _os
 
     from yelp_business_data_pipeline_spark.sources.writers import write_overwrite
 
     path = str(tmp_path / "t")
-    n = 40  # > AFFECTED_LITERAL_MAX forces the semi-join path
+    n = 40
     base = [(i, "old", str(i % 39)) for i in range(1, n)] + [(999, "old", None)]
     write_overwrite(
         spark.createDataFrame(base, ["id", "v", "p"]), path, partition_by=["p"]
@@ -545,3 +555,25 @@ def test_unpartitioned_merge_into_path_with_trailing_slash(spark, tmp_path):
     assert rows(slashed) == rows(plain) == [(1, "a"), (2, "B"), (3, "c")]
     assert sorted(os.listdir(tmp_path)) == ["plain", "tbl"]
     assert not any(d.startswith("__") for d in os.listdir(slashed))
+
+
+@pytest.mark.parametrize("partition_by", [["p"], None], ids=["partitioned", "unpartitioned"])
+def test_source_column_type_unlike_stored_is_rejected(spark, tmp_path, partition_by):
+    """A source column typed unlike the stored one raises before anything
+    is written. Otherwise a partitioned table gets DOUBLE files next to
+    DECIMAL ones and no longer reads, and an unpartitioned one silently
+    turns DOUBLE."""
+    from decimal import Decimal
+
+    out = str(tmp_path / "t")
+    stored = [(1, Decimal("1.50"), 1), (2, Decimal("2.25"), 2)]
+    merge_upsert(
+        spark.createDataFrame(stored, "id int, v decimal(10,2), p int"),
+        out, keys=["id"], partition_by=partition_by,
+    )
+    src = spark.createDataFrame([(1, 9.5, 1)], "id int, v double, p int")
+    with pytest.raises(ValueError, match=r"column 'v' is decimal\(10,2\) in .* but double"):
+        merge_upsert(src, out, keys=["id"], partition_by=partition_by)
+    back = spark.read.parquet(out)
+    assert back.schema["v"].dataType.simpleString() == "decimal(10,2)"
+    assert sorted((r.id, r.v, r.p) for r in back.collect()) == stored

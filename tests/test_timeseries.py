@@ -598,3 +598,36 @@ def test_ewma_state_carries_across_arrow_batches(spark):
             assert math.isclose(got[(k, float(t))], round(num / den, 6), abs_tol=2e-6), (k, t)
     finally:
         spark.conf.set(conf_key, old)
+
+
+def test_refresh_reads_only_its_partitions_stored_rows(spark, tmp_path):
+    """A one-row late refresh into an existing (group, day) partition reads
+    that partition's file for its stored rows, not the whole rollup: of the
+    files it reads, every one is read once by merge_upsert's matched-key
+    scan, and only the touched partition's file again for the stored rows
+    and again for the rewrite slice. An integer sum stays an integer."""
+    import os
+
+    from tests.files_read import files_read
+    from yelp_business_data_pipeline_spark.operators.timeseries import (
+        continuous_aggregate_update,
+    )
+
+    path = str(tmp_path / "rollup")
+    schema = "g string, t timestamp, v bigint"
+
+    def refresh(rows):
+        return continuous_aggregate_update(
+            spark.createDataFrame(rows, schema), path,
+            group_cols=["g"], ts_col="t", grain="day", value_col="v",
+        )
+
+    day = dt.datetime(2024, 1, 1, 1)
+    refresh([(f"g{g}", day + dt.timedelta(days=d), 1) for g in range(3) for d in range(20)])
+    n_files = sum(f.endswith(".parquet") for _r, _d, fs in os.walk(path) for f in fs)
+    assert n_files == 60
+    stats, read = files_read(spark, lambda: refresh([("g1", day + dt.timedelta(days=4, hours=2), 2)]))
+    assert stats["affected_partitions"] == 1
+    assert read == n_files + 2, read
+    got = {(r.g, r.bucket.day): (r.n_events, r.value_sum) for r in spark.read.parquet(path).collect()}
+    assert len(got) == 60 and got[("g1", 5)] == (2, 3) and got[("g2", 5)] == (1, 1)

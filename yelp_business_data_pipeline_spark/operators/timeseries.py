@@ -111,20 +111,41 @@ def gapfill_locf(
     return out
 
 
+def _bucket_rollup(
+    batch: DataFrame,
+    group_cols: list[str],
+    ts_col: str,
+    grain: str,
+    bucket_col: str,
+    *aggs: Column,
+) -> DataFrame:
+    """The delta of a rollup refresh: ``batch`` aggregated by ``aggs`` per
+    (group, bucket), with the ``bucket_date`` partition column the stored
+    rollups use. Rows with a NULL timestamp have no bucket and drop."""
+    return (
+        batch.filter(F.col(ts_col).isNotNull())
+        .groupBy(*group_cols, time_bucket(ts_col, grain).alias(bucket_col))
+        .agg(*aggs)
+        .withColumn("bucket_date", F.to_date(F.col(bucket_col)))
+    )
+
+
 def _stored_matches(
     delta: DataFrame, rollup_path: str, keys: list[str], pcols: list[str]
 ) -> DataFrame | None:
     """The stored rollup rows sharing a key with ``delta``, or None before
-    the first refresh. The partition columns are typed as ``delta`` types
-    them, not inferred from directory names (the typed read-back in
+    the first refresh. Only the partitions ``delta`` writes into are read:
+    a key (groups, bucket) fixes its partition (groups, bucket_date), so no
+    match lies outside them. The partition columns are typed as ``delta``
+    types them, not inferred from directory names (the typed read-back in
     ``sources/writers.py``'s module notes)."""
-    from ..sources.writers import _exists, _read_target
+    from ..sources.writers import _exists, _in_partitions, _read_target
 
     spark = delta.sparkSession
     if not _exists(spark, rollup_path):
         return None
     stored = _read_target(spark, rollup_path, {c: delta.schema[c].dataType for c in pcols})
-    return stored.join(delta.select(*keys), on=keys, how="left_semi")
+    return _in_partitions(stored, delta, pcols).join(delta.select(*keys), on=keys, how="left_semi")
 
 
 def continuous_aggregate_update(
@@ -142,9 +163,10 @@ def continuous_aggregate_update(
 
     1. roll the batch up to (group, bucket, n_events, value_sum) — one
        shuffle over BATCH rows only;
-    2. read the stored rollup's matching rows (key semi-join, column-pruned)
-       and combine additively (count + count, sum + sum with NULL algebra:
-       COALESCE to keep a NULL+NULL sum NULL but NULL+x = x);
+    2. read the stored rollup's matching rows (only the partitions the
+       delta writes into, then a key semi-join, column-pruned) and combine
+       additively (count + count, sum + sum in the sum's own type, with
+       NULL algebra: COALESCE to keep a NULL+NULL sum NULL but NULL+x = x);
     3. ``merge_upsert`` writes the combined rows back. The stored table
        partitions by (group, bucket DATE) — group alone would make one
        late event rewrite the group's entire bucket history; the date
@@ -166,21 +188,15 @@ def continuous_aggregate_update(
 
     Returns merge_upsert's stats dict.
     """
-    from pyspark.sql import functions as F
-
     from ..sources.writers import merge_upsert
 
     gcols = list(group_cols)
     keys = [*gcols, bucket_col]
     pcols = [*gcols, "bucket_date"]
-    delta = (
-        batch.filter(F.col(ts_col).isNotNull())
-        .groupBy(*gcols, time_bucket(ts_col, grain).alias(bucket_col))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(value_col).alias("value_sum"),
-        )
-        .withColumn("bucket_date", F.to_date(F.col(bucket_col)))
+    delta = _bucket_rollup(
+        batch, gcols, ts_col, grain, bucket_col,
+        F.count(F.lit(1)).alias("n_events"),
+        F.sum(value_col).alias("value_sum"),
     )
 
     stored = _stored_matches(delta, rollup_path, keys, pcols)
@@ -200,9 +216,11 @@ def continuous_aggregate_update(
                     F.col("value_sum").isNull() & F.col("_old_s").isNull(), F.lit(None)
                 )
                 .otherwise(
-                    F.coalesce(F.col("value_sum"), F.lit(0.0))
-                    + F.coalesce(F.col("_old_s"), F.lit(0.0))
+                    F.coalesce(F.col("value_sum"), F.lit(0))
+                    + F.coalesce(F.col("_old_s"), F.lit(0))
                 )
+                # an integer sum stays integer: merge_upsert rejects a type change
+                .cast(delta.schema["value_sum"].dataType)
                 .alias("value_sum"),
             )
         )
@@ -233,18 +251,14 @@ def incremental_distinct_rollup(
     single-pass sketch (mode promotion), never beyond sketch error. The
     stored sketches are read back by :func:`_stored_matches`.
     """
-    from pyspark.sql import functions as F
-
     from ..sources.writers import merge_upsert
 
     gcols = list(group_cols)
     keys = [*gcols, bucket_col]
     pcols = [*gcols, "bucket_date"]
-    delta = (
-        batch.filter(F.col(ts_col).isNotNull())
-        .groupBy(*gcols, time_bucket(ts_col, grain).alias(bucket_col))
-        .agg(F.hll_sketch_agg(id_col).alias("n_distinct_hll"))
-        .withColumn("bucket_date", F.to_date(F.col(bucket_col)))
+    delta = _bucket_rollup(
+        batch, gcols, ts_col, grain, bucket_col,
+        F.hll_sketch_agg(id_col).alias("n_distinct_hll"),
     )
 
     stored = _stored_matches(delta, rollup_path, keys, pcols)
@@ -294,20 +308,14 @@ def continuous_aggregate_update_exactly_once(
     refreshes per bucket; fold history periodically by re-aggregating the
     contribution table into a single refresh_id (same merge machinery).
     """
-    from pyspark.sql import functions as F
-
     from ..sources.writers import merge_upsert
 
     gcols = list(group_cols)
-    delta = (
-        batch.filter(F.col(ts_col).isNotNull())
-        .groupBy(*gcols, time_bucket(ts_col, grain).alias(bucket_col))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(value_col).alias("value_sum"),
-        )
-        .withColumn("refresh_id", F.lit(int(refresh_id)))
-        .withColumn("bucket_date", F.to_date(F.col(bucket_col)))
+    delta = _bucket_rollup(
+        batch, gcols, ts_col, grain, bucket_col,
+        F.count(F.lit(1)).alias("n_events"),
+        F.sum(value_col).alias("value_sum"),
+        F.lit(int(refresh_id)).alias("refresh_id"),
     )
     return merge_upsert(
         delta,
@@ -329,8 +337,6 @@ def read_continuous_aggregate(
     columns from, so they keep Spark's directory-name type inference:
     when every stored group looks numeric, string groups ``'01'`` and
     ``'1'`` both read back as int 1 and fold into one row."""
-    from pyspark.sql import functions as F
-
     gcols = list(group_cols)
     contrib = spark.read.parquet(rollup_path)
     return contrib.groupBy(*gcols, bucket_col).agg(

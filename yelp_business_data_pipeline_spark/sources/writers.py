@@ -56,6 +56,12 @@ paths):
   (SPARK-26188). Switching partition type inference off in the session
   conf would do the same, but every other read on the session during that
   window would lose inference too.
+- *Partition-scoped read.* ``_in_partitions`` (``merge_upsert``'s rewrite
+  slice, the rollups' stored rows) filters on ``array_contains`` of a scalar
+  subquery over the wanted partition values, NULL matching NULL. Spark puts
+  it in the scan's ``PartitionFilters`` and reads only those partitions'
+  files at any number of values; a null-safe join is not pruned, and a
+  literal ``IN`` list costs one JVM call per value to build.
 """
 
 from __future__ import annotations
@@ -63,13 +69,6 @@ from __future__ import annotations
 import datetime as _dt
 
 from pyspark.sql import DataFrame, Observation, SparkSession
-
-# Above this many affected partitions, merge_upsert switches its rewrite-set
-# predicate from a literal OR-of-ANDs (statically prunable, provable in
-# EXPLAIN) to a broadcast semi-join on the partition columns (dynamic
-# partition pruning): a thousands-deep boolean expression tree makes Catalyst
-# analysis itself the bottleneck long before execution.
-AFFECTED_LITERAL_MAX = 32
 
 #: Directory name Spark/Hive use for a NULL partition value.
 HIVE_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
@@ -138,6 +137,16 @@ def _read_target(spark: SparkSession, path: str, partition_types: dict) -> DataF
         ]
     )
     return spark.read.schema(schema).parquet(path)
+
+
+def _in_partitions(frame: DataFrame, values: DataFrame, pcols: list[str]) -> DataFrame:
+    """The rows of stored-table ``frame`` whose partition columns ``pcols``
+    appear in ``values`` (a frame of partition values), NULL matching NULL
+    (module notes)."""
+    from pyspark.sql import functions as F
+
+    wanted = values.select(F.collect_set(F.struct(*pcols))).scalar()
+    return frame.filter(F.array_contains(wanted, F.struct(*pcols)))
 
 
 #: staged-swap backup suffixes, one per swapping writer.
@@ -353,9 +362,11 @@ def merge_upsert(
        to the driver — small-by-contract (a merge batch touches few
        partitions; the list is partition VALUES, never rows).
     2. rewrite set = (target rows in affected partitions, minus matched keys
-       via null-safe anti-join) ∪ source. Unaffected partitions are never
-       read past their partition values nor rewritten — at 100 TB the cost
-       scales with the touched slice, not the table.
+       via null-safe anti-join) ∪ source. The slice is the partition-scoped
+       read of the module notes, one plan at any affected-set size: only the
+       affected partitions' files are read, and unaffected ones
+       are never rewritten — at 100 TB the cost is the key scan plus the
+       touched slice, not the table.
     3. dynamic partition overwrite writes exactly the partitions present in
        the rewrite set. Safe to read-and-overwrite in one job: dynamic mode
        deletes replaced partition files at COMMIT, after every scan task has
@@ -383,8 +394,6 @@ def merge_upsert(
     Returns ``{"created": bool, "affected_partitions": int,
     "emptied_partitions": int}``.
     """
-    from functools import reduce
-
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -397,9 +406,10 @@ def merge_upsert(
         fresh = (
             fresh.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
         )
-    # the source batch feeds four actions (validation, emptiness, key
-    # extraction, the rewrite union): persist once so an expensive caller
-    # lineage (a CDC batch unioned with stored rows) executes once
+    # the source batch feeds three actions (the checks, which also tell an
+    # empty batch; key extraction; the rewrite union): persist once so an
+    # expensive caller lineage (a CDC batch unioned with stored rows)
+    # executes once
     fresh = fresh.persist()
     try:
         return _merge_upsert_body(
@@ -421,27 +431,33 @@ def _merge_upsert_body(
     from functools import reduce
 
     from pyspark.sql import functions as F
+    from pyspark.sql import types as T
 
-    checks = fresh.select(*keys, *pcols).groupBy(*keys).agg(
-        F.count(F.lit(1)).alias("_n"),
-        *[F.max(F.col(c).isNull().cast("int")).alias(f"_null_{c}") for c in pcols],
+    # One collect checks the whole source: per key, its row count and a
+    # NULL flag per partition column, the worst key first (a duplicate,
+    # else a NULL partition value). No key at all is an empty batch.
+    worst = (
+        fresh.groupBy(*keys)
+        .agg(
+            F.count(F.lit(1)).alias("_n"),
+            *[F.max(F.col(c).isNull()).alias(f"_null_{c}") for c in pcols],
+        )
+        .orderBy(F.col("_n").desc(), *[F.col(f"_null_{c}").desc() for c in pcols])
+        .limit(1)
+        .collect()
     )
-    bad_cond = F.col("_n") > 1
-    for c in pcols:
-        bad_cond = bad_cond | (F.col(f"_null_{c}") == 1)
-    bad = checks.filter(bad_cond).limit(1).collect()
-    if bad:
-        if bad[0]["_n"] > 1:
-            raise ValueError(
-                f"merge_upsert: source has multiple rows for key "
-                f"{tuple(bad[0][k] for k in keys)}; pass dedup_order_by for latest-wins"
-            )
-        raise ValueError("merge_upsert: null partition values are not mergeable")
     # An empty batch merges nothing: no table creation, no partition scan,
     # no full rewrite of an unpartitioned target (streaming sinks routinely
     # deliver empty micro-batches on restart).
-    if fresh.isEmpty():
+    if not worst:
         return {"created": False, "affected_partitions": 0, "emptied_partitions": 0}
+    if worst[0]["_n"] > 1:
+        raise ValueError(
+            f"merge_upsert: source has multiple rows for key "
+            f"{tuple(worst[0][k] for k in keys)}; pass dedup_order_by for latest-wins"
+        )
+    if any(worst[0][f"_null_{c}"] for c in pcols):
+        raise ValueError("merge_upsert: null partition values are not mergeable")
 
     jvm = spark._jvm
     fs, _ = _filesystem(spark, path)
@@ -450,6 +466,15 @@ def _merge_upsert_body(
         return {"created": True, "affected_partitions": 0, "emptied_partitions": 0}
 
     tgt = _read_target(spark, path, {c: fresh.schema[c].dataType for c in pcols})
+    # A source column typed unlike the stored one would leave files of two
+    # types in one table (simpleString omits nullability, which may differ).
+    stored = {f.name: f.dataType.simpleString() for f in tgt.schema}
+    for f in fresh.schema:
+        have, got = stored.get(f.name), f.dataType.simpleString()
+        if have is not None and have != got:
+            raise ValueError(
+                f"merge_upsert: column {f.name!r} is {have} in {path} but {got} in the source"
+            )
     src_keys = fresh.select(*keys).dropDuplicates(keys).alias("_src")
 
     def _key_cond(left):
@@ -473,45 +498,12 @@ def _merge_upsert_body(
     )
     affected = {tuple(r[c] for c in pcols) for r in affected_rows}
 
-    def _part_slice(frame):
-        """Rows of ``frame`` in the affected partitions.
-
-        Small affected sets: a literal OR-of-ANDs predicate — statically
-        pushed to PartitionFilters (pinned in test_merge_upsert.py). Wide
-        sets (a CDC batch touching thousands of partitions): the literal
-        form is a thousands-deep expression tree that blows up Catalyst
-        analysis, so switch to a broadcast LEFT SEMI join on the partition
-        columns — Spark's dynamic partition pruning covers the file skip,
-        and the join predicate stays O(1) deep. SOURCE partition values
-        are validated non-null, but a TARGET written by other writers may
-        hold NULL partitions whose keys this merge matches — the semi-join
-        condition is null-safe so those rows are rewritten (a plain
-        equi-join would silently strand the matched old row as a
-        duplicate).
-        """
-        if len(affected) <= AFFECTED_LITERAL_MAX:
-            return frame.filter(
-                reduce(
-                    lambda a, b: a | b,
-                    [
-                        reduce(
-                            lambda a, b: a & b,
-                            [frame[c].eqNullSafe(F.lit(v)) for c, v in zip(pcols, t)],
-                        )
-                        for t in affected
-                    ],
-                )
-            )
-        aff_df = spark.createDataFrame(
-            [tuple(t) for t in sorted(affected, key=repr)], fresh.select(*pcols).schema
-        ).alias("_aff")
-        cond = reduce(
-            lambda a, b: a & b,
-            [frame[c].eqNullSafe(F.col(f"_aff.{c}")) for c in pcols],
-        )
-        return frame.join(F.broadcast(aff_df), on=cond, how="left_semi")
-
-    tgt_slice = _part_slice(tgt).alias("_tgt")
+    # typed as the source types them, but nullable: a target written by
+    # other writers may hold a NULL partition
+    values = spark.createDataFrame(
+        list(affected), T.StructType([T.StructField(c, fresh.schema[c].dataType) for c in pcols])
+    )
+    tgt_slice = _in_partitions(tgt, values, pcols).alias("_tgt")
     kept = tgt_slice.join(src_keys, on=_key_cond(tgt_slice), how="left_anti")
     out = kept.unionByName(fresh).persist()
     try:
